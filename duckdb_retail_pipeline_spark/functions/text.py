@@ -16,8 +16,6 @@ the dedup bottleneck is the shuffle, not the hash.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -148,11 +146,6 @@ def shingle_hashes28(shingles: Column | str) -> Column:
 # driver's sys.path), and each kernel object is created once per
 # process so repeated calls stay plan-canonicalization-equal (one
 # ArrowEvalPython evaluation per row however many consumers).
-# ``SPARK_GRAFT_HOF_TEXT=1`` forces the HOF kernels.
-
-
-def _use_arrow() -> bool:
-    return os.environ.get("SPARK_GRAFT_HOF_TEXT", "") != "1"
 
 
 def _build_minhash_kernel(num_hashes: int):
@@ -265,9 +258,8 @@ _arrow_simhash = _build_simhash_kernel()
 
 def minhash_from_hashes_hof(base: Column | str, num_hashes: int = 16) -> Column:
     """The HOF MinHash kernel (interpreted; kept for the bit-identity
-    tests and the ``SPARK_GRAFT_HOF_TEXT=1`` escape hatch — it is the
-    readable spec of the cross-engine contract the DuckDB oracle
-    twins pin)."""
+    tests — it is the readable spec of the cross-engine contract the
+    DuckDB oracle twins pin)."""
     base = _c(base)
     def perm(a: int, b: int):
         # NB: a plain closure, not default-arg binding — Spark counts
@@ -303,14 +295,12 @@ def minhash_signature_from_hashes(base: Column | str, num_hashes: int = 16) -> C
     the reason MINHASH_PRIME salts are sized for 28-bit bases), and
     NULL/empty semantics mirror ``array_min``'s (skip NULL elements;
     NULL/empty array → all-NULL signature)."""
-    if _use_arrow():
-        return _minhash_kernel(num_hashes)(_c(base))
-    return minhash_from_hashes_hof(base, num_hashes)
+    return _minhash_kernel(num_hashes)(_c(base))
 
 
 def simhash64_hof(toks: Column | str) -> Column:
-    """The HOF SimHash kernel (interpreted; bit-identity tests + the
-    ``SPARK_GRAFT_HOF_TEXT=1`` escape hatch)."""
+    """The HOF SimHash kernel (interpreted; kept for the bit-identity
+    tests)."""
     t = _c(toks)
     # For each of 60 bits: sum over tokens of (bit set ? +1 : -1);
     # bit b of token hash h = (h >> b) & 1. Expressed as one
@@ -353,9 +343,7 @@ def simhash64(toks: Column | str) -> Column:
     kernels agree bit-for-bit; NULL tokens vote −1 on every bit and
     a NULL/empty token array yields 0, mirroring the HOF
     NULL-propagation exactly (unit-tested)."""
-    if _use_arrow():
-        return _arrow_simhash(_c(toks))
-    return simhash64_hof(toks)
+    return _arrow_simhash(_c(toks))
 
 
 def quality_score(col: Column | str) -> Column:

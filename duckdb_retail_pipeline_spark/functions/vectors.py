@@ -28,9 +28,8 @@ construction:
           maps to NULL under Arrow (pyarrow from_pandas), which no
           registered dataset can produce (finite synthetic floats).
 
-``SPARK_GRAFT_HOF_DOT=1`` forces the HOF kernel (escape hatch +
-differential testing); ``dot_hof``/``norm_hof`` stay exported for
-the bit-identity tests.
+The Arrow kernel is the production path; ``dot_hof``/``norm_hof`` stay
+exported for the bit-identity tests.
 
 The algebraic lever is kernel-independent: batch scorers hoist the
 per-SIDE norms out of the pair loop with ``cosine_from_parts``
@@ -39,8 +38,6 @@ scan, value-identical.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -57,10 +54,6 @@ def _d(col: Column | str) -> Column:
 
 def _c(col: Column | str) -> Column:
     return col if isinstance(col, Column) else F.col(col)
-
-
-def _use_arrow() -> bool:
-    return os.environ.get("SPARK_GRAFT_HOF_DOT", "") != "1"
 
 
 # -- Arrow kernel ----------------------------------------------------------
@@ -199,8 +192,8 @@ def plane_dots(vec: Column | str, planes: list[list[float]]) -> Column:
 
 
 def dot_hof(a: Column | str, b: Column | str) -> Column:
-    """The HOF fold kernel (interpreted; kept for differential tests
-    and the ``SPARK_GRAFT_HOF_DOT=1`` escape hatch)."""
+    """The HOF fold kernel (interpreted; kept for the bit-identity
+    tests)."""
     prods = F.zip_with(_d(a), _d(b), lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -211,16 +204,12 @@ def norm_hof(a: Column | str) -> Column:
 
 def dot(a: Column | str, b: Column | str) -> Column:
     """Dot product of two equal-length numeric arrays."""
-    if _use_arrow():
-        return _arrow_dot(_c(a), _c(b))
-    return dot_hof(a, b)
+    return _arrow_dot(_c(a), _c(b))
 
 
 def norm(a: Column | str) -> Column:
     """L2 norm."""
-    if _use_arrow():
-        return F.sqrt(_arrow_self_dot(_c(a)))
-    return norm_hof(a)
+    return F.sqrt(_arrow_self_dot(_c(a)))
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
@@ -242,10 +231,7 @@ def cosine_from_parts(
 
 
 def l2_distance(a: Column | str, b: Column | str) -> Column:
-    if _use_arrow():
-        return F.sqrt(_arrow_l2sq(_c(a), _c(b)))
-    diffs = F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
+    return F.sqrt(_arrow_l2sq(_c(a), _c(b)))
 
 
 def rademacher_planes(n_planes: int, dim: int) -> list[list[float]]:

@@ -1,143 +1,96 @@
-"""Session-scoped dataset memoization.
+"""Session-scoped memoization: datasets, plan row counts and per-call-site
+persists.
 
-One shared implementation of the (application, dataset) get-or-build
-pattern used by the pipeline layer DAG and the dedup family — three
-hand-rolled copies of the key recipe had diverged (r6 review), and
-none invalidated on dataset change or unpersisted superseded entries.
+Three entry points share three private pieces:
 
-Key = (applicationId, abspath(sf_dir), tag) with a per-file (name,
-mtime, size) dataset signature. Including the signature means a
-dataset regenerated IN-SESSION
-under the same path (tools/scale_testdata.py, a re-seeded test
-fixture) rebuilds instead of silently serving the stale persisted
-result; the superseded entry's DataFrames are unpersisted so cached
-blocks don't pin executor memory for the application's lifetime.
-Driver testdata is read-only, so in normal rounds the mtime probe is
-one os.scandir per call and never invalidates.
+- ``_lock(key)``: one per-key lock registry. Same-key callers serialize
+  and share one build; different keys proceed concurrently.
+- ``_stat(uris)``: one ``(uri, mtime_ns, size)`` file signature. A set of
+  per-file entries (not a max mtime) catches deletions and
+  mtime-preserving swaps (mv / rsync -a / tar -x); nanoseconds catch a
+  same-second in-session regeneration.
+- ``_get_or_build(store, key, sig, build)``: one entry per key, served
+  while its signature holds and otherwise unpersisted and replaced, so a
+  store is bounded by its keys, not by the number of regenerations.
 
-At-scale note: every memo/persist staleness probe here is O(backing
-files) driver-side stats per call. Fine at thousands of part files
-(one scandir / restat burst, milliseconds); a deployment with
-hundreds of thousands of parts swaps the per-file signature for a
-table-format snapshot/version id (Delta/Iceberg metadata gives the
-same regeneration-invalidation for O(1) probes) — same contract,
-cheaper witness.
+``dataset_memo`` keys on (applicationId, dataset dir, tag) and signs the
+dir's parquet files; ``memoized_count`` keys on (applicationId, canonical
+plan) and signs the plan's input files. A stopped session changes
+applicationId, so nothing serves across applications.
+
+The locks are in-process (threading) on purpose. Every key carries the
+applicationId and every value is a process-local object (a DataFrame, a
+cache handle), so two processes never share an entry and there is nothing
+for a cross-process lock to protect. The cross-process shared state is the
+warehouse directory, whose single-writer contract lives at
+``operators/scale.py::write_bucketed``.
+
+Every staleness probe is O(backing files) driver-side stats per call:
+milliseconds at thousands of part files. A deployment with hundreds of
+thousands of parts would sign with a table-format snapshot id instead
+(Delta/Iceberg metadata): same contract, O(1) witness.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Callable
+import warnings
+from collections.abc import Callable, Hashable, Iterable
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-# (appId, path, tag) -> (dataset_signature, value)
+# (appId, abspath(sf_dir), tag) -> (dataset signature, value)
 _MEMO: dict[tuple[str, str, str], tuple[frozenset, Any]] = {}
+# (appId, semanticHash) -> (input signature, row count)
+_COUNT_MEMO: dict[tuple[str, int], tuple[frozenset, int]] = {}
 
-# Concurrency scope (r10 verdict #5c): these locks are IN-PROCESS
-# (threading) by design, and that is sufficient — every memo keys on
-# the session's applicationId and stores process-local Python
-# objects (DataFrames, persisted cache handles), none of which can
-# be shared across processes, so there is nothing for a cross-
-# process lock to protect. Two PROCESSES never contend here: each
-# builds its own memo entries against its own Spark application.
-# The cross-process shared state in this repo is the warehouse
-# DIRECTORY (catalog tables), whose single-writer contract lives at
-# operators/scale.py::write_bucketed — the in-memory session catalog
-# has no cross-process coordination, pinned in
-# tests/test_advanced.py::test_orphan_reclaim_is_blind_across_processes.
-#
-# Thread concurrency (r9 verdict #5a probe): SparkContext is
-# thread-safe and a driver legitimately runs queries from a thread
-# pool, but the module-level dicts here were unlocked
-# check-then-build — two
-# threads racing the same dataset_memo key BOTH ran build(); the
-# loser's persisted frame stayed pinned in the SQL cache forever,
-# served to nobody (reproduced in
-# tests/test_operators.py::test_dataset_memo_concurrent_threads_build_once).
-# dataset_memo and memoized_count take PER-KEY locks (same-key
-# callers serialize and share one build/count; different keys
-# proceed concurrently); rotating_persist takes a PER-SLOT lock —
-# its critical section includes sameSemantics (JVM canonicalization)
-# and the _restat O(backing files) stat burst, so one global lock
-# would convoy unrelated operators' slot maintenance in exactly the
-# thread-pool scenario this exists for. The slot-lock registry keys
-# by id(slot) but holds a STRONG reference to the slot itself: a
-# live entry keeps its list alive, so CPython can never reuse that
-# id for a different list (the r7 ADVICE id-reuse hazard); slots are
-# module-level one-element lists by contract, so the registry is
-# bounded by call sites.
 _LOCKS_GUARD = threading.Lock()
-_KEY_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
-_COUNT_LOCKS: dict[tuple[str, int], threading.Lock] = {}
-_SLOT_LOCKS: dict[int, tuple[list, threading.Lock]] = {}
-# registry size that triggers an eviction sweep of empty-slot
-# entries. Production slots are module-level constants (a few dozen
-# call sites) and never evict; the sweep exists for dynamically
-# created slots (tests, exploratory sessions) whose strong refs
-# would otherwise accumulate for the process lifetime — a list
-# cannot be weak-referenced, so eviction is the only GC path.
-_SLOT_LOCKS_SWEEP_AT = 64
-
-
-def _acquire_slot_lock(slot: list) -> threading.Lock:
-    """Return the ACQUIRED per-slot lock, revalidating after the
-    acquire: the eviction sweep may drop an entry between a racer's
-    lookup and its acquire, and two threads holding different lock
-    objects for one slot would reintroduce the interleave this lock
-    exists to prevent — on a stale entry, release and retry. Only
-    entries whose slot is EMPTY and whose lock is unheld are swept,
-    so production occupants are never touched."""
-    while True:
-        with _LOCKS_GUARD:
-            if len(_SLOT_LOCKS) > _SLOT_LOCKS_SWEEP_AT:
-                for k in [
-                    k
-                    for k, (s, lk) in _SLOT_LOCKS.items()
-                    if not s and not lk.locked()
-                ]:
-                    del _SLOT_LOCKS[k]
-            ent = _SLOT_LOCKS.get(id(slot))
-            if ent is None or ent[0] is not slot:
-                ent = (slot, threading.Lock())
-                _SLOT_LOCKS[id(slot)] = ent
-        lock = ent[1]
-        lock.acquire()
-        with _LOCKS_GUARD:
-            cur = _SLOT_LOCKS.get(id(slot))
-            if cur is not None and cur[0] is slot and cur[1] is lock:
-                return lock
-        lock.release()
-
-# (appId, semanticHash) -> (input signature, row count) — the
-# signature lives in the VALUE, not the key, so an in-session dataset
-# regeneration REPLACES the entry instead of minting a new key beside
-# the stale one (r8 ADVICE: the signature-in-key form grew without
-# bound, one dead entry per regeneration); same replace-per-key shape
-# as _MEMO
-_COUNT_MEMO: dict[tuple[str, int], tuple[frozenset | None, int]] = {}
-
+_LOCKS: dict[Hashable, threading.Lock] = {}
 _WARNED_REMOTE = False
 
 
-def _mtime_signature(sf_dir: str) -> frozenset:
-    """Per-file (name, mtime_ns, size) set of the dataset's parquet
-    files — a max-mtime scalar would miss deletions and
-    mtime-preserving swaps (mv / rsync -a / tar -x of a pre-built
-    dir), serving stale persisted frames. ``table.parquet`` entries
-    that are DIRECTORIES (the partitioned layout Spark writes at
-    scale) are recursed one level so a part-file rewrite changes the
-    signature — a directory's own mtime only tracks entry add/remove
-    — and ``st_mtime_ns`` (not float seconds) catches a same-second
-    in-session regeneration (r6 ADVICE)."""
+def _lock(key: Hashable) -> threading.Lock:
+    """The lock for ``key``, created on first use. A ``rotating_persist``
+    slot is keyed by ``("slot", id(slot))``: the caller keeps the slot alive
+    for the whole critical section, so two live slots never share a key,
+    and a dead slot's reused id at most shares a lock nobody holds."""
+    with _LOCKS_GUARD:
+        return _LOCKS.setdefault(key, threading.Lock())
+
+
+def _stat(uris: Iterable[str]) -> frozenset:
+    """``(uri, mtime_ns, size)`` per uri; ``(uri, -1, -1)`` for a file that
+    cannot be stat-ed (vanished, or remote). A remote uri is only compared
+    by identity, which cannot see a rewrite in place: warned once per
+    process."""
+    global _WARNED_REMOTE
     sig = []
+    for uri in uris:
+        path = unquote(urlparse(uri).path) if uri.startswith("file:") else uri
+        try:
+            st = os.stat(path)
+            sig.append((uri, st.st_mtime_ns, st.st_size))
+        except OSError:
+            sig.append((uri, -1, -1))
+            if "://" in path and not _WARNED_REMOTE:
+                _WARNED_REMOTE = True
+                warnings.warn(
+                    "memo: some plan input files are not locally stat-able "
+                    "(remote URIs); staleness invalidation degrades to "
+                    "uri-identity for those entries",
+                    stacklevel=4,
+                )
+    return frozenset(sig)
 
-    def _add(prefix: str, entry: os.DirEntry) -> None:
-        st = entry.stat()
-        sig.append((prefix + entry.name, st.st_mtime_ns, st.st_size))
 
+def _dir_signature(sf_dir: str) -> frozenset:
+    """Signature of the dataset's ``*.parquet`` files. A ``*.parquet``
+    DIRECTORY (Spark's partitioned layout) is listed one level down: its
+    own mtime tracks entry add/remove only, not a part-file rewrite."""
+    paths = []
     try:
         with os.scandir(sf_dir) as it:
             for entry in it:
@@ -145,13 +98,24 @@ def _mtime_signature(sf_dir: str) -> frozenset:
                     continue
                 if entry.is_dir():
                     with os.scandir(entry.path) as inner:
-                        for sub in inner:
-                            _add(entry.name + "/", sub)
+                        paths.extend(sub.path for sub in inner)
                 else:
-                    _add("", entry)
+                    paths.append(entry.path)
     except OSError:
         pass
-    return frozenset(sig)
+    return _stat(paths)
+
+
+def _input_signature(df: DataFrame) -> frozenset | None:
+    """Signature of every file backing ``df``'s plan. A file-source
+    relation canonicalizes on its root path only, so plan equality alone
+    cannot see an in-session regeneration. None when the plan exposes no
+    input files (pure-synthetic frames, or a plan over a cached frame)."""
+    try:
+        files = df.inputFiles()
+    except Exception:  # noqa: BLE001 — non-file plans
+        return None
+    return _stat(files) if files else None
 
 
 def _unpersist(value: Any) -> None:
@@ -164,120 +128,53 @@ def _unpersist(value: Any) -> None:
                 pass
 
 
-def _input_signature(df: DataFrame) -> frozenset | None:
-    """(uri, mtime_ns, size) for every file backing ``df``'s plan —
-    ``sameSemantics`` compares canonical plans, and a file-source
-    relation canonicalizes on its root PATH only, so a dataset
-    regenerated in-session under the same path still compares equal
-    to the stale occupant's plan. Stat-ing the plan's input files
-    closes that hole (the same invalidation ``dataset_memo`` does,
-    derived from the plan instead of a caller-supplied dir). Files
-    that cannot be stat-ed locally (remote URIs) contribute their
-    uri alone — remote rewrites are not detectable this way, same as
-    before. Returns None when the plan exposes no input files
-    (pure-synthetic frames: nothing on disk can go stale)."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file plans
-        return None
-    if not files:
-        return None
-    sig = []
-    degraded = False
-    for uri in files:
-        path = uri
-        if uri.startswith("file:"):
-            from urllib.parse import unquote, urlparse
-
-            path = unquote(urlparse(uri).path)
-        try:
-            st = os.stat(path)
-            sig.append((uri, st.st_mtime_ns, st.st_size))
-        except OSError:
-            sig.append((uri, -1, -1))
-            degraded = True
-    global _WARNED_REMOTE
-    if degraded and not _WARNED_REMOTE:
-        # say it once per process (r7 ADVICE): uri-only entries
-        # cannot detect a remote rewrite-in-place
-        _WARNED_REMOTE = True
-        import warnings
-
-        warnings.warn(
-            "memo: some plan input files are not locally stat-able "
-            "(remote URIs); staleness invalidation degrades to "
-            "uri-identity for those entries",
-            stacklevel=3,
-        )
-    return frozenset(sig)
+def _get_or_build(
+    store: dict, key: Hashable, sig: frozenset, build: Callable[[], Any]
+) -> Any:
+    """Serve ``store[key]`` while its signature equals ``sig``; otherwise
+    unpersist it and store ``build()`` under ``sig``. A failed build leaves
+    no entry."""
+    with _lock(key):
+        hit = store.get(key)
+        if hit is not None:
+            if hit[0] == sig:
+                return hit[1]
+            del store[key]
+            _unpersist(hit[1])
+        value = build()
+        store[key] = (sig, value)
+        return value
 
 
 def rotating_persist(df: DataFrame, slot: list) -> DataFrame:
-    """Persist ``df`` with a one-entry rotation — for operators whose
-    intermediate feeds MULTIPLE consumers in one plan (Spark does
-    not dedupe common subplans, so the unpersisted form evaluates
-    the expensive upstream twice), while SQL-cache entries are never
-    GC-cleaned: each call site keeps at most ONE pinned entry however
-    often bench/pytest re-invoke it. Pass a module-level one-element
-    list as ``slot``. A bare per-call ``.persist()`` instead LEAKS one
-    corpus-sized cache entry per invocation — at the 100× decade,
-    bench's four passes over the MinHash signature table pinned ~4
-    copies and OOM-failed the timed passes (r7).
+    """Persist ``df`` with a one-entry rotation per call site. For an
+    intermediate that feeds several consumers in one plan (Spark does not
+    dedupe common subplans), while SQL-cache entries are never GC-cleaned:
+    a bare per-call ``.persist()`` pins one corpus-sized entry per
+    invocation. Pass a module-level list as ``slot``; it holds at most one
+    ``(occupant, input_signature)`` pair.
 
-    A repeat invocation over the same dataset builds a plan that is
-    semantically EQUAL to the occupant's — return the occupant
-    itself (its materialized cache serves the call: one
-    materialization, every later pass a cache hit; r6 left each call
-    evict-then-persist, so bench's three timed passes re-materialized
-    the frame three times and billed the churn to the operator). A
-    genuinely different plan (new dataset / changed query) evicts
-    the occupant FIRST: persist-then-unpersist on a canonically
-    equal plan registers a no-op and then DROPS the shared entry
-    (measured: x44 repeats regressed to the tokenize-twice cost).
+    The occupant is returned as is when it belongs to the caller's session
+    (a stopped session's cache is gone), its plan is semantically equal to
+    ``df``'s, and its input files are unchanged. Otherwise the occupant is
+    evicted BEFORE ``df`` is persisted: persisting a canonically equal plan
+    registers a no-op, and unpersisting the old one afterwards would drop
+    the shared entry.
 
-    The fast path requires three proofs, not just plan equality:
-    the occupant belongs to the CALLER's session (a plan-only
-    compare can match an occupant whose session was stopped — its
-    cache is gone and any action on it throws), the canonical plans
-    are equal, and the occupant's input files are byte-for-byte the
-    caller's (file-source relations canonicalize on root path only,
-    so an in-session dataset regeneration under the same path would
-    otherwise be served the STALE materialized corpus — the exact
-    invalidation ``dataset_memo`` guards with its mtime signature).
-
-    The slot element is a ``(df, input_signature)`` pair: keeping
-    the signature WITH the occupant (instead of a module dict keyed
-    by ``id(slot)``) means it lives exactly as long as the occupant
-    — no leak for garbage-collected slots, no CPython id-reuse
-    associating a stale signature with a new list (r7 ADVICE). The
-    r10 per-slot LOCK registry is the one deliberate exception to
-    that rule: lists cannot be weak-referenced, so it holds a strong
-    reference per slot — which also makes id-reuse impossible for
-    live entries — and sweeps empty-slot/unheld entries past a size
-    threshold so dynamically created slots cannot accumulate for the
-    process lifetime (``_acquire_slot_lock``).
-
-    Staleness is validated by RE-STAT-ing the occupant's own stored
-    uris, never by listing the fresh plan's input files: once the
-    occupant is cached, a semantically-equal fresh plan's
-    ``inputFiles()`` returns [] (Spark substitutes the cached
-    relation), so the fresh-side listing compared unequal on every
-    warm call and the slot silently CHURNED — pop + unpersist +
-    re-persist + full re-materialization per pass, measured on the
-    x87 count tables (r8; the probe: fresh plan inputFiles [] while
-    the occupant's own inputFiles still returns the parquet). An
-    in-session regeneration under the same path still rotates: the
-    stored uris' mtime_ns/size change (overwrite) or the stat fails
-    (part files renamed), either of which mismatches."""
-    lock = _acquire_slot_lock(slot)
-    try:
+    The occupant re-stats its OWN stored uris. Once it is cached, a
+    semantically equal fresh plan is cache-substituted and its
+    ``inputFiles()`` returns [], so a fresh-side listing would never match
+    and the slot would re-materialize on every call. An in-session
+    regeneration still rotates: a stored file's mtime/size changes or its
+    stat fails."""
+    with _lock(("slot", id(slot))):
         if slot:
             occupant, occ_sig = slot[0]
             try:
                 if (
                     occupant.sparkSession is df.sparkSession
                     and occupant.sameSemantics(df)
-                    and occ_sig == _restat(occ_sig)
+                    and (occ_sig is None or occ_sig == _stat(u for u, _, _ in occ_sig))
                 ):
                     return occupant
             except Exception:  # noqa: BLE001 — fall through to rotation
@@ -290,80 +187,24 @@ def rotating_persist(df: DataFrame, slot: list) -> DataFrame:
         df = df.persist()
         slot.append((df, sig))
         return df
-    finally:
-        lock.release()
-
-
-def _restat(sig: frozenset | None) -> frozenset | None:
-    """Recompute a stored input signature by re-stat-ing its own
-    uris: equal iff every backing file still has the recorded
-    mtime_ns/size (and no recorded file vanished). ``None`` (pure-
-    synthetic or degraded plans) validates as None — plan equality
-    is then the only proof, as before."""
-    if sig is None:
-        return None
-    out = []
-    for uri, _mt, _sz in sig:
-        path = uri
-        if uri.startswith("file:"):
-            from urllib.parse import unquote, urlparse
-
-            path = unquote(urlparse(uri).path)
-        try:
-            st = os.stat(path)
-            out.append((uri, st.st_mtime_ns, st.st_size))
-        except OSError:
-            out.append((uri, -1, -1))
-    return frozenset(out)
 
 
 def memoized_count(df: DataFrame) -> int:
-    """``df.count()`` memoized per (session, canonical plan,
-    input-file signature) — for runtime-statistics probes (the dedup
-    auto-mode corpus-size resolution) whose input is an
-    already-persisted frame: without the memo the probe re-scans the
-    whole cached table on EVERY invocation, billing a corpus-sized
-    job to each bench pass (r7 verdict #2 measured x07 2.2× slower
-    at sf0.1 from exactly this class of constant). The input-file
-    signature invalidates on in-session dataset regeneration the
-    same way ``rotating_persist``'s fast path does; a stopped
-    session changes applicationId, so entries never serve across
-    sessions. A signature mismatch REPLACES the entry (the memo is
-    bounded by the number of distinct plans per session, not by the
-    number of regenerations — r8 ADVICE).
+    """``df.count()`` memoized per (session, canonical plan), invalidated
+    when the plan's input files change. For runtime-statistics probes over
+    an already-persisted frame (dedup's auto-mode corpus size), which
+    would otherwise re-scan the cached table on every invocation.
 
-    A plan with NO provable input signature is never served from the
-    memo (r9 probe, predicted by the r8 verdict #6: a plan built over
-    a CACHED occupant gets cache-substituted, its ``inputFiles()``
-    returns [], and two such plans across an in-session dataset
-    regeneration + rotation are semantically equal with None == None
-    signatures — the memo served the STALE count while the plan
-    computed the new data; reproduced in
-    tests/test_operators.py::test_memoized_count_matches_plan_under_cache_substitution).
-    Callers that want the memo pass the persisted occupant itself —
-    its own ``inputFiles()`` still names the backing parquet — which
-    is what the one production consumer (dedup auto-mode) does."""
+    A plan with no input signature is never served: a plan built over a
+    cached occupant is cache-substituted, its ``inputFiles()`` is [], and
+    two such plans across a regeneration compare equal while computing
+    different data. Callers that want the memo pass the persisted occupant
+    itself, whose own ``inputFiles()`` still names the backing files."""
     sig = _input_signature(df)
     if sig is None:
         return df.count()
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-    )
-    # per-key lock, same rationale as dataset_memo: unlocked
-    # check-then-act let two threads racing one key each run the
-    # corpus-sized count() — the duplicated full scan this memo
-    # exists to eliminate (r10 review); same-key racers now wait for
-    # one count and read it from the memo
-    with _LOCKS_GUARD:
-        klock = _COUNT_LOCKS.setdefault(key, threading.Lock())
-    with klock:
-        hit = _COUNT_MEMO.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-        n = df.count()
-        _COUNT_MEMO[key] = (sig, n)
-        return n
+    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+    return _get_or_build(_COUNT_MEMO, key, sig, df.count)
 
 
 def dataset_memo(
@@ -374,21 +215,6 @@ def dataset_memo(
 ) -> Any:
     """Get-or-build ``build()`` memoized per (session, dataset, tag),
     invalidated when the dataset's parquet files change on disk."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        tag,
-    )
-    with _LOCKS_GUARD:
-        klock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with klock:
-        sig = _mtime_signature(os.path.abspath(sf_dir))
-        hit = _MEMO.get(key)
-        if hit is not None:
-            old_sig, value = hit
-            if old_sig == sig:
-                return value
-            _unpersist(value)
-        value = build()
-        _MEMO[key] = (sig, value)
-        return value
+    path = os.path.abspath(sf_dir)
+    key = (spark.sparkContext.applicationId, path, tag)
+    return _get_or_build(_MEMO, key, _dir_signature(path), build)

@@ -111,6 +111,17 @@ def _conf_bytes(value: str) -> int:
     return int(s[:i]) * (_SIZE_SUFFIXES[suffix] if suffix else 1)
 
 
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate for ``df``'s optimized plan — the
+    statistic it sizes broadcast joins with. Reads the PRIVATE py4j
+    surface ``optimizedPlan().stats().sizeInBytes()`` (pinned by
+    test_spread_size_probe_internal_api_present); py4j maps the
+    scala BigInt to int in range and hands back a JavaObject past
+    2^63, which ``str()`` covers."""
+    raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return raw if isinstance(raw, int) else int(str(raw))
+
+
 def _scan_has_row_groups(df: DataFrame, need: int) -> bool:
     """True iff ``df``'s backing parquet files provably carry >=
     ``need`` row groups — the scan's REAL split granularity. The
@@ -184,10 +195,7 @@ def _spread(df: DataFrame, key: str, heavy: bool = False) -> DataFrame:
     warns once per process instead of failing silently."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j maps scala.math.BigInt to int for in-range values but
-        # hands back a JavaObject past 2^63 — str() covers both
-        size = raw if isinstance(raw, int) else int(str(raw))
+        size = _plan_bytes(df)
         if size < _SPREAD_MIN_INPUT_BYTES:
             if (
                 heavy
@@ -329,7 +337,7 @@ def minhash_lsh_pairs(
     only shuffle that scales with corpus size. Exact Jaccard then
     filters false positives, so output = true near-dups ∩ LSH recall.
 
-    Three value-identical verification strategies (same pairs, same
+    Two value-identical verification strategies (same pairs, same
     jaccard — differential-tested); ``verify="auto"`` (default) picks
     by measured corpus size — the signature table is persisted before
     the choice, so the count is a cache scan the query needs anyway.
@@ -338,17 +346,16 @@ def minhash_lsh_pairs(
     _pair_dedup groupBy-max terminal), but under a duplicated id
     carrying DIFFERENT texts, pairs mode's per-id shingle re-join
     scores every payload combination of a candidate (id_a, id_b)
-    while bucket/group score only band-colliding combinations, so
+    while group scores only band-colliding combinations, so
     the per-pair max can differ ACROSS modes. Canonicalize ids
     upstream (exact_dedup's keep_id, or x86's canonical selection)
     before relying on cross-mode interchangeability on dirty ids.
     Warm medians, aug corpus (~10% near-dup + replication families):
-    5.5k docs → pairs 1.4 s / bucket 4.5 / group 5.1 (both
-    array-shuffling modes pay the 8-band × 2-side shingle payload
-    twice — a constant ~3× tax that only amortizes when candidate
-    blowup threatens); 55k → group 6.9 / bucket 8.2; 550k (~110-copy
-    families) → group 114 s cold / bucket 1140 / pairs dead on spill
-    disk (its per-PAIR array re-join goes quadratic under
+    5.5k docs → pairs 1.4 s / group 5.1 (group pays the 8-band ×
+    2-side shingle payload twice — a constant ~3× tax that only
+    amortizes when candidate blowup threatens); 55k → group 6.9;
+    550k (~110-copy families) → group 114 s cold / pairs dead on
+    spill disk (its per-PAIR array re-join goes quadratic under
     replication families). auto switches pairs → group at 30k docs:
     below the crossover the candidate set is small enough that even
     a pathological all-dup corpus re-joins ≤ corpus² arrays, and
@@ -356,18 +363,6 @@ def minhash_lsh_pairs(
     array materialization is the only mode that survives the decade
     measurements.
 
-    ``verify="bucket"`` (the JVM-only scale path): shingle arrays ride
-      the banding shuffle (once per band per doc — LINEAR in corpus
-      size), candidate pairs stream through jaccard+filter INSIDE the
-      bucket join's stage, and only surviving (id_a, id_b, jaccard)
-      rows reach the dedup shuffle. Candidate count never touches a
-      shuffle or a sort. This is what survives duplicate-heavy
-      corpora: at the 100× grow decade (550k docs in ~110-copy
-      families) buckets reach ~2,100 docs and the candidate join
-      emits ~1.2B rows — as in-stage streamed rows that is ~40 s of
-      jaccard CPU on 32 cores, while the pair-materializing
-      alternative shuffled ~400 GB of shingle arrays and died on
-      spill disk (measured, r7).
     ``verify="pairs"``: dedup candidate ids first, then re-join both
       documents' shingle arrays per pair. Each candidate's arrays
       cross the wire once per PAIR — cheaper only when candidates are
@@ -375,20 +370,23 @@ def minhash_lsh_pairs(
       shape that blows up quadratically when they are not.
     ``verify="group"``: bucket-grouped Arrow verification — groupBy
       (band, key) → applyInPandas pairwise verify with per-doc
-      frozensets. Same linear shuffle as ``bucket`` (each doc's
-      arrays cross once per band), but each bucket's arrays
-      materialize ONCE instead of once per candidate join row —
-      ``bucket``'s remaining 100×-decade constant was the ~1.2B
-      joined rows × ~8 KB of shingle payload the join assembles
-      before the gate filters them. Jaccard parity is exact: same
-      integer-count division (same IEEE operands), and the 4-decimal
-      round uses the shortest-repr HALF_UP convention that equals
-      Spark's ``round(double, 4)`` (conventions #10; differentially
-      tested against both other modes).
+      frozensets. Each doc's arrays cross the banding shuffle once
+      per band (LINEAR in corpus size) and each bucket's arrays
+      materialize ONCE, so candidate pairs never touch a shuffle. At
+      the 100× decade (550k docs in ~110-copy families) buckets
+      reach ~2,100 docs; the pair-materializing alternative shuffled
+      ~400 GB of shingle arrays and died on spill disk (r7). Only
+      the first colliding band of a pair verifies it (each doc
+      carries its full per-band key list), so jaccard runs once per
+      candidate pair. Jaccard parity is exact: same integer-count
+      division (same IEEE operands), and the 4-decimal round uses the
+      shortest-repr HALF_UP convention that equals Spark's
+      ``round(double, 4)`` (conventions #10; differentially tested
+      against pairs mode).
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
-    if verify not in ("auto", "bucket", "pairs", "group"):
+    if verify not in ("auto", "pairs", "group"):
         raise ValueError(f"unknown verify mode {verify!r}")
     rows_per_band = num_hashes // bands
 
@@ -409,18 +407,17 @@ def minhash_lsh_pairs(
     if verify == "auto":
         # the measured crossover (docstring): below ~30k docs the
         # candidate re-join is cheap and pairs wins outright (1.4 s
-        # vs 4.5/5.1 at 5.5k — the array-shuffling modes pay their
-        # 8-band × 2-side payload constant regardless of candidate
-        # count); at scale only group survives (114 s vs bucket 1140
-        # vs pairs dead at 550k). The count is memoized per
-        # (session, plan, input files) — unmemoized it re-scanned
-        # the whole persisted signature table on every invocation,
-        # billing a corpus-sized job to each bench pass (r7 verdict
-        # #2: x07 2.2× at sf0.1).
+        # vs 5.1 at 5.5k — group pays its 8-band × 2-side payload
+        # constant regardless of candidate count); at scale only
+        # group survives (114 s vs pairs dead at 550k). The count is
+        # memoized per (session, plan, input files) — unmemoized it
+        # re-scanned the whole persisted signature table on every
+        # invocation, billing a corpus-sized job to each bench pass
+        # (r7 verdict #2: x07 2.2× at sf0.1).
         verify = "group" if memoized_count(base) >= 30_000 else "pairs"
 
     # Banding frame carries ids only; the verify mode decides whether
-    # shingle arrays enter the banding shuffle (bucket mode: linear,
+    # shingle arrays enter the banding shuffle (group mode: linear,
     # once per band per doc) or are re-joined per candidate pair
     # (pairs mode: quadratic under duplicate-heavy data).
     banded = base.select(
@@ -438,11 +435,10 @@ def minhash_lsh_pairs(
         ).alias("bk"),
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
-    if verify in ("group", "bucket"):
-        # both array-shuffling modes carry each doc's shingles plus
-        # its full per-band key list (the first-colliding-band gate's
-        # input) through the banding shuffle — built ONCE here so the
-        # two gates cannot silently diverge
+    if verify == "group":
+        # each doc carries its shingles plus its full per-band key list
+        # (the first-colliding-band gate's input) through the banding
+        # shuffle
         bkeys = F.array(
             *[
                 F.slice("sig", i * rows_per_band + 1, rows_per_band)
@@ -452,8 +448,6 @@ def minhash_lsh_pairs(
         with_sh = banded.join(
             base.select(id_col, "sh", bkeys.alias("bkeys")), id_col
         )
-
-    if verify == "group":
         id_type = base.schema[id_col].dataType.simpleString()
         thr = float(threshold)
 
@@ -481,8 +475,8 @@ def minhash_lsh_pairs(
                 si, bi, idi = shs[i], bks[i], ids[i]
                 for j in range(i + 1, n):
                     if ids[j] == idi:
-                        # strict id_a < id_b parity with the JVM
-                        # modes (a duplicated id never self-pairs)
+                        # strict id_a < id_b parity with pairs
+                        # mode (a duplicated id never self-pairs)
                         continue
                     # first-colliding-band gate: verify only where no
                     # earlier band's keys already matched
@@ -515,53 +509,6 @@ def minhash_lsh_pairs(
                 _verify_bucket,
                 schema=f"id_a {id_type}, id_b {id_type}, jaccard double",
             ),
-            "jaccard",
-        )
-
-    if verify == "bucket":
-        # arrays through the banding shuffle (once per band per doc);
-        # jaccard + threshold run in the join's own stage, so the
-        # quadratic candidate stream is never shuffled or sorted —
-        # only true near-dup pairs reach the final dedup exchange.
-        # Each side also carries its full per-band key list (16
-        # bigints): a true near-dup pair collides in ~every band, so
-        # verifying per bucket would run jaccard ~bands× per pair
-        # (measured 1.2B evals at the 100× decade); gating on "this
-        # is the pair's FIRST colliding band" (no band j < band has
-        # equal keys — checkable locally from the two key lists)
-        # runs the expensive jaccard exactly once per candidate pair,
-        # like pairs-mode, while keeping the no-pair-shuffle shape.
-        a = with_sh.select(
-            F.col(id_col).alias("id_a"),
-            "band",
-            "key",
-            F.col("sh").alias("sh_a"),
-            F.col("bkeys").alias("bk_a"),
-        )
-        b = with_sh.select(
-            F.col(id_col).alias("id_b"),
-            "band",
-            "key",
-            F.col("sh").alias("sh_b"),
-            F.col("bkeys").alias("bk_b"),
-        )
-        first_band = F.when(F.col("band") == 0, F.lit(True)).otherwise(
-            # sequence(0, band−1) is safe here: band ≥ 1 on this branch
-            # (sequence DESCENDS for an empty range — the band=0 guard)
-            F.forall(
-                F.sequence(F.lit(0), F.col("band") - 1),
-                lambda j: ~F.element_at("bk_a", j + 1).eqNullSafe(
-                    F.element_at("bk_b", j + 1)
-                ),
-            )
-        )
-        return _pair_dedup(
-            a.join(b, ["band", "key"], "inner")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(first_band)
-            .withColumn("jaccard", F.round(T.jaccard("sh_a", "sh_b"), 4))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"),
             "jaccard",
         )
 

@@ -45,8 +45,6 @@ from duckdb_retail_pipeline_spark.queries import analytics  # noqa: E402,F401
 # (the q25/x13 value-identical precedent).
 # Rule 3, oldest-green re-entry (49): the full r11-green block,
 # the recount's owed list verbatim.
-# Rule 3, oldest-green re-entry (50): the full r10-green block,
-# last driver rows r10 — the recount's owed list verbatim.
 # 0 + 1 + 49 = 50. Done-condition: after CORRECTNESS_r14 lands
 # green, the recount must show no registered query's last driver
 # row older than r12 (exit 0). The r12-green block (50) is two

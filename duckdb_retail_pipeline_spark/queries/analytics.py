@@ -1460,14 +1460,15 @@ def _x66_pair_supports(items: DataFrame) -> DataFrame:
     b = items.select("l_orderkey", F.col("l_partkey").alias("part_b"))
     salted = False
     try:
-        raw = items._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        est = raw if isinstance(raw, int) else int(str(raw))
-        from duckdb_retail_pipeline_spark.operators.dedup import _conf_bytes
+        from duckdb_retail_pipeline_spark.operators.dedup import (
+            _conf_bytes,
+            _plan_bytes,
+        )
 
         thr = _conf_bytes(
             items.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
         )
-        salted = thr < 0 or est > thr
+        salted = thr < 0 or _plan_bytes(items) > thr
     except Exception:  # noqa: BLE001 — unsizeable: keep the plain plan
         pass
     if salted:

@@ -365,8 +365,8 @@ def test_text_kernels_bit_identical_to_hof(spark, sf_dir):
 
 
 def test_minhash_verify_modes_identical(spark, sf_dir):
-    """bucket-local verification (arrays ride the banding shuffle,
-    jaccard streams inside the join stage — the shape that survives
+    """bucket-grouped verification (arrays ride the banding shuffle
+    and materialize once per bucket — the shape that survives
     duplicate-heavy corpora; pair-materializing verify shuffled ~400
     GB of arrays at the 100× decade and died on spill disk) must
     produce EXACTLY the pair set + jaccard values of pair-join
@@ -376,19 +376,16 @@ def test_minhash_verify_modes_identical(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    bkt = D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify="bucket")
     prs = D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify="pairs")
     grp = D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify="group")
-    for other in (prs, grp):
-        j = bkt.alias("x").join(other.alias("y"), ["id_a", "id_b"], "full_outer")
-        mism = j.filter(
-            ~F.expr("x.jaccard").eqNullSafe(F.expr("y.jaccard"))
-        ).count()
-        assert mism == 0
+    j = prs.alias("x").join(grp.alias("y"), ["id_a", "id_b"], "full_outer")
+    mism = j.filter(~F.expr("x.jaccard").eqNullSafe(F.expr("y.jaccard"))).count()
+    assert mism == 0
     import pytest
 
-    with pytest.raises(ValueError):
-        D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify="nope")
+    for mode in ("nope", "bucket"):
+        with pytest.raises(ValueError):
+            D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify=mode)
 
 
 def test_embedding_dup_verify_modes_identical(spark):
@@ -467,7 +464,7 @@ def test_minhash_modes_identical_under_duplicated_id_with_differing_text(spark):
 
     outs = {
         mode: D.minhash_lsh_pairs(docs, 0.5, 16, 8, verify=mode)
-        for mode in ("pairs", "bucket", "group")
+        for mode in ("pairs", "group")
     }
     for name, df in outs.items():
         pairs = df.groupBy("id_a", "id_b").count().filter("count > 1").count()
@@ -475,7 +472,7 @@ def test_minhash_modes_identical_under_duplicated_id_with_differing_text(spark):
     collected = {
         name: sorted(map(tuple, df.collect())) for name, df in outs.items()
     }
-    assert collected["pairs"] == collected["bucket"] == collected["group"]
+    assert collected["pairs"] == collected["group"]
     assert collected["pairs"], "corpus produced no pairs — test is vacuous"
 
 
@@ -1620,6 +1617,88 @@ def test_dataset_memo_concurrent_threads_build_once(spark, tmp_path):
     assert all(r is results[0] for r in results)
     assert results[0].count() == 4
     results[0].unpersist()
+
+
+def test_memoized_count_concurrent_threads_count_once(spark, tmp_path):
+    """Twin of test_dataset_memo_concurrent_threads_build_once for
+    memoized_count: threads racing one (session, plan) key must share
+    ONE df.count() — the corpus-sized scan this memo exists to avoid
+    — and every thread must read the same value."""
+    import threading
+    import time
+
+    from duckdb_retail_pipeline_spark.memo import memoized_count
+
+    p = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(i,) for i in range(7)], "id long").write.mode(
+        "overwrite"
+    ).parquet(p)
+    df = spark.read.parquet(p)
+    real_count = df.count
+    counts, results, errors = [], [], []
+
+    def count():
+        counts.append(1)
+        time.sleep(0.2)  # widen the race window
+        return real_count()
+
+    df.count = count
+    gate = threading.Barrier(6)
+
+    def worker():
+        try:
+            gate.wait(timeout=10)
+            results.append(memoized_count(df))
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(6)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(counts) == 1, f"{len(counts)} counts for one key"
+    assert results == [7] * 6
+
+
+def test_dataset_memo_rebuilds_on_part_file_rewrite_in_place(spark, tmp_path):
+    """A ``t.parquet/`` DIRECTORY's own mtime moves only when an entry
+    is added or removed, so dataset_memo's signature lists one level
+    into it: a part file rewritten in place (same names, same file
+    count) must rebuild instead of serving the stale frame."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_retail_pipeline_spark.memo import dataset_memo
+
+    t = tmp_path / "t.parquet"
+    t.mkdir()
+    pq.write_table(pa.table({"id": [1, 2]}), str(t / "part-0.parquet"))
+    pq.write_table(pa.table({"id": [3]}), str(t / "part-1.parquet"))
+    d = str(tmp_path)
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.read.parquet(str(t)).persist()
+
+    first = dataset_memo(spark, d, "part_rewrite_probe", build)
+    assert first.count() == 3
+    assert dataset_memo(spark, d, "part_rewrite_probe", build) is first
+
+    names = sorted(os.listdir(t))
+    pq.write_table(pa.table({"id": [3, 4, 5]}), str(t / "part-1.parquet"))
+    assert sorted(os.listdir(t)) == names  # rewritten in place
+
+    second = dataset_memo(spark, d, "part_rewrite_probe", build)
+    assert second is not first
+    assert len(builds) == 2
+    assert second.count() == 5
+    second.unpersist()
 
 
 def test_rotating_persist_concurrent_threads_single_occupant(spark, tmp_path):
@@ -5894,15 +5973,18 @@ def test_spread_heavy_kernel_below_byte_floor(spark, sf_dir, monkeypatch):
 
 
 def test_spread_size_probe_internal_api_present(spark, sf_dir):
-    """_spread's size probe reads the PRIVATE py4j surface
+    """_plan_bytes (the size probe behind _spread and x66's salted
+    dispatch) reads the PRIVATE py4j surface
     ``optimizedPlan().stats().sizeInBytes()`` — version-fragile, and
-    its failure path degrades silently to always-spread (a full
-    payload shuffle at scale). Pin the API so a Spark upgrade that
-    removes it fails THIS test loudly instead of shipping the
-    regression (r13 verdict #8)."""
+    both callers degrade silently on its failure (_spread to
+    always-spread, a full payload shuffle at scale). Pin the API so a
+    Spark upgrade that removes it fails THIS test loudly instead of
+    shipping the regression (r13 verdict #8)."""
+    from duckdb_retail_pipeline_spark.operators.dedup import _plan_bytes
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    raw = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    size = raw if isinstance(raw, int) else int(str(raw))
+    size = _plan_bytes(docs)
+    assert isinstance(size, int)
     assert size > 0  # a real file-backed scan always has an estimate
 
 
