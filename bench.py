@@ -88,6 +88,20 @@ def _cold_probe() -> None:
     spark.stop()
 
 
+def _parse_cold_probe(stdout: str) -> dict[str, float] | None:
+    """The per-query cold dict in a --cold-probe subprocess's stdout:
+    the payload is the line whose JSON object has a ``cold_probe``
+    key; any other line, JSON-looking or not, is skipped."""
+    for line in stdout.splitlines():
+        try:
+            doc = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(doc, dict) and "cold_probe" in doc:
+            return doc["cold_probe"]
+    return None
+
+
 def _extra_cold_samples(n_extra: int) -> list[dict[str, float]]:
     """Run ``n_extra`` fresh-session cold probes as subprocesses and
     return their per-query cold dicts. Failures degrade to fewer
@@ -104,13 +118,9 @@ def _extra_cold_samples(n_extra: int) -> list[dict[str, float]]:
                 timeout=1800,
                 cwd=os.path.dirname(os.path.abspath(__file__)),
             )
-            for line in proc.stdout.splitlines():
-                line = line.strip()
-                if line.startswith("{"):
-                    probe = json.loads(line).get("cold_probe")
-                    if isinstance(probe, dict) and probe:
-                        out.append(probe)
-                    break
+            probe = _parse_cold_probe(proc.stdout)
+            if isinstance(probe, dict) and probe:
+                out.append(probe)
         except Exception as exc:  # noqa: BLE001 — diagnostics only
             print(f"cold probe subprocess failed: {exc}", file=sys.stderr)
     return out
@@ -259,9 +269,15 @@ def main() -> None:
                 name: [c] + [p[name] for p in extras if name in p]
                 for name, c in cold.items()
             }
+            # a probe missing any headline query would sum to a
+            # shrunken total that reads as a speed-up: leave it out
             out["headline_queries_cold_total_samples"] = [
                 out["headline_queries_cold_total_sec"]
-            ] + [round(sum(p.values()), 4) for p in extras]
+            ] + [
+                round(sum(p.values()), 4)
+                for p in extras
+                if headline.keys() <= p.keys()
+            ]
             out["cold_samples"] = 1 + len(extras)
 
     steal1, jiff1 = _steal_jiffies()

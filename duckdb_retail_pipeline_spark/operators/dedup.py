@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from duckdb_retail_pipeline_spark.functions import text as T
 from duckdb_retail_pipeline_spark.functions import vectors as V
 from duckdb_retail_pipeline_spark.memo import memoized_count, rotating_persist
+from duckdb_retail_pipeline_spark.plans.explain import plan_bytes
 
 # one-entry persist rotations per call site (see memo.rotating_persist:
 # a bare per-call .persist() leaks one corpus-sized SQL-cache entry
@@ -64,7 +65,7 @@ _SPREAD_MIN_INPUT_BYTES = 4 * 1024 * 1024
 # HEAVY kernels (the minhash signature build: ~28 md5 hashes plus
 # 16-64 permutation minima per document) do enough per-byte work
 # that fan-out pays well below the byte floor — PROVIDED the scan is
-# actually serial (one coarse row group), which is what the r13
+# actually serial (fewer input files than cores), which is what the r13
 # bytes-only floor could not see (r13 verdict #5). Re-A/B'd r14
 # with fresh-session alternation and calibration stamps: x07 cold
 # at sf0.1 spread [3.04, 3.26, 5.69] vs no-spread [6.27, 6.67,
@@ -74,153 +75,50 @@ _SPREAD_MIN_INPUT_BYTES = 4 * 1024 * 1024
 _SPREAD_HEAVY_MIN_INPUT_BYTES = 256 * 1024
 
 
-# suffix multipliers of the JVM's byteStringAsBytes grammar (the
-# forms Spark accepts for spark.sql.files.maxPartitionBytes)
-_SIZE_SUFFIXES = {
-    "b": 1,
-    "k": 1 << 10,
-    "kb": 1 << 10,
-    "m": 1 << 20,
-    "mb": 1 << 20,
-    "g": 1 << 30,
-    "gb": 1 << 30,
-    "t": 1 << 40,
-    "tb": 1 << 40,
-    "p": 1 << 50,
-    "pb": 1 << 50,
-}
-_WARNED_SPREAD_FALLBACK = False
-
-
-def _conf_bytes(value: str) -> int:
-    """Parse a Spark byte-size conf string — '134217728b' (the
-    canonical resolved form), human-set '128m' / '1g' / '64MB', or a
-    bare number (bytes). The previous ``int(value.rstrip('b'))``
-    handled only the canonical form: a human-set '128m' raised, was
-    swallowed by _spread's blanket except, and silently reverted to
-    always-spread — reviving the full-payload at-scale shuffle with
-    no signal (r13 ADVICE). Junk raises ValueError (callers decide
-    the fallback, loudly)."""
-    s = value.strip().lower()
-    i = len(s)
-    while i and not s[i - 1].isdigit():
-        i -= 1
-    suffix = s[i:]
-    if not i or (suffix and suffix not in _SIZE_SUFFIXES):
-        raise ValueError(f"unparseable byte-size conf value {value!r}")
-    return int(s[:i]) * (_SIZE_SUFFIXES[suffix] if suffix else 1)
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for ``df``'s optimized plan — the
-    statistic it sizes broadcast joins with. Reads the PRIVATE py4j
-    surface ``optimizedPlan().stats().sizeInBytes()`` (pinned by
-    test_spread_size_probe_internal_api_present); py4j maps the
-    scala BigInt to int in range and hands back a JavaObject past
-    2^63, which ``str()`` covers."""
-    raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return raw if isinstance(raw, int) else int(str(raw))
-
-
-def _scan_has_row_groups(df: DataFrame, need: int) -> bool:
-    """True iff ``df``'s backing parquet files provably carry >=
-    ``need`` row groups — the scan's REAL split granularity. The
-    byte-ratio estimate alone overcounts splits for large files with
-    few/coarse row groups (parquet tasks only produce rows at
-    row-group boundaries), so the at-scale skip could serialize the
-    CPU-heavy shingle/hash work onto a handful of cores exactly in
-    the regime the shuffle was meant to fix (r13 ADVICE). Footer
-    metadata reads are driver-side and O(need) thanks to the early
-    exit — at 100 TB the loop stops after ~defaultParallelism
-    footers. Local files only; an unprovable answer returns False
-    (→ spread: the conservative pre-r13 behavior)."""
-    try:
-        import pyarrow.parquet as pq
-
-        files = df.inputFiles()
-        if not files:
-            return False
-        total = 0
-        for uri in files:
-            path = uri
-            if uri.startswith("file:"):
-                from urllib.parse import unquote, urlparse
-
-                path = unquote(urlparse(uri).path)
-            elif "://" in uri:
-                return False  # remote URI: cannot probe footers here
-            total += pq.ParquetFile(path).metadata.num_row_groups
-            if total >= need:
-                return True
-        return False
-    except Exception:  # noqa: BLE001 — unreadable footer: not proven
-        return False
-
-
 def _spread(df: DataFrame, key: str, heavy: bool = False) -> DataFrame:
     """Repartition CPU-heavy per-document work across all cores —
     but only when the shuffle buys parallelism the scan does not
     already have (guide §2.4: remove shuffles outright; §2: make
     partitioning scale-adaptive rather than constant).
 
-    Single-file corpora arrive as ONE real split (a parquet file is
-    splittable only at row-group boundaries; the testdata ships one
-    row group per table), which would serialize the expensive
-    shingle/hash expressions onto 1 of N cores. One shuffle of the
-    id+text columns unlocks full parallelism there. Two regimes skip
-    the shuffle instead:
+    A parquet scan splits only at row-group boundaries, so a
+    single-file corpus arrives as ONE real split and would serialize
+    the shingle/hash expressions onto 1 of N cores; one shuffle of
+    the id+text columns unlocks full parallelism there. Two regimes
+    skip the shuffle instead:
 
     - tiny inputs (< _SPREAD_MIN_INPUT_BYTES): per-task scheduling
-      overhead exceeds the single-threaded compute being spread
-      (measured r13, see the constant's comment). ``heavy=True``
-      callers (the minhash signature build) re-engage the fan-out
-      from _SPREAD_HEAVY_MIN_INPUT_BYTES up — but only when the
-      scan is PROVABLY serial (fewer row groups than cores), the
-      distinction the r13 bytes-only floor could not make (r13
-      verdict #5; measured ~2x on x07 cold, constants' comment);
-    - inputs whose scan already yields >= target splits (the 100 TB
-      regime: thousands of row groups/files): the repartition would
-      shuffle the full text bytes corpus-wide to gain nothing — the
-      r12-class "no-op at scale" claim the old docstring made was
-      wrong, it was a full payload shuffle at every scale. The skip
-      requires BOTH the byte-ratio estimate AND a proven row-group
-      count >= target (r14, closing the r13 ADVICE blind spot: a
-      large file with one coarse row group passes the byte test but
-      yields ONE real split).
+      overhead exceeds the compute being spread. ``heavy=True``
+      callers (the minhash signature build) still spread from
+      _SPREAD_HEAVY_MIN_INPUT_BYTES up while the scan has fewer
+      input files than cores;
+    - inputs whose scan already yields >= target splits: the plan
+      bytes over the session's resolved maxPartitionBytes AND the
+      input-file count both reach target. Every non-empty parquet
+      file holds at least one row group, so the file count is a
+      lower bound on the real splits, for any URI scheme.
 
-    Plan-estimated input size (file bytes for scans, summed through
-    unions/projects) is deterministic for a given dataset, so the
-    chosen plan shape is stable across runs; estimation failure
-    falls back to spreading (the conservative pre-r13 behavior) and
-    warns once per process instead of failing silently."""
+    The size is Catalyst's plan estimate (plans.explain.plan_bytes),
+    deterministic for a given dataset, so the chosen shape is stable
+    across runs; an unsizeable plan spreads."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        size = _plan_bytes(df)
-        if size < _SPREAD_MIN_INPUT_BYTES:
-            if (
-                heavy
-                and size >= _SPREAD_HEAVY_MIN_INPUT_BYTES
-                and not _scan_has_row_groups(df, target)
-            ):
-                return df.repartition(target, key)
-            return df
-        max_split = _conf_bytes(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-        if size // max_split >= target and _scan_has_row_groups(df, target):
-            return df
-    except Exception as exc:  # noqa: BLE001 — unsizeable plan: spread as before
-        global _WARNED_SPREAD_FALLBACK
-        if not _WARNED_SPREAD_FALLBACK:
-            _WARNED_SPREAD_FALLBACK = True
-            import warnings
-
-            warnings.warn(
-                f"_spread: size probe failed ({exc!r}); falling back "
-                "to unconditional repartition — the at-scale shuffle "
-                "skip is DISABLED for this process",
-                stacklevel=2,
-            )
+    size = plan_bytes(df)
+    if size is None:
+        return df.repartition(target, key)
+    if size < _SPREAD_MIN_INPUT_BYTES:
+        if (
+            heavy
+            and size >= _SPREAD_HEAVY_MIN_INPUT_BYTES
+            and len(df.inputFiles()) < target
+        ):
+            return df.repartition(target, key)
+        return df
+    sql_conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if (
+        size // sql_conf.filesMaxPartitionBytes() >= target
+        and len(df.inputFiles()) >= target
+    ):
+        return df
     return df.repartition(target, key)
 
 

@@ -3,9 +3,7 @@
 The reference's EP2 entry point: create the monthly view, pull it to
 pandas via Arrow, run the second-stage pandas aggregations (top-5
 countries, country totals, monthly orders, AOV), and render the
-4-panel dashboard. matplotlib is not installed in this container, so
-the render step gates on an import-try — every computation before
-the plot call is real and tested.
+4-panel dashboard with the stdlib PNG renderer (pipeline/plotpng.py).
 """
 
 from __future__ import annotations
@@ -14,16 +12,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_retail_pipeline_spark.pipeline.views import build_monthly_sales_summary
-
-try:  # pragma: no cover - optional dep
-    import matplotlib
-
-    matplotlib.use("Agg")
-    import matplotlib.pyplot as plt
-
-    HAS_MPL = True
-except ImportError:
-    HAS_MPL = False
 
 
 def monthly_summary_pdf(agg_country_day: DataFrame) -> pd.DataFrame:
@@ -84,30 +72,14 @@ def insights(pdf: pd.DataFrame) -> dict[str, object]:
 
 def render_dashboard(pdf: pd.DataFrame, out_path: str) -> str:
     """4-panel dashboard (analyze_monthly_sales.py:140-143): the same
-    four frames the reference plots. matplotlib when available;
-    otherwise the stdlib PNG fallback (pipeline/plotpng.py) renders
-    bars/lines + 5x7-font titles — a real, openable PNG either way."""
-    frames = insight_frames(pdf)
-    if not HAS_MPL:
-        return _render_dashboard_fallback(frames, out_path)
-    fig, axes = plt.subplots(2, 2, figsize=(16, 10))
-    frames["top5_countries"].plot.bar(ax=axes[0][0], title="Top 5 countries (GBP)")
-    frames["monthly_orders"].plot(ax=axes[0][1], title="Monthly orders")
-    frames["monthly_aov"].plot(ax=axes[1][0], title="Avg order value (GBP)")
-    frames["country_totals"]["revenue_gbp"].plot.bar(
-        ax=axes[1][1], title="Revenue by country"
-    )
-    fig.tight_layout()
-    fig.savefig(out_path, dpi=150)
-    plt.close(fig)
-    return out_path
-
-
-def _render_dashboard_fallback(frames: dict, out_path: str) -> str:
+    four frames the reference plots, rendered by the stdlib PNG
+    writer (pipeline/plotpng.py) as bars/lines + 5x7-font titles —
+    a real, openable PNG."""
     import numpy as np
 
     from duckdb_retail_pipeline_spark.pipeline import plotpng as P
 
+    frames = insight_frames(pdf)
     w, h, pad, title_h = 1280, 800, 28, 26
     canvas = np.full((h, w, 3), 250, dtype=np.uint8)
     pw, ph = (w - 3 * pad) // 2, (h - 3 * pad) // 2

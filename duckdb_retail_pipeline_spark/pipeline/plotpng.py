@@ -1,7 +1,6 @@
 """Dependency-free PNG chart rendering.
 
-matplotlib is not installed in this container, but the reference's
-EP2 entry point ends in a rendered 4-panel dashboard
+The reference's EP2 entry point ends in a rendered 4-panel dashboard
 (/root/reference/analysis/analyze_monthly_sales.py:140-143) — so
 this module implements the minimum needed to produce a real PNG from
 the already-computed insight frames using only the stdlib (zlib,
@@ -9,10 +8,9 @@ struct) and numpy: an RGB canvas, bar/line marks, a 5x7 bitmap font
 for titles, and a spec-compliant PNG encoder (IHDR/IDAT/IEND, filter
 type 0, zlib-compressed scanlines).
 
-This is a fallback, not a plotting library: axes are implicit
-(bars/lines are min-max scaled into their panel), and only the glyphs
-the dashboard titles need exist in the font. When matplotlib is
-available, pipeline.analysis.render_dashboard uses it instead.
+This is not a plotting library: axes are implicit (bars/lines are
+min-max scaled into their panel), and only the glyphs the dashboard
+titles need exist in the font.
 """
 
 from __future__ import annotations

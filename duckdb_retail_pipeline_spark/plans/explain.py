@@ -8,7 +8,36 @@ broadcast, hot paths stay inside WholeStageCodegen.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
+
+_WARNED_PLAN_BYTES = False
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for ``df``'s optimized plan — the
+    statistic it sizes broadcast joins with. Reads the PRIVATE py4j
+    surface ``optimizedPlan().stats().sizeInBytes()`` (pinned by
+    test_spread_size_probe_internal_api_present); py4j maps the
+    scala BigInt to int in range and hands back a JavaObject past
+    2^63, which ``str()`` covers. Returns None when the surface
+    fails, and warns once per process: callers then keep their
+    default plan shape."""
+    try:
+        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return raw if isinstance(raw, int) else int(str(raw))
+    except Exception as exc:  # noqa: BLE001 — unsizeable plan: caller's default
+        global _WARNED_PLAN_BYTES
+        if not _WARNED_PLAN_BYTES:
+            _WARNED_PLAN_BYTES = True
+            warnings.warn(
+                f"plan_bytes: size probe failed ({exc!r}); size-based "
+                "plan choices (_spread's shuffle skip, x66's salted "
+                "join) fall back to their default shape for this process",
+                stacklevel=2,
+            )
+        return None
 
 
 def formatted_plan(df: DataFrame) -> str:

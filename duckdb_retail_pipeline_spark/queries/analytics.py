@@ -23,16 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import text as T
+from duckdb_retail_pipeline_spark.memo import rotating_persist
 from duckdb_retail_pipeline_spark.operators import lm as LM
 from duckdb_retail_pipeline_spark.operators import scale as SC
 from duckdb_retail_pipeline_spark.operators import similarity as SIM
+from duckdb_retail_pipeline_spark.plans.explain import plan_bytes
 from duckdb_retail_pipeline_spark.queries.base import (
     dround,
     floor_ratio,
     money_sum,
     plan_memo,
     register,
-    rotating_persist,
     sql_dround,
     sql_floor_ratio,
     sql_money_sum,
@@ -1452,26 +1453,19 @@ def _x66_pair_supports(items: DataFrame) -> DataFrame:
 
     The dispatch mirrors Spark's own broadcast decision: the items
     plan's estimated size (the same statistic Catalyst sizes the
-    join side with) against spark.sql.autoBroadcastJoinThreshold.
-    Probe failure keeps the plain form (the pre-r14 plan, never a
-    bench-scale regression) — the size-probe API itself is pinned by
-    test_spread_size_probe_internal_api_present."""
+    join side with) against the session's resolved
+    autoBroadcastJoinThreshold. An unsizeable plan (plan_bytes
+    returns None and warns once) keeps the plain form, the pre-r14
+    plan and never a bench-scale regression; both private surfaces
+    are pinned by test_spread_size_probe_internal_api_present."""
     a = items.select("l_orderkey", F.col("l_partkey").alias("part_a"))
     b = items.select("l_orderkey", F.col("l_partkey").alias("part_b"))
-    salted = False
-    try:
-        from duckdb_retail_pipeline_spark.operators.dedup import (
-            _conf_bytes,
-            _plan_bytes,
-        )
-
-        thr = _conf_bytes(
-            items.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-        salted = thr < 0 or _plan_bytes(items) > thr
-    except Exception:  # noqa: BLE001 — unsizeable: keep the plain plan
-        pass
-    if salted:
+    thr = (
+        items.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if thr < 0 or (plan_bytes(items) or 0) > thr:
         segs = items.groupBy("l_orderkey").agg(
             F.ceil(F.count(F.lit(1)) / F.lit(_X66_SEG_WIDTH))
             .cast("int")

@@ -132,12 +132,6 @@ def register(
     return deco
 
 
-# moved to memo.py (the cache-lifecycle module) so OPERATORS can
-# rotate their per-call persists too without importing the query
-# layer; re-exported here for the existing consumers
-from duckdb_retail_pipeline_spark.memo import rotating_persist  # noqa: E402,F401
-
-
 def plan_memo(tag: str) -> Callable[[SparkQuery], SparkQuery]:
     """Memoize a query's BUILT DataFrame per (session, dataset) — the
     prepared-statement reuse the pipeline layer has had since r2

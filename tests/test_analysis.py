@@ -27,10 +27,10 @@ def test_insight_frames_shapes(spark, sf_dir):
 
 
 def test_render_dashboard_writes_valid_png(spark, sf_dir, tmp_path):
-    """The dashboard renders with or without matplotlib: the stdlib
-    fallback (pipeline/plotpng.py) must produce a structurally valid
-    PNG — signature, IHDR dimensions, decodable zlib scanlines of the
-    declared size — not just a non-empty file."""
+    """The dashboard's stdlib renderer (pipeline/plotpng.py) must
+    produce a structurally valid PNG — signature, IHDR dimensions,
+    decodable zlib scanlines of the declared size — not just a
+    non-empty file."""
     import struct
     import zlib
 
@@ -39,8 +39,6 @@ def test_render_dashboard_writes_valid_png(spark, sf_dir, tmp_path):
     out = analysis.render_dashboard(pdf, str(tmp_path / "dash.png"))
     data = open(out, "rb").read()
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
-    if analysis.HAS_MPL:
-        return  # matplotlib output: signature check is enough
     assert data[12:16] == b"IHDR"
     w, h = struct.unpack(">II", data[16:24])
     assert (w, h) == (1280, 800)

@@ -81,3 +81,23 @@ def test_bench_cli_emits_driver_contract_json():
     assert out["steal_pct"] is None or out["steal_pct"] >= 0
     cb, ca = out["calibrate_s"]
     assert cb > 0 and ca > 0
+
+
+def test_cold_probe_payload_is_found_past_stray_json_lines():
+    """The probe's payload is the stdout line carrying ``cold_probe``;
+    a stray JSON-looking log line printed before it must not be taken
+    for the payload (which would drop the sample)."""
+    from bench import _parse_cold_probe
+
+    payload = {"q01_pricing_summary": 1.25, "x66_basket_pairs": 2.5}
+    stdout = "\n".join(
+        [
+            "warming up",
+            '{"level": "WARN", "msg": "stray log line"}',
+            "{not json at all",
+            json.dumps({"cold_probe": payload}),
+            '{"cold_probe": {"late": 9.0}}',
+        ]
+    )
+    assert _parse_cold_probe(stdout) == payload
+    assert _parse_cold_probe('{"level": "WARN"}\nno payload here\n') is None

@@ -5877,7 +5877,19 @@ def test_multipart_layout_full_registry_sweep(spark, sf_dir, tmp_path):
                        f"{name}-multipart")
 
 
-def test_spread_is_scale_adaptive(spark, sf_dir, monkeypatch):
+def _docs_as_part_files(sf_dir, dest, n):
+    """The sf documents rows rewritten as ``n`` single-row-group part
+    files under ``dest`` — a scan with ``n`` real splits."""
+    import pyarrow.parquet as pq
+
+    tab = pq.read_table(f"{sf_dir}/documents.parquet")
+    step = -(-len(tab) // n)
+    for i in range(n):
+        pq.write_table(tab.slice(i * step, step), f"{dest}/part-{i}.parquet")
+    return str(dest)
+
+
+def test_spread_is_scale_adaptive(spark, sf_dir, monkeypatch, tmp_path):
     """_spread (r13 optimization) must engage its repartition only in
     the regime where the shuffle buys parallelism: skip on tiny
     inputs (per-task overhead > the compute being spread), engage in
@@ -5905,55 +5917,66 @@ def test_spread_is_scale_adaptive(spark, sf_dir, monkeypatch):
     assert n_shuffles(D.exact_dedup(docs)) == 2  # spread + groupBy
 
     # at-scale regime (scan splits >= target cores): skip again —
-    # simulate by shrinking maxPartitionBytes so size // split >= N.
-    # Since r14 the skip ALSO requires a proven row-group count >=
-    # target (ADVICE r13: byte-range estimates overcount splits for
-    # files with few/coarse row groups): sf0.001's single-row-group
-    # file must KEEP the spread even though the byte test passes,
-    # and a many-row-group rewrite of the same data must skip.
+    # simulate by shrinking maxPartitionBytes (human-set suffixed
+    # form) so size // split >= N. The skip ALSO requires >= target
+    # input files (byte-range estimates overcount splits for files
+    # with few/coarse row groups): sf0.001's single-row-group file
+    # must KEEP the spread even though the byte test passes, and the
+    # same rows written as >= target part files must skip.
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
         # byte test passes, but one coarse row group = one real
         # split: spreading is still the right call
         assert not D._spread(docs, "doc_id").sameSemantics(docs)
 
-        # same rows written with >= defaultParallelism row groups:
-        # the scan genuinely has the splits, so the shuffle is skipped
-        import tempfile
-
-        import pyarrow.parquet as pq
-
         target = spark.sparkContext.defaultParallelism
-        with tempfile.TemporaryDirectory() as tmp:
-            path = f"{tmp}/docs_many_rg.parquet"
-            tab = pq.read_table(f"{sf_dir}/documents.parquet")
-            rows_per_group = max(1, len(tab) // (target + 1))
-            pq.write_table(tab, path, row_group_size=rows_per_group)
-            many = spark.read.parquet(path)
-            assert pq.ParquetFile(path).metadata.num_row_groups >= target
-            assert D._spread(many, "doc_id").sameSemantics(many)
+        many = spark.read.parquet(_docs_as_part_files(sf_dir, tmp_path, target))
+        assert len(many.inputFiles()) >= target
+        assert D._spread(many, "doc_id").sameSemantics(many)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_spread_heavy_kernel_below_byte_floor(spark, sf_dir, monkeypatch):
-    """r13 verdict #5: heavy kernels (the minhash signature build)
-    re-engage the fan-out below the general byte floor — but only
-    when the scan is provably serial. Pins: (a) tiny inputs below
-    even the heavy floor stay unshuffled; (b) in the heavy window a
-    single-row-group scan spreads for heavy callers ONLY (x01's
-    fingerprint path keeps its no-shuffle plan); (c) a
-    many-row-group scan of the same bytes does not spread — the
-    scan already has the parallelism."""
-    import tempfile
-
-    import pyarrow.parquet as pq
-
+def test_spread_skips_on_remote_multi_file_scan(spark, sf_dir, monkeypatch):
+    """The at-scale skip must hold on object storage, the 100 TB
+    regime it exists for: a scan of >= target s3a:// part files
+    already has the splits, so _spread returns the frame unshuffled
+    with no footer reads and no URI-scheme special case."""
     from duckdb_retail_pipeline_spark.operators import dedup as D
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # sf0.001 documents (~6 KB) sit below the 256 KB heavy floor
+    target = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(D, "_SPREAD_MIN_INPUT_BYTES", 1)
+    monkeypatch.setattr(
+        docs,
+        "inputFiles",
+        lambda: [
+            f"s3a://corpus/documents.parquet/part-{i}.parquet"
+            for i in range(target)
+        ],
+    )
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        assert D._spread(docs, "doc_id") is docs
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_spread_heavy_kernel_below_byte_floor(spark, sf_dir, monkeypatch, tmp_path):
+    """r13 verdict #5: heavy kernels (the minhash signature build)
+    re-engage the fan-out below the general byte floor — but only
+    when the scan is serial. Pins: (a) tiny inputs below even the
+    heavy floor stay unshuffled; (b) in the heavy window a
+    single-row-group scan spreads for heavy callers ONLY (x01's
+    fingerprint path keeps its no-shuffle plan); (c) the same rows
+    as >= target part files do not spread — the scan already has the
+    parallelism."""
+    from duckdb_retail_pipeline_spark.operators import dedup as D
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # sf0.001 documents (~64 KB) sit below the 256 KB heavy floor
     assert D._spread(docs, "doc_id", heavy=True).sameSemantics(docs)
 
     monkeypatch.setattr(D, "_SPREAD_HEAVY_MIN_INPUT_BYTES", 1)
@@ -5962,48 +5985,47 @@ def test_spread_heavy_kernel_below_byte_floor(spark, sf_dir, monkeypatch):
     assert D._spread(docs, "doc_id").sameSemantics(docs)
 
     target = spark.sparkContext.defaultParallelism
-    with tempfile.TemporaryDirectory() as tmp:
-        path = f"{tmp}/docs_many_rg.parquet"
-        tab = pq.read_table(f"{sf_dir}/documents.parquet")
-        pq.write_table(
-            tab, path, row_group_size=max(1, len(tab) // (target + 1))
-        )
-        many = spark.read.parquet(path)
-        assert D._spread(many, "doc_id", heavy=True).sameSemantics(many)
+    many = spark.read.parquet(_docs_as_part_files(sf_dir, tmp_path, target))
+    assert D._spread(many, "doc_id", heavy=True).sameSemantics(many)
 
 
-def test_spread_size_probe_internal_api_present(spark, sf_dir):
-    """_plan_bytes (the size probe behind _spread and x66's salted
+def test_spread_size_probe_internal_api_present(spark, sf_dir, monkeypatch):
+    """plan_bytes (the size probe behind _spread and x66's salted
     dispatch) reads the PRIVATE py4j surface
-    ``optimizedPlan().stats().sizeInBytes()`` — version-fragile, and
-    both callers degrade silently on its failure (_spread to
-    always-spread, a full payload shuffle at scale). Pin the API so a
-    Spark upgrade that removes it fails THIS test loudly instead of
-    shipping the regression (r13 verdict #8)."""
-    from duckdb_retail_pipeline_spark.operators.dedup import _plan_bytes
+    ``optimizedPlan().stats().sizeInBytes()``, and both callers read
+    byte sizes from the session's resolved SQLConf getters — all
+    version-fragile. Pin them so a Spark upgrade that removes one
+    fails THIS test loudly instead of shipping a silent plan change
+    (r13 verdict #8). A failing probe returns None and warns once."""
+    import types
+    import warnings
+
+    import pytest
+
+    from duckdb_retail_pipeline_spark.plans import explain as E
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    size = _plan_bytes(docs)
+    size = E.plan_bytes(docs)
     assert isinstance(size, int)
     assert size > 0  # a real file-backed scan always has an estimate
 
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.autoBroadcastJoinThreshold")
+    old = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], "1k")
+        spark.conf.set(keys[1], "10m")
+        assert sql_conf.filesMaxPartitionBytes() == 1024
+        assert sql_conf.autoBroadcastJoinThreshold() == 10 << 20
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
 
-def test_spread_conf_bytes_parses_size_suffixes():
-    """ADVICE r13: a human-set maxPartitionBytes like '128m' must not
-    silently disable the at-scale skip. _conf_bytes handles the JVM
-    byteStringAsBytes grammar and raises on junk (the caller warns
-    once and falls back to spreading)."""
-    import pytest
-
-    from duckdb_retail_pipeline_spark.operators.dedup import _conf_bytes
-
-    assert _conf_bytes("134217728b") == 134217728
-    assert _conf_bytes("134217728") == 134217728
-    assert _conf_bytes("128m") == 128 << 20
-    assert _conf_bytes("128MB") == 128 << 20
-    assert _conf_bytes("1g") == 1 << 30
-    assert _conf_bytes(" 4k ") == 4096
-    with pytest.raises(ValueError):
-        _conf_bytes("lots")
-    with pytest.raises(ValueError):
-        _conf_bytes("128x")
+    monkeypatch.setattr(E, "_WARNED_PLAN_BYTES", False)
+    broken = types.SimpleNamespace(_jdf=None)
+    with pytest.warns(UserWarning, match="plan_bytes"):
+        assert E.plan_bytes(broken) is None
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # warned once already: silent now
+        assert E.plan_bytes(broken) is None
