@@ -14,6 +14,7 @@ import json
 import os
 import sys
 import time
+from collections.abc import Iterable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -124,6 +125,31 @@ def _extra_cold_samples(n_extra: int) -> list[dict[str, float]]:
         except Exception as exc:  # noqa: BLE001 — diagnostics only
             print(f"cold probe subprocess failed: {exc}", file=sys.stderr)
     return out
+
+
+def _fold_cold_probes(
+    out: dict, cold: dict[str, float], headline: Iterable[str], extras: list[dict[str, float]]
+) -> None:
+    """Fold fresh-session cold probes into ``out``: per-query samples,
+    per-sample totals and the sample count. A probe missing any headline
+    query would sum to a shrunken total that reads as a speed-up, so it
+    is left out of ``headline_queries_cold_total_samples``; the headline
+    names it lacked go to ``cold_probe_missing``, one sorted list per
+    left-out probe."""
+    out["queries_cold_samples"] = {
+        name: [c] + [p[name] for p in extras if name in p] for name, c in cold.items()
+    }
+    totals = [out["headline_queries_cold_total_sec"]]
+    missing = []
+    for p in extras:
+        lacked = sorted(set(headline) - p.keys())
+        if lacked:
+            missing.append(lacked)
+        else:
+            totals.append(round(sum(p.values()), 4))
+    out["headline_queries_cold_total_samples"] = totals
+    out["cold_probe_missing"] = missing
+    out["cold_samples"] = 1 + len(extras)
 
 
 def main() -> None:
@@ -265,20 +291,7 @@ def main() -> None:
     if COLD_SAMPLES > 1:
         extras = _extra_cold_samples(COLD_SAMPLES - 1)
         if extras:
-            out["queries_cold_samples"] = {
-                name: [c] + [p[name] for p in extras if name in p]
-                for name, c in cold.items()
-            }
-            # a probe missing any headline query would sum to a
-            # shrunken total that reads as a speed-up: leave it out
-            out["headline_queries_cold_total_samples"] = [
-                out["headline_queries_cold_total_sec"]
-            ] + [
-                round(sum(p.values()), 4)
-                for p in extras
-                if headline.keys() <= p.keys()
-            ]
-            out["cold_samples"] = 1 + len(extras)
+            _fold_cold_probes(out, cold, headline, extras)
 
     steal1, jiff1 = _steal_jiffies()
     # fraction of the run's cpu-time the hypervisor gave to someone

@@ -1,4 +1,4 @@
-"""Testdata catalog: load the driver's parquet tables and register views.
+"""Testdata catalog: memoized loads of the parquet tables.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table
@@ -82,14 +82,14 @@ def _table_memo(spark, sf_dir, tag, build):
     per (session, dataset, table) removes that driver-side re-read
     while keeping every action on the frame a full computation from
     the parquet inputs — the same plan-level (never result-level)
-    memo the pipeline layer has used since r6 (run.py build_layers),
-    applied one layer down. dataset_memo's per-file mtime signature
-    re-validates on every call, so an in-session regeneration of the
-    dataset still rebuilds instead of serving a stale file index —
-    the exact staleness contract load_table already relied on
-    build_layers for. At 100 TB the equivalent driver cost is the
-    partitioned-table file listing (guide §6), which this memo
-    likewise pays once per session instead of once per query."""
+    memo the pipeline layers use (run.py build_layer), applied one
+    layer down. dataset_memo's per-file mtime signature re-validates
+    on every call, so an in-session regeneration of the dataset still
+    rebuilds instead of serving a stale file index — the exact
+    staleness contract build_layer relies on. At 100 TB the
+    equivalent driver cost is the partitioned-table file listing,
+    which this memo likewise pays once per session instead of once
+    per query."""
     from duckdb_retail_pipeline_spark.memo import dataset_memo
 
     return dataset_memo(spark, sf_dir, f"table:{tag}", build)
@@ -136,16 +136,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events:normalized",
         lambda: normalize_event_ts(spark.read.parquet(table_path(sf_dir, "events"))),
     )
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view so Spark SQL text (CTEs,
-    scalar subqueries, views) can reference them by name."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

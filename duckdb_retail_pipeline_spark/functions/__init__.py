@@ -6,8 +6,8 @@ Submodules:
     aggregates   — deterministic MODE, conditional count-distinct,
                    NULL-safe ratio helpers
     vectors      — embedding math (dot, norm, cosine) on array<float>
-    text         — tokenization, n-gram shingles, quality scoring,
-                   language heuristic, fingerprints, simhash/minhash
+    text         — tokenization, n-gram shingles, language heuristic,
+                   fingerprints, simhash/minhash
 """
 
 from duckdb_retail_pipeline_spark.functions import (  # noqa: F401

@@ -35,12 +35,6 @@ def _c(col: Column | str) -> Column:
     return col if isinstance(col, Column) else F.col(col)
 
 
-def md5_long(col: Column | str) -> Column:
-    """Deterministic 60-bit integer hash of a string, cross-engine
-    reproducible (see module docstring)."""
-    return F.conv(F.substring(F.md5(_c(col)), 1, 15), 16, 10).cast("bigint")
-
-
 def md5_int28(col: Column | str) -> Column:
     """28-bit variant for salted-multiply MinHash permutations
     (overflow-safe in ANSI int64 math; see MINHASH_PRIME note)."""
@@ -50,10 +44,6 @@ def md5_int28(col: Column | str) -> Column:
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization with empty tokens dropped."""
     return F.filter(F.split(_c(col), r"\s+"), lambda t: t != F.lit(""))
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
 
 
 # GPT-2-style pre-tokenizer pattern, restricted to the Java-regex /
@@ -70,21 +60,6 @@ def bpe_ish_tokens(col: Column | str) -> Column:
     whitespace ``tokens`` (a BPE token count ≈ what an LLM would be
     billed, a whitespace count ≈ words)."""
     return F.regexp_extract_all(_c(col), F.lit(BPE_ISH_PATTERN), 0)
-
-
-def char_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct character n-grams (shingles) of a string, as an array.
-
-    Built with transform-over-sequence — the Spark equivalent of a
-    DuckDB list comprehension — so both engines produce the same set.
-    """
-    c = _c(col)
-    # Guard: sequence(1, 0) would DESCEND in Spark ([1, 0]); short
-    # strings must yield an empty shingle set instead.
-    idx = F.when(
-        F.length(c) >= n, F.sequence(F.lit(1), F.length(c) - F.lit(n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(n))))
 
 
 def word_shingles(col: Column | str, n: int = 3, sep: str = " ") -> Column:
@@ -344,36 +319,6 @@ def simhash64(toks: Column | str) -> Column:
     a NULL/empty token array yields 0, mirroring the HOF
     NULL-propagation exactly (unit-tested)."""
     return _arrow_simhash(_c(toks))
-
-
-def quality_score(col: Column | str) -> Column:
-    """Heuristic document quality score in [0,1]: blends length,
-    alphabetic ratio, mean word length sanity, and repetition
-    (distinct-token ratio). Mirrors common LLM-corpus filters
-    (Gopher/C4-style rules), expressed entirely in built-ins."""
-    c = _c(col)
-    toks = tokens(c)
-    n_tok = F.size(toks).cast("double")
-    n_chars = F.length(c).cast("double")
-    alpha_ratio = (
-        F.length(F.regexp_replace(c, r"[^A-Za-z]", "")).cast("double")
-        / F.nullif(n_chars, F.lit(0.0))
-    )
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / F.nullif(
-        n_tok, F.lit(0.0)
-    )
-    mean_wordlen = n_chars / F.nullif(n_tok, F.lit(0.0))
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    wordlen_ok = F.when((mean_wordlen >= 2.0) & (mean_wordlen <= 12.0), F.lit(1.0)).otherwise(
-        F.lit(0.0)
-    )
-    score = (
-        F.coalesce(alpha_ratio, F.lit(0.0)) * 0.3
-        + F.coalesce(distinct_ratio, F.lit(0.0)) * 0.3
-        + len_ok * 0.2
-        + wordlen_ok * 0.2
-    )
-    return F.round(score, 4)
 
 
 # Tiny per-language stopword marker lists for the n-gram/stopword

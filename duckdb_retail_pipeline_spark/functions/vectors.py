@@ -230,10 +230,6 @@ def cosine_from_parts(
     return dot(a, b) / F.nullif(norm_a * norm_b, F.lit(0.0))
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    return F.sqrt(_arrow_l2sq(_c(a), _c(b)))
-
-
 def rademacher_planes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic ±1 ("Rademacher") hyperplanes derived from md5 —
     data-independent and seed-free, so the exact same constants can be

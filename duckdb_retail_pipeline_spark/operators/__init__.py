@@ -1,7 +1,7 @@
 """Relational + extension operators.
 
-    joins      — broadcast dim joins, semi/anti helpers, as-of join
-    windows    — forward fill, gap detection, sessionization, top-k
+    joins      — broadcast dim joins, as-of join, bucketed range join
+    windows    — forward fill, gap detection, sessionization
     dedup      — exact / MinHash-LSH / SimHash / n-gram-Jaccard /
                  embedding-cosine deduplication
     similarity — brute-force and LSH-bucketed ANN over embeddings

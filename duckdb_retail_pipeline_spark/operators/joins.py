@@ -3,9 +3,8 @@
 The reference's joins are all equi-joins against small dimensions
 (SURVEY.md §2.3) — on Spark those must be broadcast-hash joins, so
 ``dim_join`` makes the hint explicit rather than trusting the
-threshold. Anti/semi helpers express the reference's referential-
-integrity and IN-subquery patterns. ``asof_join`` is the extension
-operator Spark lacks natively (guide: bucketize or merge_asof); here
+threshold. ``asof_join`` is the extension operator Spark lacks
+natively (the usual workarounds are bucketize or merge_asof); here
 it's the union-window formulation — no cross product, no UDF, scales
 as one shuffle on (key, time).
 """
@@ -28,23 +27,6 @@ def dim_join(
     dim-sized at any SF, so this is always the right physical plan
     (reference J1/J2/J8, src/models/facts.py:48-50,286,400-401)."""
     return fact.join(F.broadcast(dim), on, how)
-
-
-def orphans(
-    fact: DataFrame, dim: DataFrame, on: str | list[str] | Column
-) -> DataFrame:
-    """Fact rows with no matching dimension row — the reference's
-    referential-integrity check as a left-anti join
-    (src/models/facts.py:114-139)."""
-    return fact.join(F.broadcast(dim), on, "left_anti")
-
-
-def semi_in(
-    df: DataFrame, filter_df: DataFrame, on: str | list[str] | Column
-) -> DataFrame:
-    """``x IN (SELECT ...)`` as a left-semi join
-    (reference src/models/dimensions.py:88-93)."""
-    return df.join(F.broadcast(filter_df), on, "left_semi")
 
 
 def _orderable(dt) -> bool:

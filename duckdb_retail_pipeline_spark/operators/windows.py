@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -105,16 +105,3 @@ def sessionize(
     return df.withColumn("__new_session", is_new).withColumn(
         "session_seq", F.sum("__new_session").over(w)
     ).drop("__new_session")
-
-
-def top_k_per_group(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: Column,
-    k: int = 1,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """row_number ≤ k per group (deterministic if ``order_col`` is a
-    total order — callers add a unique tie-break column)."""
-    w = Window.partitionBy(*group_cols).orderBy(order_col)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)

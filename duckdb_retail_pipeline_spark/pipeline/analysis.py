@@ -11,16 +11,14 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_retail_pipeline_spark.pipeline.views import build_monthly_sales_summary
 
-
-def monthly_summary_pdf(agg_country_day: DataFrame) -> pd.DataFrame:
-    """View → pandas (Arrow transfer) with the derived
-    avg_order_value_eur the reference adds query-side
+def monthly_summary_pdf(view: DataFrame) -> pd.DataFrame:
+    """The v_monthly_sales_summary frame → pandas (Arrow transfer)
+    with the derived avg_order_value_eur the reference adds query-side
     (analyze_monthly_sales.py:57-69)."""
     import numpy as np
 
-    pdf = build_monthly_sales_summary(agg_country_day).toPandas()
+    pdf = view.toPandas()
     # np.nan, not pd.NA: replace(0, pd.NA) upcasts to object and the
     # later astype(float) raises TypeError on NAType — the guard
     # would crash on exactly the zero-orders group it exists for
@@ -115,15 +113,12 @@ def render_dashboard(pdf: pd.DataFrame, out_path: str) -> str:
 
 
 def analyze(spark: SparkSession, sf_dir: str) -> dict[str, object]:
-    """EP2 end-to-end: build the pipeline layers lazily, register the
-    view, compute the pandas-side insights."""
-    from duckdb_retail_pipeline_spark.pipeline.run import build_layers
+    """EP2 end-to-end: build the view layer lazily, register it,
+    compute the pandas-side insights."""
+    from duckdb_retail_pipeline_spark.pipeline.run import build_layer
 
-    layers = build_layers(spark, sf_dir)
+    view = build_layer(spark, sf_dir, "v_monthly_sales_summary")
     # reference EP2 parity: the view is registered for SQL consumers
-    # (asserted by test_analyze_end_to_end), not read back here
-    layers["v_monthly_sales_summary"].createOrReplaceTempView(
-        "v_monthly_sales_summary"
-    )
-    pdf = monthly_summary_pdf(layers["agg_country_day"])
-    return insights(pdf)
+    # (asserted by test_analyze_end_to_end)
+    view.createOrReplaceTempView("v_monthly_sales_summary")
+    return insights(monthly_summary_pdf(view))

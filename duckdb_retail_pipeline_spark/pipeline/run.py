@@ -1,10 +1,11 @@
 """Pipeline orchestration (reference src/run.py:50-87).
 
-Two modes:
+The layer graph is declared once, in ``_LAYERS``: each layer's plan
+builder over a lookup of its upstream layers. Two modes read it:
 
-- ``build_layers``: the whole pipeline as one lazy DAG of DataFrames
-  (staging → dims → facts → agg → view) — what the query registry
-  uses; Catalyst sees every layer at once and optimizes across them.
+- ``build_layer``: one layer as a lazy DataFrame, memoized per
+  (session, dataset, layer) — what the query registry uses; Catalyst
+  sees the layer's whole ancestor chain and optimizes across it.
 - ``run_pipeline``: materialized mode — each layer written to a
   parquet warehouse dir (the Spark analogue of the reference's
   DROP+CTAS layering), facts **partitioned by month** so downstream
@@ -19,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark import memo
 from duckdb_retail_pipeline_spark.pipeline import staging
 from duckdb_retail_pipeline_spark.pipeline.aggregates import build_agg_country_day
 from duckdb_retail_pipeline_spark.pipeline.dimensions import (
@@ -34,132 +36,84 @@ from duckdb_retail_pipeline_spark.pipeline.facts import (
 from duckdb_retail_pipeline_spark.pipeline.validate import validation_checks
 from duckdb_retail_pipeline_spark.pipeline.views import build_monthly_sales_summary
 
-LAYER_ORDER = (
-    "raw_retail_data",
-    "raw_fx_rates",
-    "raw_uk_holidays",
-    "dim_calendar",
-    "dim_product",
-    "dim_customer",
-    "fct_sales",
-    "daily_fx_rates",
-    "fct_sales_eur",
-    "agg_country_day",
-    "v_monthly_sales_summary",
-    "validation",
-)
+_STAGING_KEYS = ("raw_retail_data", "raw_fx_rates", "raw_uk_holidays")
 
-# One layer DAG per (session, dataset). Without this, every caller
-# that asks for a layer rebuilds the whole upstream chain: a fresh
-# spark.read.parquet produces a plan that does NOT canonicalize equal
-# to the one already cached (file-index identity), so the .cache()
-# calls below would register duplicate entries and recompute instead
-# of hitting memory. Memoizing the DataFrames themselves is the
-# engine analogue of the reference's persistent staging tables.
-# memo.dataset_memo handles keying, mtime invalidation, and
-# unpersisting superseded entries (shared with the dedup family).
-
-
-def build_layers(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Phase 1-4 of the reference pipeline as one declarative DAG,
-    memoized per (session, sf_dir). The returned mapping is LAZY per
-    layer: each layer's plan is constructed (and its ``.cache()``
-    registered) on first ``[...]`` access, building only its
-    ancestor chain — a ``pl03`` caller pays for staging + calendar
-    plan construction, never for fct/eur/agg/validation plan
-    building (r14, guide §5 — the driver should do almost no data
-    work, and the eager full-dict build billed every downstream
-    layer's py4j plan construction to whichever pl query ran first:
-    pl03 cold 5.5 s at sf0.1, ~1.5 s of it building plans pl03
-    never executes). Same mapping contract as the eager dict it
-    replaces: consumers only ever do ``build_layers(...)[name]``."""
-    from duckdb_retail_pipeline_spark.memo import dataset_memo
-
-    return dataset_memo(
-        spark, sf_dir, "build_layers", lambda: _LayerDAG(spark, sf_dir)
-    )
-
-
-# layer -> plan builder over the DAG mapping itself; each recursive
-# [...] access fills the ancestor chain first. The .cache() choices
-# are unchanged from the eager build: staging feeds four consumers,
-# dims feed fct_sales + the agg layer, fct_sales feeds fx/eur/agg,
-# eur facts feed agg/view/validation, and the agg layer is the
-# reference's explicitly materialized pre-aggregation table
-# (facts.py:347-412; uncached it was the only layer whose every
-# action replayed the full fact aggregation — bench r13: pl09 warm
-# ~0.97 s vs 0.05-0.12 s for the cached layers). daily_fx_rates and
-# the view are dimension-cheap projections and stay uncached.
-_LAYER_BUILDERS: dict = {
-    "dim_calendar": lambda L: build_dim_calendar(
-        L["raw_retail_data"], L["raw_uk_holidays"]
-    ).cache(),
-    "dim_product": lambda L: build_dim_product(L["raw_retail_data"]).cache(),
-    "dim_customer": lambda L: build_dim_customer(L["raw_retail_data"]).cache(),
+# layer -> plan builder over ``L``, a lookup of upstream layers by name.
+# Builders stay lambdas that resolve ``build_*`` at call time, so a
+# wrapper installed on this module's attributes sees every call.
+_LAYERS = {
+    "dim_calendar": lambda L: build_dim_calendar(L("raw_retail_data"), L("raw_uk_holidays")),
+    "dim_product": lambda L: build_dim_product(L("raw_retail_data")),
+    "dim_customer": lambda L: build_dim_customer(L("raw_retail_data")),
     "fct_sales": lambda L: build_fct_sales(
-        L["raw_retail_data"], L["dim_calendar"], L["dim_product"], L["dim_customer"]
-    ).cache(),
-    "daily_fx_rates": lambda L: build_daily_fx_rates(
-        L["raw_fx_rates"], L["fct_sales"]
+        L("raw_retail_data"), L("dim_calendar"), L("dim_product"), L("dim_customer")
     ),
-    "fct_sales_eur": lambda L: build_fct_sales_eur(
-        L["fct_sales"], L["daily_fx_rates"]
-    ).cache(),
+    "daily_fx_rates": lambda L: build_daily_fx_rates(L("raw_fx_rates"), L("fct_sales")),
+    "fct_sales_eur": lambda L: build_fct_sales_eur(L("fct_sales"), L("daily_fx_rates")),
     "agg_country_day": lambda L: build_agg_country_day(
-        L["fct_sales_eur"], L["dim_customer"], L["dim_calendar"]
-    ).cache(),
-    "v_monthly_sales_summary": lambda L: build_monthly_sales_summary(
-        L["agg_country_day"]
+        L("fct_sales_eur"), L("dim_customer"), L("dim_calendar")
     ),
+    "v_monthly_sales_summary": lambda L: build_monthly_sales_summary(L("agg_country_day")),
     "validation": lambda L: validation_checks(
-        L["dim_calendar"],
-        L["dim_product"],
-        L["dim_customer"],
-        L["fct_sales"],
-        L["daily_fx_rates"],
-        L["fct_sales_eur"],
-        L["agg_country_day"],
+        L("dim_calendar"),
+        L("dim_product"),
+        L("dim_customer"),
+        L("fct_sales"),
+        L("daily_fx_rates"),
+        L("fct_sales_eur"),
+        L("agg_country_day"),
     ),
 }
 
-_STAGING_KEYS = ("raw_retail_data", "raw_fx_rates", "raw_uk_holidays")
+LAYER_ORDER = _STAGING_KEYS + tuple(_LAYERS)
+
+# Layers build_layer caches: staging feeds four consumers, dims feed
+# fct_sales + the agg layer, fct_sales feeds fx/eur/agg, eur facts feed
+# agg/view/validation, and the agg layer is the reference's explicitly
+# materialized pre-aggregation table (facts.py:347-412; uncached it was
+# the only layer whose every action replayed the full fact aggregation —
+# bench r13: pl09 warm ~0.97 s vs 0.05-0.12 s for the cached layers).
+# daily_fx_rates and the view are dimension-cheap projections.
+_CACHED = frozenset(
+    {"raw_retail_data", "dim_calendar", "dim_product", "dim_customer",
+     "fct_sales", "fct_sales_eur", "agg_country_day"}
+)
+# Layers run_pipeline writes partitioned by month: month granularity
+# keeps file counts sane while letting date-range scans prune.
+_BY_MONTH = frozenset({"fct_sales", "fct_sales_eur"})
 
 
-class _LayerDAG(dict):
-    """dict of layer DataFrames filled lazily by ``__missing__`` —
-    repeated access returns the SAME handle (so the per-layer
-    ``.cache()`` entries are shared, exactly as before), and
-    ``memo._unpersist``'s ``.values()`` sweep sees precisely the
-    layers that were actually built (only those hold cache entries).
-    A per-instance RLock makes concurrent first-access build each
-    layer once (the dataset_memo key lock only covers DAG creation;
-    thread-pool callers hit ``__missing__`` outside it). RLock, not
-    Lock: an ancestor fill recurses through ``self[...]`` on the
-    same thread."""
+def build_layer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One pipeline layer as a lazy DataFrame, memoized through
+    ``dataset_memo`` under the tag ``layer:<name>`` (staging's three
+    frames share the one ``layer:staging`` entry). A first call builds
+    only the layer's ancestor chain — a ``pl03`` caller pays for staging
+    and calendar plan construction, never for fct/eur/agg/validation
+    plans it does not execute. Repeat calls
+    return the SAME handle, so ``.cache()`` entries are shared; a fresh
+    ``spark.read.parquet`` does not canonicalize equal to a cached plan
+    (file-index identity), so rebuilding would register duplicates.
 
-    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
-        super().__init__()
-        self._spark = spark
-        self._sf_dir = sf_dir
-        import threading
+    Concurrent first calls build each layer once: ``dataset_memo``
+    holds the key lock of ``layer:<name>`` while the builder resolves
+    its upstream layers, each under its own key lock. Nested builds
+    take key locks from descendant to ancestor along the acyclic
+    ``_LAYERS`` graph (and last the base-table locks of ``catalog``,
+    whose builds take none), so they cannot deadlock."""
+    if name in _STAGING_KEYS:
 
-        self._lock = threading.RLock()
+        def load() -> dict[str, DataFrame]:
+            raw = staging.load_staging(spark, sf_dir)
+            return {k: df.cache() if k in _CACHED else df for k, df in raw.items()}
 
-    def __missing__(self, name: str) -> DataFrame:
-        with self._lock:
-            if name in self:  # a racer built it while we waited
-                return dict.__getitem__(self, name)
-            if name in _STAGING_KEYS:
-                raw = staging.load_staging(self._spark, self._sf_dir)
-                raw["raw_retail_data"] = raw["raw_retail_data"].cache()
-                self.update(raw)
-                return dict.__getitem__(self, name)
-            build = _LAYER_BUILDERS.get(name)
-            if build is None:
-                raise KeyError(name)
-            df = build(self)
-            dict.__setitem__(self, name, df)
-            return df
+        return memo.dataset_memo(spark, sf_dir, "layer:staging", load)[name]
+    build = _LAYERS[name]
+
+    def plan() -> DataFrame:
+        df = build(lambda up: build_layer(spark, sf_dir, up))
+        return df.cache() if name in _CACHED else df
+
+    return memo.dataset_memo(spark, sf_dir, f"layer:{name}", plan)
 
 
 def run_pipeline(
@@ -175,55 +129,21 @@ def run_pipeline(
     consumer scans columnar files with pushdown."""
     mode = "overwrite" if rebuild else "errorifexists"
     paths: dict[str, str] = {}
+    written: dict[str, DataFrame] = {}
 
-    def write(name: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    def write(name: str, df: DataFrame) -> None:
         path = os.path.join(warehouse_dir, name)
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        if name in _BY_MONTH:
+            df = df.withColumn("sales_month", F.date_format("date", "yyyy-MM"))
+            df.write.mode(mode).partitionBy("sales_month").parquet(path)
+            written[name] = spark.read.parquet(path).drop("sales_month")
+        else:
+            df.write.mode(mode).parquet(path)
+            written[name] = spark.read.parquet(path)
         paths[name] = path
-        return spark.read.parquet(path)
 
-    raw = staging.load_staging(spark, sf_dir)
-    raw_retail = write("raw_retail_data", raw["raw_retail_data"])
-    raw_fx = write("raw_fx_rates", raw["raw_fx_rates"])
-    raw_hol = write("raw_uk_holidays", raw["raw_uk_holidays"])
-
-    dim_calendar = write("dim_calendar", build_dim_calendar(raw_retail, raw_hol))
-    dim_product = write("dim_product", build_dim_product(raw_retail))
-    dim_customer = write("dim_customer", build_dim_customer(raw_retail))
-
-    fct = build_fct_sales(raw_retail, dim_calendar, dim_product, dim_customer)
-    # date-partitioned fact layout: month granularity keeps file
-    # counts sane while letting date-range scans prune (100 TB note)
-    fct = fct.withColumn("sales_month", F.date_format("date", "yyyy-MM"))
-    fct_sales = write("fct_sales", fct, partition_by=["sales_month"]).drop(
-        "sales_month"
-    )
-
-    daily_fx = write("daily_fx_rates", build_daily_fx_rates(raw_fx, fct_sales))
-    eur = build_fct_sales_eur(fct_sales, daily_fx).withColumn(
-        "sales_month", F.date_format("date", "yyyy-MM")
-    )
-    fct_sales_eur = write("fct_sales_eur", eur, partition_by=["sales_month"]).drop(
-        "sales_month"
-    )
-    agg = write(
-        "agg_country_day",
-        build_agg_country_day(fct_sales_eur, dim_customer, dim_calendar),
-    )
-    write("v_monthly_sales_summary", build_monthly_sales_summary(agg))
-    write(
-        "validation",
-        validation_checks(
-            dim_calendar,
-            dim_product,
-            dim_customer,
-            fct_sales,
-            daily_fx,
-            fct_sales_eur,
-            agg,
-        ),
-    )
+    for name, df in staging.load_staging(spark, sf_dir).items():
+        write(name, df)
+    for name, build in _LAYERS.items():
+        write(name, build(written.__getitem__))
     return paths

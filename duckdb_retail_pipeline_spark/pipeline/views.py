@@ -1,13 +1,13 @@
 """View layer (reference sql/views/monthly_sales_summary.sql).
 
 The monthly sales summary over agg_country_day — time + geography
-grouping with trading-day and order-value ratios. Exposed both as a
-DataFrame builder and as a session view (``create_view``), matching
-the reference's CREATE OR REPLACE VIEW surface (S6)."""
+grouping with trading-day and order-value ratios. ``pipeline/analysis.py``
+registers it as a session view, matching the reference's CREATE OR
+REPLACE VIEW surface (S6)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -65,12 +65,3 @@ def build_monthly_sales_summary(agg_country_day: DataFrame) -> DataFrame:
             / F.nullif(F.col("total_orders"), F.lit(0)).cast("double")
         ).alias("avg_order_value_gbp"),
     )
-
-
-def create_view(
-    spark: SparkSession, agg_country_day: DataFrame, name: str = "v_monthly_sales_summary"
-) -> None:
-    """Register as a session temp view — the Spark analogue of the
-    reference's CREATE OR REPLACE VIEW executed from a .sql file
-    (analysis/analyze_monthly_sales.py:32-38)."""
-    build_monthly_sales_summary(agg_country_day).createOrReplaceTempView(name)

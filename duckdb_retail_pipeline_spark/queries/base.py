@@ -134,8 +134,8 @@ def register(
 
 def plan_memo(tag: str) -> Callable[[SparkQuery], SparkQuery]:
     """Memoize a query's BUILT DataFrame per (session, dataset) — the
-    prepared-statement reuse the pipeline layer has had since r2
-    (build_layers → dataset_memo), extended to individual query
+    prepared-statement reuse each pipeline layer has
+    (build_layer → dataset_memo), extended to individual query
     functions whose driver-side plan construction is a measured cost.
 
     This memoizes the PLAN HANDLE, never results: every action on the

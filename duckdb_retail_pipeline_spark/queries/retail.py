@@ -19,7 +19,7 @@ _EXEC_TOKEN = object()
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_retail_pipeline_spark.pipeline.run import build_layers
+from duckdb_retail_pipeline_spark.pipeline.run import build_layer
 from duckdb_retail_pipeline_spark.queries.base import register
 
 # ---------------------------------------------------------------------------
@@ -253,7 +253,7 @@ VALIDATION_SQL = (
 
 def _layer_query(layer: str):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return build_layers(spark, sf_dir)[layer]
+        return build_layer(spark, sf_dir, layer)
 
     fn.__name__ = f"pl_{layer}"
     return fn

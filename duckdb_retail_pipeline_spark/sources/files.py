@@ -25,12 +25,3 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", "true")  # small/dev files only
     return reader.csv(path)
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

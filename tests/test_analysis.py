@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 
 from duckdb_retail_pipeline_spark.pipeline import analysis
-from duckdb_retail_pipeline_spark.pipeline.run import build_layers
+from duckdb_retail_pipeline_spark.pipeline.run import build_layer
 
 
 def test_analyze_end_to_end(spark, sf_dir):
@@ -16,8 +16,9 @@ def test_analyze_end_to_end(spark, sf_dir):
 
 
 def test_insight_frames_shapes(spark, sf_dir):
-    layers = build_layers(spark, sf_dir)
-    pdf = analysis.monthly_summary_pdf(layers["agg_country_day"])
+    pdf = analysis.monthly_summary_pdf(
+        build_layer(spark, sf_dir, "v_monthly_sales_summary")
+    )
     frames = analysis.insight_frames(pdf)
     assert len(frames["top5_countries"]) <= 5
     assert frames["country_totals"]["revenue_gbp"].sum() == pytest.approx(
@@ -34,8 +35,9 @@ def test_render_dashboard_writes_valid_png(spark, sf_dir, tmp_path):
     import struct
     import zlib
 
-    layers = build_layers(spark, sf_dir)
-    pdf = analysis.monthly_summary_pdf(layers["agg_country_day"])
+    pdf = analysis.monthly_summary_pdf(
+        build_layer(spark, sf_dir, "v_monthly_sales_summary")
+    )
     out = analysis.render_dashboard(pdf, str(tmp_path / "dash.png"))
     data = open(out, "rb").read()
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
@@ -68,6 +70,7 @@ def test_monthly_summary_zero_orders_yields_nan_not_typeerror(spark):
     import math
 
     from duckdb_retail_pipeline_spark.pipeline.analysis import monthly_summary_pdf
+    from duckdb_retail_pipeline_spark.pipeline.views import build_monthly_sales_summary
 
     day = dt.date(2024, 1, 3)
     agg = spark.createDataFrame(
@@ -80,7 +83,7 @@ def test_monthly_summary_zero_orders_yields_nan_not_typeerror(spark):
         "date date, country string, orders long, items long, "
         "net_qty long, net_revenue_gbp double, net_revenue_eur double",
     )
-    pdf = monthly_summary_pdf(agg)
+    pdf = monthly_summary_pdf(build_monthly_sales_summary(agg))
     by_country = pdf.set_index("country")["avg_order_value_eur"]
     assert math.isnan(by_country["UK"])
     assert by_country["FR"] == 11.0

@@ -101,3 +101,29 @@ def test_cold_probe_payload_is_found_past_stray_json_lines():
     )
     assert _parse_cold_probe(stdout) == payload
     assert _parse_cold_probe('{"level": "WARN"}\nno payload here\n') is None
+
+
+def test_fold_cold_probes_leaves_out_incomplete_probes_and_names_the_gap():
+    """A probe missing a headline query would sum to a shrunken total
+    that reads as a speed-up: it stays out of the per-sample totals,
+    its per-query values still land, and the names it lacked are
+    recorded under ``cold_probe_missing``."""
+    from bench import _fold_cold_probes
+
+    cold = {"a": 1.0, "b": 2.0, "c": 3.0}
+    out = {"headline_queries_cold_total_sec": 6.0, "cold_samples": 1}
+    extras = [{"a": 1.5, "b": 2.5, "c": 3.5}, {"a": 1.25}]
+    _fold_cold_probes(out, cold, ("a", "b", "c"), extras)
+    assert out["queries_cold_samples"] == {
+        "a": [1.0, 1.5, 1.25], "b": [2.0, 2.5], "c": [3.0, 3.5]
+    }
+    assert out["headline_queries_cold_total_samples"] == [6.0, 7.5]
+    assert out["cold_probe_missing"] == [["b", "c"]]
+    assert out["cold_samples"] == 3
+    assert out["headline_queries_cold_total_sec"] == 6.0
+
+    complete = {"headline_queries_cold_total_sec": 6.0}
+    _fold_cold_probes(complete, cold, ("a", "b", "c"), extras[:1])
+    assert complete["headline_queries_cold_total_samples"] == [6.0, 7.5]
+    assert complete["cold_probe_missing"] == []
+    assert complete["cold_samples"] == 2

@@ -1,9 +1,15 @@
 from __future__ import annotations
 
 import os
+import shutil
+import sys
 import tempfile
 
-from duckdb_retail_pipeline_spark.pipeline.run import LAYER_ORDER, run_pipeline
+import pytest
+
+from duckdb_retail_pipeline_spark import memo
+from duckdb_retail_pipeline_spark.pipeline import staging
+from duckdb_retail_pipeline_spark.pipeline.run import LAYER_ORDER, build_layer, run_pipeline
 
 
 def test_run_pipeline_materializes_and_validates(spark, sf_dir):
@@ -14,8 +20,8 @@ def test_run_pipeline_materializes_and_validates(spark, sf_dir):
             assert os.path.isdir(path), name
 
         # facts are month-partitioned (the 100 TB layout)
-        fct_dirs = os.listdir(paths["fct_sales"])
-        assert any(d.startswith("sales_month=") for d in fct_dirs)
+        for fact in ("fct_sales", "fct_sales_eur"):
+            assert any(d.startswith("sales_month=") for d in os.listdir(paths[fact]))
 
         # every reference-ported validation check must be clean
         validation = spark.read.parquet(paths["validation"]).collect()
@@ -40,46 +46,95 @@ def test_run_pipeline_materializes_and_validates(spark, sf_dir):
 
 
 def test_rebuild_false_refuses_overwrite(spark, sf_dir):
-    import pytest
-
     with tempfile.TemporaryDirectory() as wh:
         run_pipeline(spark, sf_dir, wh, rebuild=True)
         with pytest.raises(Exception):  # noqa: B017 — AnalysisException: path exists
             run_pipeline(spark, sf_dir, wh, rebuild=False)
 
 
-def test_layer_fill_is_dependency_pruned(spark, sf_dir):
-    """r14 guide-§5 optimization pin: build_layers' mapping fills
-    lazily per layer — accessing dim_calendar must not construct
-    fct/eur/agg/validation plans (the eager dict billed ~1.5 s of
-    downstream py4j plan construction to a pl03-only caller), and
-    repeat access returns the SAME handle (shared .cache() entries,
-    as before). Built on a tmp COPY of the dataset so unpersisting
-    the test's cache entries cannot drop plan-canonical-equal
-    entries shared with the session-memoized DAG other tests use."""
-    import shutil
+@pytest.fixture
+def data_copy(sf_dir, tmp_path):
+    """A tmp COPY of the dataset, so unpersisting the test's cache
+    entries cannot drop plan-canonical-equal entries shared with the
+    session-memoized layers other tests use. Its memo entries are
+    unpersisted and dropped afterwards."""
+    data = str(tmp_path / "data")
+    shutil.copytree(sf_dir, data)
+    yield data
+    for key in [k for k in memo._MEMO if k[1] == data]:
+        memo._unpersist(memo._MEMO.pop(key)[1])
 
-    from duckdb_retail_pipeline_spark.pipeline.run import LAYER_ORDER, _LayerDAG
 
-    with tempfile.TemporaryDirectory() as tmp:
-        data = os.path.join(tmp, "data")
-        shutil.copytree(sf_dir, data)
-        dag = _LayerDAG(spark, data)
-        assert set(dag) == set()  # nothing built up front
-        cal = dag["dim_calendar"]
-        # only the ancestor chain (staging fills all three raw keys)
-        assert set(dag) == {
-            "raw_retail_data",
-            "raw_fx_rates",
-            "raw_uk_holidays",
-            "dim_calendar",
-        }
-        assert dag["dim_calendar"] is cal  # same handle on repeat
-        assert cal.count() > 0  # and it executes
-        # every declared layer is reachable and the filled key set
-        # is exactly the layer order — no layer lost in the rewrite
-        for name in LAYER_ORDER:
-            assert dag[name] is not None
-        assert set(dag) == set(LAYER_ORDER)
-        for df in dag.values():
-            df.unpersist()
+def _layer_entries(data: str) -> dict:
+    """tag -> memoized value of every ``layer:`` entry for ``data``."""
+    return {
+        k[2]: v
+        for k, (_, v) in memo._MEMO.items()
+        if k[1] == data and k[2].startswith("layer:")
+    }
+
+
+def test_layer_fill_is_dependency_pruned(spark, data_copy):
+    """build_layer builds only the requested layer's ancestor chain —
+    dim_calendar must not construct fct/eur/agg/validation plans (an
+    eager whole-pipeline build billed ~1.5 s of downstream py4j plan
+    construction to a pl03-only caller) — and a repeat call returns the
+    SAME handle (shared .cache() entries)."""
+    cal = build_layer(spark, data_copy, "dim_calendar")
+    assert set(_layer_entries(data_copy)) == {"layer:staging", "layer:dim_calendar"}
+    assert build_layer(spark, data_copy, "dim_calendar") is cal
+    assert cal.count() > 0  # and it executes
+    # every declared layer is reachable, each under its own entry
+    for name in LAYER_ORDER:
+        assert build_layer(spark, data_copy, name) is not None
+    assert set(_layer_entries(data_copy)) == {"layer:staging"} | {
+        f"layer:{name}" for name in LAYER_ORDER[3:]
+    }
+
+
+def test_concurrent_build_layer_builds_each_layer_once(spark, data_copy, monkeypatch):
+    """Threads racing a first build_layer call on one dataset must share
+    ONE handle per layer: the memo's per-key locks serialize same-layer
+    builds while a nested build resolves its ancestors."""
+    import threading
+    import time
+
+    real_load = staging.load_staging
+    loads, results, errors = [], [], []
+
+    def slow_load(spark, sf_dir):
+        loads.append(1)
+        time.sleep(0.2)  # widen the race window
+        return real_load(spark, sf_dir)
+
+    monkeypatch.setattr(staging, "load_staging", slow_load)
+    gate = threading.Barrier(8)
+
+    def worker():
+        try:
+            gate.wait(timeout=10)
+            results.append(build_layer(spark, data_copy, "agg_country_day"))
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(loads) == 1, f"staging loaded {len(loads)} times"
+    entries = _layer_entries(data_copy)
+    assert len(results) == 8
+    assert all(df is entries["layer:agg_country_day"] for df in results)
+    assert set(entries) == {
+        "layer:staging", "layer:dim_calendar", "layer:dim_product",
+        "layer:dim_customer", "layer:fct_sales", "layer:daily_fx_rates",
+        "layer:fct_sales_eur", "layer:agg_country_day",
+    }

@@ -33,7 +33,7 @@ from duckdb_retail_pipeline_spark.operators.scale import write_bucketed
 from duckdb_retail_pipeline_spark.pipeline.aggregates import (
     build_agg_country_day,
 )
-from duckdb_retail_pipeline_spark.pipeline.run import build_layers
+from duckdb_retail_pipeline_spark.pipeline.run import build_layer
 from duckdb_retail_pipeline_spark.session import get_spark
 from tools._util import row_set_checksum as checksum
 
@@ -67,11 +67,10 @@ def main() -> None:
     spark = get_spark(app_name="pl09-bucket-ab")
     spark.sparkContext.setLogLevel("ERROR")
 
-    layers = build_layers(spark, sf_dir)
-    fct = layers["fct_sales_eur"]
+    fct = build_layer(spark, sf_dir, "fct_sales_eur")
     n_fct = fct.count()  # also materializes the cache (the A side)
-    dim_customer = layers["dim_customer"]
-    dim_calendar = layers["dim_calendar"]
+    dim_customer = build_layer(spark, sf_dir, "dim_customer")
+    dim_calendar = build_layer(spark, sf_dir, "dim_calendar")
 
     # A: current shape — pre-agg over the session-cached fct frame
     timed(
