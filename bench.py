@@ -135,7 +135,8 @@ def _fold_cold_probes(
     query would sum to a shrunken total that reads as a speed-up, so it
     is left out of ``headline_queries_cold_total_samples``; the headline
     names it lacked go to ``cold_probe_missing``, one sorted list per
-    left-out probe."""
+    left-out probe. ``headline_queries_cold_min_total_sec`` is the least
+    of those totals."""
     out["queries_cold_samples"] = {
         name: [c] + [p[name] for p in extras if name in p] for name, c in cold.items()
     }
@@ -148,6 +149,7 @@ def _fold_cold_probes(
         else:
             totals.append(round(sum(p.values()), 4))
     out["headline_queries_cold_total_samples"] = totals
+    out["headline_queries_cold_min_total_sec"] = min(totals)
     out["cold_probe_missing"] = missing
     out["cold_samples"] = 1 + len(extras)
 
@@ -268,6 +270,10 @@ def main() -> None:
         # mostly-untouched code while warm MINS held) is now readable
         # as dispersion from the artifact alone.
         "cold_samples": 1,  # updated below once the probes land
+        # least per-sample cold total: the round-over-round cold
+        # comparator (box noise only ever adds time, as for the warm
+        # mins below); the in-process total until a probe folds in
+        "headline_queries_cold_min_total_sec": round(sum(cold.values()), 4),
         # sum-of-mins: the most variance-robust total (box noise only
         # ever ADDS time to a warm run, so the min is the cleanest
         # per-query estimate and its sum the cleanest total trend)

@@ -29,16 +29,6 @@ TABLES = (
     "embeddings",
 )
 
-# Fixed-cardinality tables (5 regions / 25 nations at ANY scale
-# factor): always safe to broadcast. Everything else — including
-# customer/part/supplier — scales with SF (the r2 lesson that removed
-# the static broadcast hints: at 100 TB those are multi-TB tables),
-# so broadcast decisions for them belong to AQE's runtime sizing, not
-# a static list.
-FIXED_SIZE_TABLES = ("region", "nation")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

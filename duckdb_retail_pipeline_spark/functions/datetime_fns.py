@@ -17,7 +17,7 @@ the row path), so they stay inside whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -63,40 +63,14 @@ def month_name(col: Column | str) -> Column:
     return F.date_format(_c(col), "MMMM")
 
 
-def date_spine(
-    spark: SparkSession,
-    start,
-    end,
-    step: str = "interval 1 day",
-    col_name: str = "date",
-) -> DataFrame:
-    """Dense date series [start, end] — the Spark-native equivalent of
-    DuckDB ``unnest(generate_series(DATE a, DATE b, INTERVAL '1 day'))``
-    (reference src/models/dimensions.py:68-72).
-
-    ``sequence`` builds the array on an executor and ``explode`` fans
-    it out; a multi-year daily spine is a few thousand rows —
-    negligible at any scale. For very fine-grained spines (per-second
-    over years) use ``spark.range`` arithmetic instead to avoid one
-    giant array.
-    """
-    return spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.to_date(F.lit(str(start))),
-                F.to_date(F.lit(str(end))),
-                F.expr(step),
-            )
-        ).alias(col_name)
-    )
-
-
 def date_spine_over(df: DataFrame, date_col: str, col_name: str = "date") -> DataFrame:
     """Dense daily spine spanning [min(date_col), max(date_col)] of
-    ``df``, computed without a driver round-trip: the min/max probe is
-    a single-row aggregate and the sequence explodes from it. This is
-    how the reference's probe-then-f-string pattern
-    (src/models/facts.py:169-185) becomes one declarative plan."""
+    ``df``: DuckDB ``unnest(generate_series(lo, hi, INTERVAL '1 day'))``
+    as ``sequence`` + ``explode``, computed without a driver
+    round-trip: the min/max probe is a single-row aggregate and the
+    sequence explodes from it. This is how the reference's
+    probe-then-f-string pattern (src/models/facts.py:169-185) becomes
+    one declarative plan."""
     bounds = df.agg(
         F.min(F.to_date(date_col)).alias("lo"), F.max(F.to_date(date_col)).alias("hi")
     )

@@ -92,17 +92,6 @@ def jaccard(a: Column | str, b: Column | str) -> Column:
     return inter / F.nullif(union, F.lit(0.0))
 
 
-def minhash_signature(shingles: Column | str, num_hashes: int = 16) -> Column:
-    """MinHash signature: array of ``num_hashes`` minima of salted
-    28-bit shingle hashes. Permutation i is (a_i*h + b_i) mod P with
-    fixed odd salts — exact integer math, reproducible in ANSI SQL.
-
-    NOTE: prefer hashing once into a column and calling
-    ``minhash_signature_from_hashes`` — inlining this expression N
-    times recomputes the md5s N times (no cross-expression CSE)."""
-    return minhash_signature_from_hashes(shingle_hashes28(shingles), num_hashes)
-
-
 def shingle_hashes28(shingles: Column | str) -> Column:
     """28-bit md5-derived hash per shingle (the MinHash base)."""
     return F.transform(
@@ -283,7 +272,7 @@ def simhash64_hof(toks: Column | str) -> Column:
     base = F.transform(t, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"))
 
     def bit_vote(b: int):
-        # closure (not default-arg lambda) — see minhash_signature note
+        # closure (not default-arg lambda) — see minhash_from_hashes_hof note
         return lambda acc, h: acc + F.when(
             F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
         ).otherwise(-1)

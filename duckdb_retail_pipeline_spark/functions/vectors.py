@@ -247,21 +247,3 @@ def rademacher_planes(n_planes: int, dim: int) -> list[list[float]]:
         ]
         for p in range(n_planes)
     ]
-
-
-def signed_sum(vec: Column | str, plane: list[float]) -> Column:
-    """Dot product against ONE ±1 hyperplane via the shared ``dot``
-    kernel. Multi-plane consumers (``hyperplane_bands``,
-    ``_bucket_expr``) use ``plane_dots`` instead — same fold, one
-    kernel call for all planes; this single-plane form remains the
-    readable spec of the cross-engine contract below (an explicit
-    per-element chain of adds
-    would work too, but 32 planes × 64 dims of literal chains blow up
-    codegen/driver memory). The fold is a plain left-to-right double
-    accumulation starting at 0.0 — the same element order and IEEE op
-    sequence as DuckDB's ``list_sum(list_transform(list_zip(...)))``,
-    so the sign bit (which tolerates zero divergence) matches the SQL
-    oracle bit-for-bit; tests/test_extensions.py re-verifies the full
-    band keys across engines on real data."""
-    p = F.array(*[F.lit(float(s)) for s in plane])
-    return dot(vec, p)

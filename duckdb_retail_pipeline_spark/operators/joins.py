@@ -1,9 +1,8 @@
 """Join operators.
 
-The reference's joins are all equi-joins against small dimensions
-(SURVEY.md §2.3) — on Spark those must be broadcast-hash joins, so
-``dim_join`` makes the hint explicit rather than trusting the
-threshold. ``asof_join`` is the extension operator Spark lacks
+The reference's dimension equi-joins (SURVEY.md §2.3) are plain
+joins in ``pipeline/facts.py``: AQE sizes them at runtime, with no
+forced broadcast. ``asof_join`` is the extension operator Spark lacks
 natively (the usual workarounds are bucketize or merge_asof); here
 it's the union-window formulation — no cross product, no UDF, scales
 as one shuffle on (key, time).
@@ -13,20 +12,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dim_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str] | Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Fact ⋈ dimension with an explicit broadcast hint — dims stay
-    dim-sized at any SF, so this is always the right physical plan
-    (reference J1/J2/J8, src/models/facts.py:48-50,286,400-401)."""
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def _orderable(dt) -> bool:

@@ -4,129 +4,57 @@ Every implemented operator from SURVEY.md §2 (plus the extension
 surface) is registered here as a QuerySpec: a Spark callable
 ``(spark, sf_dir) -> DataFrame`` twinned with the ANSI-SQL string a
 DuckDB oracle runs on the same parquet tables. ``__spark_entry__``
-re-exports this registry.
+re-exports this registry in driver order: the driver hash-checks the
+first ``WINDOW`` entries each round (ROTATION.md).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import warnings
+
 from duckdb_retail_pipeline_spark.queries.base import REGISTRY, QuerySpec, register
+from duckdb_retail_pipeline_spark.queries import (  # noqa: F401 — importing registers
+    advanced, core, retail, extensions, analytics,
+)
 
-# importing the modules populates REGISTRY via their register() calls
-from duckdb_retail_pipeline_spark.queries import advanced  # noqa: E402,F401
-from duckdb_retail_pipeline_spark.queries import core  # noqa: E402,F401
-from duckdb_retail_pipeline_spark.queries import retail  # noqa: E402,F401
-from duckdb_retail_pipeline_spark.queries import extensions  # noqa: E402,F401
-from duckdb_retail_pipeline_spark.queries import analytics  # noqa: E402,F401
+WINDOW = 50
 
-# -- driver-window prioritization -----------------------------------------
-#
-# The driver's CORRECTNESS gate records the FIRST 50 registry entries
-# (dict insertion order). Registration order therefore decides which
-# of the (currently len(REGISTRY)) registered queries get a hard
-# driver-side oracle row per round. The rotation schedule lives in
-# ROTATION.md at the repo root: never-driver-checked queries enter
-# first; remaining slots hold regression guards for code paths
-# changed since the last green round, then the oldest-green block.
-# Everything outside the window keeps its local DuckDB-oracle pytest
-# row (tests/test_queries_oracle.py runs the WHOLE registry).
-#
-# Round-14 window (see ROTATION.md): CORRECTNESS_r13 landed 50/50
-# (cumulative 149/149, zero dropped/newly-failing per the r13
-# judge). Derived BY SCRIPT at round start — tools/
-# rotation_recount.py 14 reports the r11-green block is exactly 49
-# queries, 3-rounds-stale at r14, plus ONE genuinely free slot
-# (recount exit 0; registry stays 149 of the 150 ceiling).
-# Rule 1, never-checked: none (operator queue empty since x99).
-# Rule 2, diff owes: the ONE free slot goes to x01_dedup_exact —
-# the r13 fingerprint-kernel NULL-isolation change sits under its
-# r12 row (value-identical on every registered corpus, 3-SF +
-# hostile re-verified; the owe was assigned to r14 in ROTATION.md's
-# mid-r13 addendum). x63's matching owe re-enters r15 by rule 3
-# (the q25/x13 value-identical precedent).
-# Rule 3, oldest-green re-entry (49): the full r11-green block,
-# the recount's owed list verbatim.
-# 0 + 1 + 49 = 50. Done-condition: after CORRECTNESS_r14 lands
-# green, the recount must show no registered query's last driver
-# row older than r12 (exit 0). The r12-green block (50) is two
-# rounds old at r14 — invariant intact without re-entry — and is
-# the ENTIRE r15 window by rule 3 (zero free slots; x63's owe is
-# satisfied by its rule-3 re-entry there). Headline queries outside
-# the window are re-verified every round by the local full-registry
-# pytest gate.
-_ROTATED_IN: list[str] = [
-    # never driver-green: none this round (registry at 149/150,
-    # operator queue empty since x99)
-]
-_GUARDS = [
-    # rule-2 free-slot guard: x01's driver row lands on the r13
-    # fingerprint NULL-isolation kernel (the owe recorded in
-    # ROTATION.md's mid-r13 addendum)
-    "x01_dedup_exact",
-    # oldest-green re-entry: the full r11-green block (last row
-    # r11), the rotation_recount owed list verbatim
-    "a01_rollup",
-    "a07_merge_upsert",
-    "a08_scd2_history",
-    "pl01_staging_retail",
-    "pl03_dim_calendar",
-    "pl06_fct_sales",
-    "pl08_fct_sales_eur",
-    "pl09_agg_country_day",
-    "q02_monthly_revenue_by_nation",
-    "q13_weekend_cohort",
-    "q14_date_parts",
-    "q15_forward_fill",
-    "q16_lag_gap_detection",
-    "q17_union_all_checks",
-    "q18_cte_scalar_subquery",
-    "q19_view_over_join",
-    "q20_deterministic_mode",
-    "q22_distinct_dedup",
-    "q23_top_per_group",
-    "q24_between_range_scan",
-    "x09_simhash_pairs",
-    "x23_winnowing_fingerprints",
-    "x26_dedup_clusters",
-    "x32_repetition_filter",
-    "x33_sequence_packing",
-    "x36_decontamination",
-    "x40_robust_stats",
-    "x42_ann_batch_retrieval",
-    "x43_range_join_binned",
-    "x44_bm25_search",
-    "x45_event_funnel",
-    "x46_cohort_retention",
-    "x47_pii_redaction",
-    "x48_salted_join",
-    "x49_data_profiling",
-    "x50_importance_sampling",
-    "x52_token_rarity",
-    "x54_pmi_pairs",
-    "x55_last_touch_attribution",
-    "x57_incremental_agg",
-    "x58_stream_stream_join",
-    "x59_media_resize_grid",
-    "x81_dedup_savings",
-    "x85_stream_stream_left_outer",
-    "x87_bigram_lm_quality",
-    "x88_rrf_hybrid",
-    "x89_ivf_pq_topk",
-    "x96_seasonal_decompose",
-    "x97_pagerank_fixed_point",
-]
-_PRIORITY = _ROTATED_IN + _GUARDS
-if len(_PRIORITY) != 50:  # not an assert: must survive python -O
-    raise RuntimeError(
-        f"driver window must be exactly 50 entries, got {len(_PRIORITY)}; "
-        "update the rotation in queries/__init__.py and ROTATION.md"
-    )
-_missing = [n for n in _PRIORITY if n not in REGISTRY]
-if _missing:
-    raise RuntimeError(f"priority list names missing queries: {_missing}")
 
-_ordered = {n: REGISTRY[n] for n in _PRIORITY}
-_ordered.update({n: s for n, s in sorted(REGISTRY.items()) if n not in _ordered})
-REGISTRY.clear()
-REGISTRY.update(_ordered)
+def last_green_rounds(history_dir: str) -> dict[str, int]:
+    """Query name → last round N whose ``CORRECTNESS_r<N>.json`` row is
+    green: rows and schema match, the hash matches or is null, no error.
+    Other file names are ignored; a malformed file raises."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(history_dir):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname):
+            try:
+                with open(os.path.join(history_dir, fname)) as f:
+                    rows = json.load(f).items()  # a list or scalar has no rows
+            except (ValueError, AttributeError) as exc:
+                raise ValueError(f"{fname}: {exc}") from exc
+            for name, row in rows:
+                ok = isinstance(row, dict) and row.get("rows_match") and row.get("schema_match")
+                if ok and (row.get("hash_match") or row.get("hash_match") is None) and not row.get("err"):
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
-__all__ = ["REGISTRY", "QuerySpec", "register"]
+
+def driver_order(names, last_green: dict[str, int]) -> list[str]:
+    """Never-checked names first, then the stalest green; ties by name.
+    With at most 3 × WINDOW names, none is ever more than 3 rounds stale."""
+    return sorted(names, key=lambda n: (last_green.get(n, 0), n))
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+try:
+    _last_green = last_green_rounds(_REPO)
+except (OSError, ValueError) as exc:
+    warnings.warn(f"driver window falls back to name order: {exc}", stacklevel=2)
+    _last_green = {}
+for _name in driver_order(REGISTRY, _last_green):
+    REGISTRY[_name] = REGISTRY.pop(_name)  # re-insert at the end: dict order is driver order
+
+__all__ = ["REGISTRY", "QuerySpec", "WINDOW", "driver_order", "last_green_rounds", "register"]

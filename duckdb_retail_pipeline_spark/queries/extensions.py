@@ -494,9 +494,10 @@ _X11_BANDS, _X11_BITS = 4, 8
 
 
 def _sql_signed_sum(col: str, plane: list[float]) -> str:
-    """SQL twin of vectors.signed_sum: the same left-to-right double
-    fold over the same element order (list_sum of the per-element
-    products), so the sign bit cannot diverge between engines —
+    """SQL twin of one plane of vectors.plane_dots: the same
+    left-to-right double fold over the same element order (list_sum
+    of the per-element products), so the sign bit cannot diverge
+    between engines —
     re-verified bit-for-bit on real data in tests/test_extensions.py."""
     signs = "[" + ", ".join("1.0" if s > 0 else "-1.0" for s in plane) + "]"
     return (

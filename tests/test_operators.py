@@ -64,7 +64,10 @@ def test_deterministic_mode_tie_break(spark):
 
 
 def test_date_spine_dense_and_bounded(spark):
-    spine = DT.date_spine(spark, "2020-02-27", "2020-03-02")
+    bounds = spark.createDataFrame(
+        [(datetime.date(2020, 3, 2),), (datetime.date(2020, 2, 27),)], "d date"
+    )
+    spine = DT.date_spine_over(bounds, "d")
     dates = [r["date"] for r in spine.orderBy("date").collect()]
     assert dates[0] == datetime.date(2020, 2, 27)
     assert dates[-1] == datetime.date(2020, 3, 2)

@@ -5,8 +5,9 @@ queries that a by-hand recount missed; both verdicts demanded the
 recount be done BY SCRIPT at round start; this is that script,
 persisted instead of re-improvised each round).
 
-For every registered query it derives the last round with a green
-driver row (rows+schema+hash all true), then reports:
+For every registered query it reads the last round with a green
+driver row from ``queries.last_green_rounds`` (the reader that also
+orders the registry), then reports:
 
 - the staleness distribution (how many queries last-green per round);
 - the block that goes 3-rounds-stale NEXT round (rule-3 head — these
@@ -15,7 +16,10 @@ driver row (rows+schema+hash all true), then reports:
   VIOLATION — the r8 failure mode; exactly 3 rounds stale is the
   rule-3 must-re-enter block, not a violation — ROTATION.md);
 - never-checked registrations (rule-1 head);
-- how many genuinely free slots the next window has after rule 3;
+- how many free slots the next window has after rules 1 and 3 (the
+  stalest remaining green queries fill them);
+- the window itself, ``list(REGISTRY)[:WINDOW]``: the entries the
+  driver hash-checks, for audit;
 - a CEILING check (r11 verdict #2): the ≤3-round staleness invariant
   gives every registered query one slot per 3 consecutive rounds, so
   3 × 50 = 150 registered queries is the hard cap — past it the
@@ -25,22 +29,24 @@ driver row (rows+schema+hash all true), then reports:
 
 Usage:
     python tools/rotation_recount.py [CURRENT_ROUND]
-CURRENT_ROUND defaults to the highest CORRECTNESS round found + 1
+CURRENT_ROUND defaults to the latest round with a green row + 1
 (i.e. "we are building the window for the round whose driver check
 has not landed yet").
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-WINDOW = 50
+from duckdb_retail_pipeline_spark.queries import (  # noqa: E402
+    REGISTRY,
+    WINDOW,
+    last_green_rounds,
+)
+
 # 3-round staleness x 50 slots: the arithmetic registration ceiling
 # (r11 verdict #2). rotation_recount FAILS past it — at CEILING+1 the
 # invariant cannot be satisfied by any window schedule, so the error
@@ -51,28 +57,10 @@ CEILING = 3 * WINDOW
 
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    last_green: dict[str, int] = {}
-    rounds = []
-    for f in files:
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json", f).group(1))
-        rounds.append(rnd)
-        data = json.load(open(f))
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and (row.get("hash_match") or row.get("hash_match") is None)
-                and not row.get("err")
-            ):
-                last_green[name] = max(last_green.get(name, 0), rnd)
-
-    latest = max(rounds)
+    # no error handling: a malformed history file must fail this check
+    last_green = last_green_rounds(repo)
+    latest = max(last_green.values(), default=0)
     current = int(sys.argv[1]) if len(sys.argv) > 1 else latest + 1
-
-    from duckdb_retail_pipeline_spark.queries import REGISTRY
 
     registered = list(REGISTRY.keys())
     never = [q for q in registered if q not in last_green]
@@ -81,7 +69,7 @@ def main() -> None:
         if q in last_green:
             dist.setdefault(last_green[q], []).append(q)
 
-    print(f"history: r{min(rounds)}..r{latest}; registry {len(registered)}; "
+    print(f"history: last green round r{latest}; registry {len(registered)}; "
           f"building window for r{current}")
     for rnd in sorted(dist):
         stale = current - rnd
@@ -99,9 +87,10 @@ def main() -> None:
     owed = [q for rnd, qs in dist.items() if current - rnd >= 3 for q in qs]
     free = WINDOW - len(owed) - len(never)
     print(f"rule-3 owed this window: {len(owed)}; rule-1: {len(never)}; "
-          f"genuinely free slots (guards + new registrations): {free}")
+          f"free slots (stalest green fill them): {free}")
     if owed:
         print("owed list:", ", ".join(sorted(owed)))
+    print(f"window (first {WINDOW} registry entries):", ", ".join(registered[:WINDOW]))
     if len(registered) > CEILING:
         print(f"CEILING EXCEEDED: {len(registered)} registered > "
               f"{CEILING} (= 3-round staleness x {WINDOW} slots); the "
