@@ -26,10 +26,9 @@ WARMUP_DIR = "/root/testdata/sf0.001"
 # replicated cold measurement (r13 verdict #4): cold is
 # definitionally ONE sample per process (the first target-SF pass
 # builds the session memos; later passes are warm), so extra cold
-# samples need a fresh session each — taken via --cold-probe
-# subprocesses below. Default 2 keeps every per-round artifact
-# carrying cold dispersion; 1 restores the r13 single-sample run.
-COLD_SAMPLES = max(1, int(os.environ.get("SPARK_GRAFT_COLD_SAMPLES", "2")))
+# samples need a fresh session each — taken via one --cold-probe
+# subprocess below, so every artifact carries cold dispersion.
+COLD_SAMPLES = 2
 
 
 def _steal_jiffies() -> tuple[int, int]:
@@ -63,19 +62,21 @@ def _calibrate_s() -> float:
     return round(time.perf_counter() - t0, 4)
 
 
-def _cold_probe() -> None:
-    """Subprocess mode (--cold-probe): the bench's exact cold
-    methodology — one untimed sf0.001 JIT pass, then ONE timed pass
-    per headline query at the target SF in a FRESH session — and
-    nothing else. Prints one JSON line {"cold_probe": {...}} for the
-    parent to fold into queries_cold_samples. Exists because cold is
-    one-sample-per-process by construction (see COLD_SAMPLES)."""
-    spark = get_spark(app_name="bench-cold-probe")
+def _cold_pass(spark) -> tuple[dict[str, float], list[str]]:
+    """The bench's cold methodology: one untimed sf0.001 pass to
+    JIT-compile codegen paths, then ONE timed pass per headline query
+    at the target SF. Returns (per-query cold seconds, names whose
+    target-SF pass failed).
+
+    The tiny-SF pass is skipped when the TARGET is the tiny SF: it
+    would fill the per-(session, dataset) memos and the cold numbers
+    would record cache hits."""
     headline = {n: s for n, s in REGISTRY.items() if s.headline}
     dirs = (WARMUP_DIR, SF_DIR)
     if os.path.realpath(WARMUP_DIR) == os.path.realpath(SF_DIR):
         dirs = (SF_DIR,)
     cold: dict[str, float] = {}
+    cold_failed: list[str] = []
     for warm_dir in dirs:
         for name, spec in sorted(headline.items()):
             try:
@@ -84,7 +85,27 @@ def _cold_probe() -> None:
                 if warm_dir == SF_DIR:
                     cold[name] = round(time.perf_counter() - t0, 4)
             except Exception as exc:  # noqa: BLE001
-                print(f"cold-probe {name} failed: {exc}", file=sys.stderr)
+                print(f"warmup {name} failed: {exc}", file=sys.stderr)
+                if warm_dir == SF_DIR:
+                    # a query whose COLD pass dies (its memo build
+                    # OOMs/times out) but whose warm passes succeed
+                    # off the partially-built state would silently
+                    # SHRINK the cold total — reading as a build-cost
+                    # speedup, the exact failure mode the cold line
+                    # exists to detect; flag it as loudly as a warm
+                    # failure
+                    cold_failed.append(name)
+    return cold, cold_failed
+
+
+def _cold_probe() -> None:
+    """Subprocess mode (--cold-probe): ``_cold_pass`` in a FRESH
+    session and nothing else. Prints one JSON line {"cold_probe":
+    {...}} for the parent to fold into queries_cold_samples. Exists
+    because cold is one-sample-per-process by construction (see
+    COLD_SAMPLES)."""
+    spark = get_spark(app_name="bench-cold-probe")
+    cold, _ = _cold_pass(spark)
     print(json.dumps({"cold_probe": cold}))
     spark.stop()
 
@@ -182,32 +203,7 @@ def main() -> None:
     # number still observes the underlying operator — a regression
     # in the expensive compute shows up in cold even when every warm
     # pass is a cache hit (r6 ADVICE).
-    cold: dict[str, float] = {}
-    cold_failed: list[str] = []
-    # skip the tiny-SF JIT pass when the TARGET is the tiny SF: the
-    # warmup would fill the per-(session, dataset) memos and the
-    # "cold" numbers below would record cache hits
-    dirs = (WARMUP_DIR, SF_DIR)
-    if os.path.realpath(WARMUP_DIR) == os.path.realpath(SF_DIR):
-        dirs = (SF_DIR,)
-    for warm_dir in dirs:
-        for name, spec in sorted(headline.items()):
-            try:
-                t0 = time.perf_counter()
-                spec.fn(spark, warm_dir).count()
-                if warm_dir == SF_DIR:
-                    cold[name] = round(time.perf_counter() - t0, 4)
-            except Exception as exc:  # noqa: BLE001
-                print(f"warmup {name} failed: {exc}", file=sys.stderr)
-                if warm_dir == SF_DIR:
-                    # a query whose COLD pass dies (its memo build
-                    # OOMs/times out) but whose warm passes succeed
-                    # off the partially-built state would silently
-                    # SHRINK the cold total — reading as a build-cost
-                    # speedup, the exact failure mode the cold line
-                    # exists to detect; flag it as loudly as a warm
-                    # failure
-                    cold_failed.append(name)
+    cold, cold_failed = _cold_pass(spark)
 
     # median of 5 timed passes per query: single-pass numbers showed
     # ±50% run-to-run noise on the join-heavy queries (x66 measured
@@ -294,10 +290,9 @@ def main() -> None:
     # never contend with the in-process measurement): each probe is a
     # fresh session in a subprocess running the identical
     # warmup+first-pass methodology
-    if COLD_SAMPLES > 1:
-        extras = _extra_cold_samples(COLD_SAMPLES - 1)
-        if extras:
-            _fold_cold_probes(out, cold, headline, extras)
+    extras = _extra_cold_samples(COLD_SAMPLES - 1)
+    if extras:
+        _fold_cold_probes(out, cold, headline, extras)
 
     steal1, jiff1 = _steal_jiffies()
     # fraction of the run's cpu-time the hypervisor gave to someone

@@ -34,29 +34,7 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def ensure_session_conventions(spark: SparkSession) -> None:
-    """Idempotent session guard applied on every table load: the
-    driver may hand us a session it built itself, and date/timestamp
-    semantics (and therefore the DuckDB oracle comparison) require
-    the UTC session timezone.
-
-    ``nanosAsLong`` is part of the same contract and set HERE, not
-    ad-hoc at the first events read: it changes the schema every
-    later parquet read infers for TIMESTAMP(NANOS) columns, so
-    setting it lazily made a session's schemas depend on whether
-    events happened to load first. Under the contract it is ALWAYS
-    on — every nanos column in this engine reads as bigint and goes
-    through normalize_event_ts (exact ns→µs integer division)."""
-    try:
-        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001 — never fail a read over a conf probe
-        pass
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_session_conventions(spark)
     if name == "events":
         return load_events(spark, sf_dir)
     return _table_memo(spark, sf_dir, name, lambda: spark.read.parquet(table_path(sf_dir, name)))
@@ -79,10 +57,20 @@ def _table_memo(spark, sf_dir, tag, build):
     staleness contract build_layer relies on. At 100 TB the
     equivalent driver cost is the partitioned-table file listing,
     which this memo likewise pays once per session instead of once
-    per query."""
-    from duckdb_retail_pipeline_spark.memo import dataset_memo
+    per query.
 
-    return dataset_memo(spark, sf_dir, f"table:{tag}", build)
+    The build is the session's first read of the table and the only
+    point where its parquet schema is inferred, so it applies the
+    session contract (session.RUNTIME_CONFS) first: the driver may hand
+    over a session it built itself. A memo hit makes no conf call."""
+    from duckdb_retail_pipeline_spark.memo import dataset_memo
+    from duckdb_retail_pipeline_spark.session import tune_for_session
+
+    def first_read():
+        tune_for_session(spark)
+        return build()
+
+    return dataset_memo(spark, sf_dir, f"table:{tag}", first_read)
 
 
 def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -96,8 +84,8 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     - ``timestamp_ntz``: parquet TIMESTAMP(µs, isAdjustedToUTC=false)
       — cast to TIMESTAMP, which interprets the naive value in the
       session timezone. Exact under the pinned-UTC session
-      (session.py / ensure_session_conventions), matching the
-      oracle's epoch() semantics on the same naive values.
+      (session.RUNTIME_CONFS), matching the oracle's epoch()
+      semantics on the same naive values.
     - ``timestamp``: already LTZ — no-op.
 
     The single normalization point for batch load, streaming read,
@@ -117,9 +105,8 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with a usable TIMESTAMP (LTZ) ``ts`` regardless of the
     parquet layout — see normalize_event_ts. Direct callers exist
-    (x31's batch twin), so the conventions guard runs here too, not
-    only via load_table."""
-    ensure_session_conventions(spark)
+    (x31's batch twin); the session contract applies here through the
+    same table memo as load_table."""
     return _table_memo(
         spark,
         sf_dir,

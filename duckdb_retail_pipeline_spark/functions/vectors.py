@@ -78,16 +78,7 @@ def _build_arrow_kernels():
             acc = acc + A[:, i] * B[:, i]
         return acc
 
-    def fold_rows_sq(A, B):
-        # Same fold for squared differences (l2): acc + (d * d) with
-        # d = a_i − b_i — the zip_with (x−y)*(x−y) sequence.
-        acc = np.zeros(A.shape[0], dtype=np.float64)
-        for i in range(A.shape[1]):
-            d = A[:, i] - B[:, i]
-            acc = acc + d * d
-        return acc
-
-    def pairwise(a, b, fold):
+    def pairwise(a, b):
         av, bv = a.to_numpy(), b.to_numpy()
         n = len(av)
         out = np.full(n, np.nan, dtype=np.float64)
@@ -112,7 +103,7 @@ def _build_arrow_kernels():
                 # registered datasets) — stack without per-row indexing
                 A = np.vstack(av).astype(np.float64, copy=False)
                 B = np.vstack(bv).astype(np.float64, copy=False)
-                return pd.Series(fold(A, B))
+                return pd.Series(fold_rows(A, B))
             for length in np.unique(lens):
                 if length < 0:
                     continue
@@ -122,28 +113,24 @@ def _build_arrow_kernels():
                     continue
                 A = np.vstack([av[i] for i in idx]).astype(np.float64, copy=False)
                 B = np.vstack([bv[i] for i in idx]).astype(np.float64, copy=False)
-                out[idx] = fold(A, B)
+                out[idx] = fold_rows(A, B)
         # NaN → NULL on the Arrow return path, matching HOF NULL rows
         return pd.Series(out)
 
     @pandas_udf(DoubleType())
     def arrow_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pairwise(a, b, fold_rows)
+        return pairwise(a, b)
 
     @pandas_udf(DoubleType())
     def arrow_self_dot(a: pd.Series) -> pd.Series:
-        return pairwise(a, a, fold_rows)
+        return pairwise(a, a)
 
-    @pandas_udf(DoubleType())
-    def arrow_l2sq(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pairwise(a, b, fold_rows_sq)
-
-    return arrow_dot, arrow_self_dot, arrow_l2sq
+    return arrow_dot, arrow_self_dot
 
 
 # created once per process; one shared UDF object per kernel keeps
 # repeated calls plan-canonicalization-equal
-_arrow_dot, _arrow_self_dot, _arrow_l2sq = _build_arrow_kernels()
+_arrow_dot, _arrow_self_dot = _build_arrow_kernels()
 
 
 def plane_dots(vec: Column | str, planes: list[list[float]]) -> Column:

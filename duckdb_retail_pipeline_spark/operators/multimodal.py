@@ -172,20 +172,6 @@ def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan* — emits (media_id, frame_idx) rows
-    for frames a decoder would extract; the decode itself is the
-    stubbed codec. Demonstrates the explode-based fan-out shape that
-    keeps frame extraction parallel."""
-    est_frames = (F.col("n_bytes") / F.lit(1000)).cast("long")
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(est_frames - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
 def resize_image(content: bytes, width: int, height: int, fake: bool = False) -> bytes:
     """Resize codec stub — the real path would be
     ``PIL.Image.open(...).resize((width, height))``; imaging libs are

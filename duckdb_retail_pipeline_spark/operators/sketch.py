@@ -112,13 +112,6 @@ def _make_mg_summarize(col: str, capacity: int):
     return summarize
 
 
-def _mg_summarize(
-    batches: Iterator[pd.DataFrame], col: str, capacity: int
-) -> Iterator[pd.DataFrame]:
-    """Test-facing convenience over the closure factory."""
-    return _make_mg_summarize(col, capacity)(batches)
-
-
 def mg_candidates(
     tokens: DataFrame, col: str = "token", capacity: int = 400
 ) -> DataFrame:

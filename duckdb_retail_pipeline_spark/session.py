@@ -21,16 +21,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] threads and the default shuffle partition count
+_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# The runtime-settable convention/perf confs, in ONE place: get_spark
-# applies them at build time, tune_for_session applies them to an
-# externally-owned session. Two hand-maintained copies had already
-# drifted (tune_for_session was missing maxPartitionBytes, so
-# driver-owned sessions scanned each single-file table on 1-2 of 32
-# cores under the 128 MB default).
+# The session contract: every runtime-settable convention/perf conf,
+# in ONE place. get_spark applies it at build time; tune_for_session
+# applies it to an externally-owned session, and catalog's table memo
+# calls tune_for_session on the session's first read of each table
+# (the first plan over it), so no other module sets a contract conf.
+# Hand-kept copies drifted twice (tune_for_session was missing
+# maxPartitionBytes; the catalog's per-read guard kept only the
+# timezone and nanosAsLong).
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
+    # changes the schema every parquet read infers for
+    # TIMESTAMP(NANOS) columns, so it must hold before the first read:
+    # set lazily at the first events read, a session's schemas would
+    # depend on which table happened to load first. Under the contract
+    # every nanos column reads as bigint and goes through
+    # catalog.normalize_event_ts (exact ns→µs integer division).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # ANSI semantics are part of the ENGINE CONTRACT, not an ambient
     # default (r12): the ANSI-conditioned behaviors are what the
     # oracles and probes verify — try_element_at NULLs where
@@ -94,14 +104,10 @@ def get_spark(
                 return existing
         except Exception:  # noqa: BLE001 — dead gateway → build fresh
             pass
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .master(master or f"local[{_CPUS}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _CPUS))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
@@ -116,9 +122,11 @@ def get_spark(
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable confs to an externally-owned session
-    (the driver hands us one in ``__spark_entry__.entry``). Only confs
-    that Spark allows changing after startup are touched — the one
-    shared RUNTIME_CONFS list, so this cannot drift from get_spark."""
+    (the driver hands us one in ``__spark_entry__.entry``; catalog's
+    table memo calls this on a session's first read of a table, the
+    streaming reader on every stream read). Only confs that Spark
+    allows changing after startup are touched — the one shared
+    RUNTIME_CONFS list, so this cannot drift from get_spark."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

@@ -39,18 +39,15 @@ def _read_stream(
     ``normalize`` routes event time through the same
     catalog.normalize_event_ts as the batch path (``ts`` always
     TIMESTAMP LTZ — a watermark on TIMESTAMP_NTZ is an
-    AnalysisException) and pins the session conventions FIRST: the
-    NTZ→LTZ cast interprets naive event time in the session
-    timezone, and a stream read might be the session's first table
-    touch."""
-    from ..catalog import ensure_session_conventions, normalize_event_ts
+    AnalysisException). Every stream read applies the session contract
+    FIRST (session.tune_for_session): the schema probe must see
+    nanosAsLong, the NTZ→LTZ cast interprets naive event time in the
+    session timezone, and a stream read might be the session's first
+    table touch."""
+    from ..catalog import normalize_event_ts
+    from ..session import tune_for_session
 
-    # unconditionally, for EVERY stream read (r11 review): the
-    # nanosAsLong conf was re-set inline here — the exact ad-hoc
-    # duplication catalog.py centralizes — and the normalize=False
-    # path mutated the shared session conf without the tz pin or the
-    # read-only-session guard the catalog applies
-    ensure_session_conventions(spark)
+    tune_for_session(spark)
     # Directory-aware source resolution (r13 probe wave): at scale a
     # table is a DIRECTORY of part files, not one file — but
     # pathGlobFilter matches FILE names only, so a directory named

@@ -17,9 +17,6 @@ def test_bench_cli_emits_driver_contract_json():
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_CPUS="8",
-        # pin the r14 replicated-cold default shape (one fresh-session
-        # subprocess probe on top of the in-process cold pass)
-        SPARK_GRAFT_COLD_SAMPLES="2",
         # a 2g heap for this process and the cold probe it spawns (the
         # probe inherits this environment), so neither can over-commit
         # the box beside the suite's own JVM

@@ -319,3 +319,23 @@ def test_money_sum_equals_decimal_sum_property(spark, duck):
         assert duck_got == want
 
     prop()
+
+
+def test_first_table_read_applies_session_contract(spark, sf_dir, tmp_path):
+    """A session the engine did not build (a driver's own; here a new
+    session with ANSI off, a non-UTC timezone and nanosAsLong off) gets
+    the whole session contract at its first read of a table, before any
+    plan over it: every RUNTIME_CONFS key reads back its contract value.
+    The dataset is a fresh copy, so the read is a memo build."""
+    import shutil
+
+    from duckdb_retail_pipeline_spark.catalog import load_table, table_path
+    from duckdb_retail_pipeline_spark.session import RUNTIME_CONFS
+
+    shutil.copy(table_path(sf_dir, "region"), table_path(str(tmp_path), "region"))
+    foreign = spark.newSession()
+    foreign.conf.set("spark.sql.ansi.enabled", "false")
+    foreign.conf.set("spark.sql.session.timeZone", "America/New_York")
+    foreign.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    assert load_table(foreign, str(tmp_path), "region").count() > 0
+    assert {k: foreign.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS

@@ -250,14 +250,6 @@ def test_resize_fake_short_blob_skips_empty_cells():
     assert M.resize_image(b"", 8, 1, fake=True) == b""
 
 
-def test_frame_sample_plan(spark, sf_dir):
-    media = M.documents_as_media(tbl(spark, sf_dir, "documents").limit(5))
-    plan = M.frame_sample_plan(media, every_n=30)
-    rows = plan.collect()
-    assert len(rows) >= 5  # at least frame 0 per media
-    assert all(r["frame_idx"] % 30 == 0 for r in rows)
-
-
 def test_grouped_ols_exact_line(spark, sf_dir):
     """Points lying exactly on y = 300 + 50x (cents) must recover
     slope 0.5 and intercept 3.0 (GBP units) with zero residual."""

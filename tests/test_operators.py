@@ -168,7 +168,6 @@ def test_arrow_dot_kernel_bit_identical_to_hof(spark, sf_dir):
         V.norm_hof("embedding").alias("h_norm"),
         V._arrow_dot(F.col("embedding"), F.col("qvec")).alias("a_pair"),
         V.dot_hof(F.col("embedding"), F.col("qvec")).alias("h_pair"),
-        V._arrow_l2sq(F.col("embedding"), F.col("qvec")).alias("a_l2"),
     )
     bad = chk.filter(
         ~F.col("a_plane").eqNullSafe(F.col("h_plane"))
@@ -1867,7 +1866,7 @@ def test_mg_decrement_subtracts_counterexample():
     true top-1 is t. Correct MG keeps t in the candidates."""
     import pandas as pd
 
-    from duckdb_retail_pipeline_spark.operators.sketch import _mg_summarize
+    from duckdb_retail_pipeline_spark.operators.sketch import _make_mg_summarize
 
     batches = [
         pd.DataFrame({"token": ["A"] * 52 + ["B"] * 52 + ["C"] * 52}),
@@ -1875,7 +1874,7 @@ def test_mg_decrement_subtracts_counterexample():
         pd.DataFrame({"token": ["t"] * 51}),
         pd.DataFrame({"token": ["A"] * 48}),
     ]
-    out = next(_mg_summarize(iter(batches), "token", capacity=3))
+    out = next(_make_mg_summarize("token", 3)(iter(batches)))
     cands = set(out["token"])
     # every token with count > N/(capacity+1) = 76.5 must survive
     assert "t" in cands, cands
@@ -1958,19 +1957,19 @@ def test_mg_decrement_at_capacity_plus_one_boundary():
     undercount bound."""
     import pandas as pd
 
-    from duckdb_retail_pipeline_spark.operators.sketch import _mg_summarize
+    from duckdb_retail_pipeline_spark.operators.sketch import _make_mg_summarize
 
     # capacity+1 == 4 distinct: counts [5,4,3,1]; delta = 1 → survivors
     # A=4, B=3, C=2 (all tokens with count > N/(m+1) = 13/4 survive)
     batch = pd.DataFrame(
         {"token": ["A"] * 5 + ["B"] * 4 + ["C"] * 3 + ["D"]}
     )
-    out = next(_mg_summarize(iter([batch]), "token", capacity=3))
+    out = next(_make_mg_summarize("token", 3)(iter([batch])))
     assert set(out["token"]) == {"A", "B", "C"}
 
     # exactly capacity distinct: no decrement, everything survives
     batch2 = pd.DataFrame({"token": ["A"] * 5 + ["B"] * 4 + ["C"] * 3})
-    out2 = next(_mg_summarize(iter([batch2]), "token", capacity=3))
+    out2 = next(_make_mg_summarize("token", 3)(iter([batch2])))
     assert set(out2["token"]) == {"A", "B", "C"}
 
 
