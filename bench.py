@@ -110,6 +110,21 @@ def _cold_probe() -> None:
     spark.stop()
 
 
+def _end_jvm(spark) -> None:
+    """Stop ``spark`` and end its JVM. ``spark.stop()`` alone leaves the
+    py4j gateway JVM running, heap committed, until this process exits;
+    that JVM exits when its stdin closes (PySpark's parent-death pipe),
+    which returns the heap now."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway.proc is not None:  # None when attached to a given gateway port
+        gateway.shutdown()
+        gateway.proc.stdin.close()
+        gateway.proc.wait(timeout=120)
+
+
 def _parse_cold_probe(stdout: str) -> dict[str, float] | None:
     """The per-query cold dict in a --cold-probe subprocess's stdout:
     the payload is the line whose JSON object has a ``cold_probe``
@@ -289,7 +304,11 @@ def main() -> None:
     # replicated cold samples (after the warm timing so the probes
     # never contend with the in-process measurement): each probe is a
     # fresh session in a subprocess running the identical
-    # warmup+first-pass methodology
+    # warmup+first-pass methodology. Nothing below uses Spark, and the
+    # probe's JVM takes the same default heap, so this process's JVM
+    # ends first: two live driver heaps at once can exceed the box's
+    # memory.
+    _end_jvm(spark)
     extras = _extra_cold_samples(COLD_SAMPLES - 1)
     if extras:
         _fold_cold_probes(out, cold, headline, extras)
@@ -317,7 +336,6 @@ def main() -> None:
     if cold_failed:
         out["cold_failed"] = sorted(cold_failed)
     print(json.dumps(out))
-    spark.stop()
     if failed or cold_failed:
         sys.exit(1)
 

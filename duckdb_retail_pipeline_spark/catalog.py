@@ -73,9 +73,9 @@ def _table_memo(spark, sf_dir, tag, build):
     return dataset_memo(spark, sf_dir, f"table:{tag}", first_read)
 
 
-def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TIMESTAMP (LTZ) from any of
-    the source layouts the testdata has shipped over time:
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` event-time column to TIMESTAMP (LTZ) from
+    any of the source layouts the testdata has shipped over time:
 
     - ``bigint``: parquet TIMESTAMP(NANOS) read as raw longs via
       spark.sql.legacy.parquet.nanosAsLong — integer-divide to µs
@@ -94,11 +94,11 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    ts_type = df.schema[ts_col].dataType.simpleString()
+    ts_type = df.schema["ts"].dataType.simpleString()
     if ts_type == "bigint":
-        return df.withColumn(ts_col, F.timestamp_micros(F.expr(f"`{ts_col}` DIV 1000")))
+        return df.withColumn("ts", F.timestamp_micros(F.expr("`ts` DIV 1000")))
     if ts_type == "timestamp_ntz":
-        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -23,6 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+#: the documents table's id and text columns: the one corpus every
+#: text operator serves
+DOC_ID = "doc_id"
+TEXT_COL = "text"
+
 # Fixed salts for the MinHash permutation family — (a*h + b) mod P on
 # a shared **28-bit** base hash (first 7 md5 hex chars). 28 bits keeps
 # a*h + b well inside signed 64-bit for small salts, which matters
@@ -62,18 +67,18 @@ def bpe_ish_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(_c(col), F.lit(BPE_ISH_PATTERN), 0)
 
 
-def word_shingles(col: Column | str, n: int = 3, sep: str = " ") -> Column:
-    """Distinct word n-grams, each joined with ``sep``."""
+def word_shingles(col: Column | str, n: int = 3) -> Column:
+    """Distinct word n-grams, each joined with a space."""
     toks = tokens(col)
     idx = F.when(
         F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - F.lit(n))
     ).otherwise(F.array().cast("array<int>"))
     return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(sep, F.slice(toks, i + 1, n)))
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
     )
 
 
-def word_ngrams_all(col: Column | str, n: int = 2, sep: str = " ") -> Column:
+def word_ngrams_all(col: Column | str, n: int = 2) -> Column:
     """ALL word n-gram occurrences (non-distinct, in order) — the
     repetition metrics need occurrence counts, not the set that
     ``word_shingles`` returns for dedup."""
@@ -81,7 +86,7 @@ def word_ngrams_all(col: Column | str, n: int = 2, sep: str = " ") -> Column:
     idx = F.when(
         F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - F.lit(n))
     ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.concat_ws(sep, F.slice(toks, i + 1, n)))
+    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
 
 
 def jaccard(a: Column | str, b: Column | str) -> Column:

@@ -46,6 +46,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
+#: the embeddings table's id and vector columns: the one corpus every
+#: vector operator serves
+VEC_ID = "vec_id"
+VEC_COL = "embedding"
+
 
 def _d(col: Column | str) -> Column:
     c = col if isinstance(col, Column) else F.col(col)

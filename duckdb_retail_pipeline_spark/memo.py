@@ -13,16 +13,19 @@ Three entry points share three private pieces:
   while its signature holds and otherwise unpersisted and replaced, so a
   store is bounded by its keys, not by the number of regenerations.
 
-``dataset_memo`` keys on (applicationId, dataset dir, tag) and signs the
-dir's parquet files; ``memoized_count`` keys on (applicationId, canonical
-plan) and signs the plan's input files. A stopped session changes
-applicationId, so nothing serves across applications.
+``dataset_memo`` keys on (session, dataset dir, tag) and signs the dir's
+parquet files; ``memoized_count`` keys on (session, canonical plan) and
+signs the plan's input files. The session is the SparkSession object
+itself (``_session_key``), not its applicationId: ``spark.newSession()``
+shares the SparkContext and so the applicationId, but has its own SQL
+conf, and a frame built in one session runs under that session's conf.
+So no entry serves a session other than the one that built it.
 
 The locks are in-process (threading) on purpose. Every key carries the
-applicationId and every value is a process-local object (a DataFrame, a
-cache handle), so two processes never share an entry and there is nothing
-for a cross-process lock to protect. The cross-process shared state is the
-warehouse directory, whose single-writer contract lives at
+session identity and every value is a process-local object (a DataFrame,
+a cache handle), so two processes never share an entry and there is
+nothing for a cross-process lock to protect. The cross-process shared
+state is the warehouse directory, whose single-writer contract lives at
 ``operators/scale.py::write_bucketed``.
 
 Every staleness probe is O(backing files) driver-side stats per call:
@@ -42,14 +45,22 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-# (appId, abspath(sf_dir), tag) -> (dataset signature, value)
-_MEMO: dict[tuple[str, str, str], tuple[frozenset, Any]] = {}
-# (appId, semanticHash) -> (input signature, row count)
-_COUNT_MEMO: dict[tuple[str, int], tuple[frozenset, int]] = {}
+# (session, abspath(sf_dir), tag) -> (dataset signature, value)
+_MEMO: dict[tuple[int, str, str], tuple[frozenset, Any]] = {}
+# (session, semanticHash) -> (input signature, row count)
+_COUNT_MEMO: dict[tuple[int, int], tuple[frozenset, int]] = {}
 
 _LOCKS_GUARD = threading.Lock()
 _LOCKS: dict[Hashable, threading.Lock] = {}
 _WARNED_REMOTE = False
+
+
+def _session_key(spark: SparkSession) -> int:
+    """The memo's session identity: the object ``rotating_persist`` also
+    compares. Every DataFrame value holds its session alive, so the id
+    cannot be reused while such an entry lives; any other value is a pure
+    function of the signed files, so a reused id serves a correct one."""
+    return id(spark)
 
 
 def _lock(key: Hashable) -> threading.Lock:
@@ -203,7 +214,7 @@ def memoized_count(df: DataFrame) -> int:
     sig = _input_signature(df)
     if sig is None:
         return df.count()
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+    key = (_session_key(df.sparkSession), df.semanticHash())
     return _get_or_build(_COUNT_MEMO, key, sig, df.count)
 
 
@@ -216,5 +227,5 @@ def dataset_memo(
     """Get-or-build ``build()`` memoized per (session, dataset, tag),
     invalidated when the dataset's parquet files change on disk."""
     path = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, path, tag)
+    key = (_session_key(spark), path, tag)
     return _get_or_build(_MEMO, key, _dir_signature(path), build)

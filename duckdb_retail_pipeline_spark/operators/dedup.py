@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import text as T
 from duckdb_retail_pipeline_spark.functions import vectors as V
+from duckdb_retail_pipeline_spark.functions.text import DOC_ID, TEXT_COL
+from duckdb_retail_pipeline_spark.functions.vectors import VEC_COL, VEC_ID
 from duckdb_retail_pipeline_spark.memo import memoized_count, rotating_persist
 from duckdb_retail_pipeline_spark.plans.explain import plan_bytes
 
@@ -122,27 +124,21 @@ def _spread(df: DataFrame, key: str, heavy: bool = False) -> DataFrame:
     return df.repartition(target, key)
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep the lowest-id document per canonical fingerprint.
     One shuffle on the fingerprint; map-side partial min."""
     return (
-        _spread(docs, id_col)
-        .select(F.col(id_col), T.fingerprint(text_col).alias("fp"))
+        _spread(docs, DOC_ID)
+        .select(F.col(DOC_ID), T.fingerprint(TEXT_COL).alias("fp"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min(DOC_ID).alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def prefix_index(
-    docs: DataFrame,
-    threshold: float,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
+def prefix_index(docs: DataFrame, threshold: float) -> tuple[DataFrame, DataFrame]:
     """The AllPairs prefix index: returns ``(d, pre)`` where ``d`` is
     the persisted (id, distinct-shingle-set) table and ``pre`` is the
     exploded (id, prefix-shingle) index — each document contributes
@@ -150,35 +146,29 @@ def prefix_index(
     ascending-document-frequency order, which is exactly the set that
     guarantees any Jaccard ≥ t pair shares at least one index entry."""
     d = rotating_persist(
-        _spread(docs, id_col).select(
-            F.col(id_col), T.word_shingles(text_col, n).alias("sh")
+        _spread(docs, DOC_ID).select(
+            F.col(DOC_ID), T.word_shingles(TEXT_COL, 3).alias("sh")
         ),
         _PREFIX_D_SLOT,
     )
-    ex = d.select(id_col, F.explode("sh").alias("s"))
+    ex = d.select(DOC_ID, F.explode("sh").alias("s"))
     freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("cnt"))
     # per-doc shingles in global (cnt, s) order; array_sort on the
     # struct normalizes collect_list's nondeterministic arrival order
     ordered = (
         ex.join(freq, "s")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.array_sort(F.collect_list(F.struct("cnt", "s"))).alias("op"))
-        .select(id_col, F.transform("op", lambda x: x["s"]).alias("os"))
+        .select(DOC_ID, F.transform("op", lambda x: x["s"]).alias("os"))
     )
     plen = (
         F.size("os") - F.ceil(F.size("os") * F.lit(threshold)) + F.lit(1)
     ).cast("int")
-    pre = ordered.select(id_col, F.explode(F.slice("os", F.lit(1), plen)).alias("s"))
+    pre = ordered.select(DOC_ID, F.explode(F.slice("os", F.lit(1), plen)).alias("s"))
     return d, pre
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Global exact word-n-gram Jaccard ≥ threshold pairs via prefix
     filtering (the AllPairs/PPJoin family — Bayardo et al. WWW'07,
     Xiao et al. WWW'08).
@@ -196,17 +186,17 @@ def ngram_jaccard_pairs(
     Exact set-Jaccard then verifies candidates. The document-frequency
     aggregation is one extra corpus-sized shuffle — the standard
     AllPairs indexing pass."""
-    d, pre = prefix_index(docs, threshold, n, id_col=id_col, text_col=text_col)
-    pa = pre.select(F.col(id_col).alias("id_a"), "s")
-    pb = pre.select(F.col(id_col).alias("id_b"), "s")
+    d, pre = prefix_index(docs, threshold)
+    pa = pre.select(F.col(DOC_ID).alias("id_a"), "s")
+    pb = pre.select(F.col(DOC_ID).alias("id_b"), "s")
     cand = (
         pa.join(pb, "s", "inner")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = d.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = d.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    sh_a = d.select(F.col(DOC_ID).alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = d.select(F.col(DOC_ID).alias("id_b"), F.col("sh").alias("sh_b"))
     return _pair_dedup(
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
@@ -222,9 +212,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
     num_hashes: int = 16,
     bands: int = 8,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     verify: str = "auto",
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with exact Jaccard.
@@ -294,8 +281,8 @@ def minhash_lsh_pairs(
     # two verification re-joins — at scale this is the materialized
     # signature table every LSH dedup pipeline keeps.
     base = rotating_persist(
-        _spread(docs, id_col, heavy=True)
-        .select(F.col(id_col), T.word_shingles(text_col, shingle_n).alias("sh"))
+        _spread(docs, DOC_ID, heavy=True)
+        .select(F.col(DOC_ID), T.word_shingles(TEXT_COL, 3).alias("sh"))
         .withColumn("hs", T.shingle_hashes28(F.col("sh")))
         .withColumn("sig", T.minhash_signature_from_hashes(F.col("hs"), num_hashes))
         .drop("hs"),
@@ -319,7 +306,7 @@ def minhash_lsh_pairs(
     # once per band per doc) or are re-joined per candidate pair
     # (pairs mode: quadratic under duplicate-heavy data).
     banded = base.select(
-        id_col,
+        DOC_ID,
         F.explode(
             F.array(
                 *[
@@ -331,7 +318,7 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    ).select(DOC_ID, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
     if verify == "group":
         # each doc carries its shingles plus its full per-band key list
@@ -344,9 +331,9 @@ def minhash_lsh_pairs(
             ]
         )
         with_sh = banded.join(
-            base.select(id_col, "sh", bkeys.alias("bkeys")), id_col
+            base.select(DOC_ID, "sh", bkeys.alias("bkeys")), DOC_ID
         )
-        id_type = base.schema[id_col].dataType.simpleString()
+        id_type = base.schema[DOC_ID].dataType.simpleString()
         thr = float(threshold)
 
         # nested closure — pickled by value (executors don't share the
@@ -360,7 +347,7 @@ def minhash_lsh_pairs(
             if n < 2:
                 return empty
             band = int(pdf["band"].iloc[0])
-            ids = pdf[id_col].tolist()
+            ids = pdf[DOC_ID].tolist()
             shs = [frozenset(x) for x in pdf["sh"]]
             # null-safe band-key tuples: Python tuple equality treats
             # None == None like eqNullSafe does
@@ -401,7 +388,7 @@ def minhash_lsh_pairs(
             return pd.DataFrame({"id_a": out_a, "id_b": out_b, "jaccard": out_j})
 
         return _pair_dedup(
-            with_sh.select(id_col, "band", "key", "sh", "bkeys")
+            with_sh.select(DOC_ID, "band", "key", "sh", "bkeys")
             .groupBy("band", "key")
             .applyInPandas(
                 _verify_bucket,
@@ -410,16 +397,16 @@ def minhash_lsh_pairs(
             "jaccard",
         )
 
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "key")
+    a = banded.select(F.col(DOC_ID).alias("id_a"), "band", "key")
+    b = banded.select(F.col(DOC_ID).alias("id_b"), "band", "key")
     cand = (
         a.join(b, ["band", "key"], "inner")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = base.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = base.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    sh_a = base.select(F.col(DOC_ID).alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = base.select(F.col(DOC_ID).alias("id_b"), F.col("sh").alias("sh_b"))
     verified = (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
@@ -432,8 +419,6 @@ def minhash_lsh_pairs(
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_chunks: int = 4,
 ) -> DataFrame:
     """SimHash near-dup pairs: 60-bit simhash, blocked on
@@ -465,11 +450,11 @@ def simhash_pairs(
     if 60 % n_chunks:
         raise ValueError(f"n_chunks must divide 60, got {n_chunks}")
     width = 60 // n_chunks
-    sh = _spread(docs, id_col).select(
-        F.col(id_col), T.simhash64(T.tokens(text_col)).alias("simhash")
+    sh = _spread(docs, DOC_ID).select(
+        F.col(DOC_ID), T.simhash64(T.tokens(TEXT_COL)).alias("simhash")
     )
     chunks = sh.select(
-        id_col,
+        DOC_ID,
         "simhash",
         F.explode(
             F.array(
@@ -485,10 +470,10 @@ def simhash_pairs(
                 ]
             )
         ).alias("ck"),
-    ).select(id_col, "simhash", F.col("ck.chunk_idx").alias("chunk_idx"), F.col("ck.chunk").alias("chunk"))
+    ).select(DOC_ID, "simhash", F.col("ck.chunk_idx").alias("chunk_idx"), F.col("ck.chunk").alias("chunk"))
 
-    a = chunks.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"), "chunk_idx", "chunk")
-    b = chunks.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"), "chunk_idx", "chunk")
+    a = chunks.select(F.col(DOC_ID).alias("id_a"), F.col("simhash").alias("h_a"), "chunk_idx", "chunk")
+    b = chunks.select(F.col(DOC_ID).alias("id_b"), F.col("simhash").alias("h_b"), "chunk_idx", "chunk")
     xor = F.col("h_a").bitwiseXOR(F.col("h_b"))
     return (
         a.join(b, ["chunk_idx", "chunk"], "inner")
@@ -501,7 +486,7 @@ def simhash_pairs(
     )
 
 
-def _band_key_cols(vec_col: str, planes: list[list[float]], bands: int) -> list:
+def _band_key_cols(planes: list[list[float]], bands: int) -> list:
     """The ONE shared derivation of the per-band LSH sign-key
     expressions (r11 review: hyperplane_bands and the grouped verify
     carried line-for-line copies — a sign-convention or cast fix
@@ -520,7 +505,7 @@ def _band_key_cols(vec_col: str, planes: list[list[float]], bands: int) -> list:
     # ONE plane_dots kernel call feeds every sign bit (the vector
     # crosses the Arrow channel once, not once per plane; identical
     # UDF expressions are deduplicated in the plan)
-    dots = V.plane_dots(vec_col, planes)
+    dots = V.plane_dots(VEC_COL, planes)
     bits = [
         F.when(F.element_at(dots, p + 1) >= 0, F.lit(1)).otherwise(F.lit(0))
         for p in range(n)
@@ -534,24 +519,18 @@ def _band_key_cols(vec_col: str, planes: list[list[float]], bands: int) -> list:
     return keys
 
 
-def hyperplane_bands(
-    emb: DataFrame,
-    planes: list[list[float]],
-    bands: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hyperplane_bands(emb: DataFrame, planes: list[list[float]], bands: int) -> DataFrame:
     """LSH band assignment: ``len(planes)`` sign bits split into
     ``bands`` integer band keys, exploded to (id, band, key) — the
     content-derived block table behind ``embedding_dup_pairs``."""
-    keys = _band_key_cols(vec_col, planes, bands)
+    keys = _band_key_cols(planes, bands)
     band_structs = [
         F.struct(F.lit(b).alias("band"), key.alias("key"))
         for b, key in enumerate(keys)
     ]
     return emb.select(
-        id_col, F.explode(F.array(*band_structs)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        VEC_ID, F.explode(F.array(*band_structs)).alias("bk")
+    ).select(VEC_ID, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def embedding_dup_pairs(
@@ -560,8 +539,6 @@ def embedding_dup_pairs(
     dim: int = 64,
     n_planes: int = 32,
     bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     verify: str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked by random-hyperplane
@@ -615,7 +592,7 @@ def embedding_dup_pairs(
         raise ValueError(f"unknown verify mode {verify!r}")
     planes = V.rademacher_planes(n_planes, dim)
     base = rotating_persist(
-        emb.select(F.col(id_col), F.col(vec_col)), _NEARDUP_BASE_SLOT
+        emb.select(F.col(VEC_ID), F.col(VEC_COL)), _NEARDUP_BASE_SLOT
     )
     if verify == "auto":
         # measured crossover (docstring): group's per-bucket Arrow
@@ -628,13 +605,11 @@ def embedding_dup_pairs(
         verify = "group" if memoized_count(base) >= 10_000 else "pairs"
 
     if verify == "group":
-        return _embedding_dup_pairs_grouped(
-            base, planes, bands, threshold, id_col, vec_col
-        )
+        return _embedding_dup_pairs_grouped(base, planes, bands, threshold)
 
-    banded = hyperplane_bands(base, planes, bands, id_col=id_col, vec_col=vec_col)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "key")
+    banded = hyperplane_bands(base, planes, bands)
+    a = banded.select(F.col(VEC_ID).alias("id_a"), "band", "key")
+    b = banded.select(F.col(VEC_ID).alias("id_b"), "band", "key")
     cand = (
         a.join(b, ["band", "key"], "inner")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -644,14 +619,14 @@ def embedding_dup_pairs(
     # side norms hoisted out of the pair verify (one per vector, not
     # one per candidate pair — V.cosine_from_parts, value-identical)
     va = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
-        V.norm(vec_col).alias("__na"),
+        F.col(VEC_ID).alias("id_a"),
+        F.col(VEC_COL).alias("v_a"),
+        V.norm(VEC_COL).alias("__na"),
     )
     vb = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
-        V.norm(vec_col).alias("__nb"),
+        F.col(VEC_ID).alias("id_b"),
+        F.col(VEC_COL).alias("v_b"),
+        V.norm(VEC_COL).alias("__nb"),
     )
     return _pair_dedup(
         cand.join(va, "id_a")
@@ -681,8 +656,6 @@ def _embedding_dup_pairs_grouped(
     planes: list[list[float]],
     bands: int,
     threshold: float,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """The bucket-grouped Arrow verify behind ``verify="group"`` —
     see ``embedding_dup_pairs``. Value parity with pairs mode is
@@ -697,11 +670,11 @@ def _embedding_dup_pairs_grouped(
     default Arrow dot surfaces a NaN dot as NULL (filtered by >=),
     so keeping NaN here would emit rows pairs-mode never produces.
     Probed by the unit differential test."""
-    keys = _band_key_cols(vec_col, planes, bands)
-    id_type = base.schema[id_col].dataType.simpleString()
+    keys = _band_key_cols(planes, bands)
+    id_type = base.schema[VEC_ID].dataType.simpleString()
     keyed = base.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
+        F.col(VEC_ID).alias("__id"),
+        F.col(VEC_COL).alias("__vec"),
         F.array(*keys).alias("bkeys"),
     )
     banded = keyed.select(
@@ -803,12 +776,7 @@ def _embedding_dup_pairs_grouped(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Connected components over an undirected pair graph by
     iterative min-label propagation: every node starts labeled with
     itself; each round replaces a node's label with the minimum label
@@ -836,8 +804,8 @@ def connected_components(
     checkpoint dir, ``checkpoint()`` gives the fault-tolerant
     equivalent.
     """
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    rev = pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     edges = fwd.unionByName(rev).distinct().localCheckpoint()
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -880,15 +848,13 @@ def connected_components(
     return labels
 
 
-def dedup_clusters(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-dup clusters from a verified pair set: connected
     components labeled by component-minimum doc id (the canonical
     "keeper"), plus the cluster size. Only documents that appear in
     at least one pair are returned — singletons are by definition
     already unique."""
-    labels = connected_components(pairs, id_a=id_a, id_b=id_b)
+    labels = connected_components(pairs)
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "lbl").select(
         F.col("node").alias("doc_id"),
@@ -902,8 +868,6 @@ def semantic_dedup(
     threshold: float = 0.97,
     n_cells: int = 8,
     kmeans_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space with k-means, then prune semantic near-dups
@@ -926,7 +890,7 @@ def semantic_dedup(
     component rule would also keep nothing but A — callers wanting
     transitive groups compose with connected_components instead.
 
-    Returns (id_col, cell, cent_cos, keep). Scale shape: the k-means
+    Returns (vec_id, cell, cent_cos, keep). Scale shape: the k-means
     assignment is the IVF build (one distributed pass per Lloyd
     iteration; only centroid floats reach the driver — see
     similarity.build_ivf_index), candidate pairs are blocked by the
@@ -945,7 +909,7 @@ def semantic_dedup(
     from duckdb_retail_pipeline_spark.operators import similarity as S
     from duckdb_retail_pipeline_spark.queries.base import dround
 
-    if emb.select(id_col).isEmpty():
+    if emb.select(VEC_ID).isEmpty():
         # dedup extends naturally to the empty corpus (dedup(∅) = ∅),
         # unlike an anchored ANN query — return the contracted empty
         # frame instead of letting build_ivf_index raise its
@@ -959,7 +923,7 @@ def semantic_dedup(
             [],
             T.StructType(
                 [
-                    T.StructField(id_col, emb.schema[id_col].dataType),
+                    T.StructField(VEC_ID, emb.schema[VEC_ID].dataType),
                     T.StructField("cell", T.LongType()),
                     T.StructField("cent_cos", T.DoubleType()),
                     T.StructField("keep", T.BooleanType()),
@@ -971,16 +935,14 @@ def semantic_dedup(
         emb,
         n_cells=n_cells,
         kmeans_iters=kmeans_iters,
-        id_col=id_col,
-        vec_col=vec_col,
         persist=False,
     )
     cents = idx["cents"]
     assigned = idx["assigned"].select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col(VEC_ID),
+        F.col(VEC_COL),
         F.col("__cell").cast("bigint").alias("cell"),
-        V.norm(vec_col).alias("__norm"),
+        V.norm(VEC_COL).alias("__norm"),
     )
     if len(cents) <= S.CELL_EXPR_MAX:
         # pinned small configs (the registered x99 path): centroid
@@ -989,13 +951,13 @@ def semantic_dedup(
             *[F.array(*[F.lit(float(x)) for x in c]) for c in cents]
         )
         scored_plan = assigned.select(
-            id_col,
-            vec_col,
+            VEC_ID,
+            VEC_COL,
             "cell",
             "__norm",
             dround(
                 V.cosine_similarity(
-                    F.col(vec_col),
+                    F.col(VEC_COL),
                     F.element_at(cent_lits, (F.col("cell") + 1).cast("int")),
                 ),
                 4,
@@ -1022,26 +984,26 @@ def semantic_dedup(
         scored_plan = (
             assigned.join(F.broadcast(cents_df), "cell")
             .select(
-                id_col,
-                vec_col,
+                VEC_ID,
+                VEC_COL,
                 "cell",
                 "__norm",
                 dround(
-                    V.cosine_similarity(F.col(vec_col), F.col("__cvec")), 4
+                    V.cosine_similarity(F.col(VEC_COL), F.col("__cvec")), 4
                 ).alias("cent_cos"),
             )
         )
     scored = rotating_persist(scored_plan, _SEMDEDUP_SCORED_SLOT)
     left = scored.select(
-        F.col(id_col).alias("__id_a"),
-        F.col(vec_col).alias("__va"),
+        F.col(VEC_ID).alias("__id_a"),
+        F.col(VEC_COL).alias("__va"),
         "cell",
         F.col("__norm").alias("__na"),
         F.col("cent_cos").alias("__ca"),
     )
     right = scored.select(
-        F.col(id_col).alias("__id_b"),
-        F.col(vec_col).alias("__vb"),
+        F.col(VEC_ID).alias("__id_b"),
+        F.col(VEC_COL).alias("__vb"),
         "cell",
         F.col("__norm").alias("__nb"),
         F.col("cent_cos").alias("__cb"),
@@ -1067,13 +1029,13 @@ def semantic_dedup(
             )
             >= F.lit(float(threshold))
         )
-        .select(F.col("__id_a").alias(id_col))
+        .select(F.col("__id_a").alias(VEC_ID))
         .distinct()
     )
     return scored.join(
-        dominated.withColumn("__dropped", F.lit(True)), id_col, "left"
+        dominated.withColumn("__dropped", F.lit(True)), VEC_ID, "left"
     ).select(
-        id_col,
+        VEC_ID,
         "cell",
         "cent_cos",
         F.coalesce(~F.col("__dropped"), F.lit(True)).alias("keep"),

@@ -12,11 +12,11 @@ it as a first-class operator.
 Determinism: floating-point PageRank sums per-node contributions in
 shuffle order — not reproducible across engines or runs. This
 implementation keeps ranks as INTEGER floor-scaled rationals (the
-x54/x66/x87 convention): ranks start at ``scale`` (10^6), each
-iteration's contribution is ``(rank * damp_num) DIV (damp_den *
+x54/x66/x87 convention): ranks start at ``SCALE`` (10^6), each
+iteration's contribution is ``(rank * DAMP_NUM) DIV (DAMP_DEN *
 outdeg)`` (integer division, all values positive so trunc ≡ floor),
-and the damped base is ``(scale * (damp_den - damp_num)) DIV
-damp_den``. Integer sums are fold-order-independent, so the result is
+and the damped base is ``(SCALE * (DAMP_DEN - DAMP_NUM)) DIV
+DAMP_DEN``. Integer sums are fold-order-independent, so the result is
 bit-identical in ANSI SQL — the oracle unrolls the same iterations as
 CTEs.
 
@@ -27,7 +27,7 @@ persisted (one slot rotation) because every iteration re-reads it and
 Spark does not dedupe common subplans. ``iters`` is a fixed small
 constant — the plan unrolls linearly, no driver-side loop over
 collected data. int64 headroom: a node's rank is bounded by the total
-mass n_nodes × scale; at 10^9 nodes × 10^6 scale × damp_num=85 the
+mass n_nodes × SCALE; at 10^9 nodes × 10^6 SCALE × DAMP_NUM=85 the
 worst single term is ~8.5e16, inside int64.
 
 Dangling nodes — two explicit conventions (r9 verdict #4: the
@@ -42,7 +42,7 @@ an implicit assumption):
   asymmetric link graph.
 - ``redistribute_dangling=True`` (textbook): the node universe is
   src ∪ dst, dangling mass is summed per iteration and redistributed
-  uniformly — ``(D·damp_num) DIV (damp_den·n_nodes)`` per node, still
+  uniformly — ``(D·DAMP_NUM) DIV (DAMP_DEN·n_nodes)`` per node, still
   exact-integer — and every node gets a rank (nodes with no in-edges
   hold base + dangling share). This is the convention for directed
   graphs such as web-link or customer→part bipartite graphs.
@@ -56,6 +56,11 @@ from pyspark.sql import functions as F
 from duckdb_retail_pipeline_spark.memo import rotating_persist
 
 SCALE = 10**6
+#: damping factor 0.85, kept as the exact rational DAMP_NUM / DAMP_DEN
+DAMP_NUM = 85
+DAMP_DEN = 100
+#: every node's damped base rank per iteration
+BASE = (SCALE * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
 
 # one-entry rotations: the (src, dst, outdeg) contribution frame
 # (edge-sized, re-read once per iteration within one plan and across
@@ -194,9 +199,6 @@ def _step(
     edges_deg: DataFrame,
     nodes: DataFrame | None,
     n_nodes: DataFrame | None,
-    base: int,
-    damp_num: int,
-    damp_den: int,
 ) -> DataFrame:
     """One exact-integer PageRank iteration (module docstring)."""
     contrib = edges_deg.join(
@@ -205,8 +207,8 @@ def _step(
         F.col("dst"),
         F.call_function(
             "div",
-            F.col("r") * F.lit(damp_num),
-            F.lit(damp_den) * F.col("outdeg"),
+            F.col("r") * F.lit(DAMP_NUM),
+            F.lit(DAMP_DEN) * F.col("outdeg"),
         ).cast("bigint").alias("c"),
     )
     summed = contrib.groupBy("dst").agg(F.sum("c").cast("bigint").alias("s"))
@@ -216,7 +218,7 @@ def _step(
         # re-enters via the final outdeg join filter)
         return summed.select(
             F.col("dst").alias("node"),
-            (F.lit(base) + F.col("s")).cast("bigint").alias("r"),
+            (F.lit(BASE) + F.col("s")).cast("bigint").alias("r"),
         )
     # textbook convention: dangling mass redistributed uniformly —
     # both scalars are one-row frames crossJoined in-plan, so the
@@ -227,8 +229,8 @@ def _step(
     share = dangling.crossJoin(F.broadcast(n_nodes)).select(
         F.call_function(
             "div",
-            F.col("dmass") * F.lit(damp_num),
-            F.lit(damp_den) * F.col("n"),
+            F.col("dmass") * F.lit(DAMP_NUM),
+            F.lit(DAMP_DEN) * F.col("n"),
         ).cast("bigint").alias("share")
     )
     return (
@@ -237,7 +239,7 @@ def _step(
         .select(
             F.col("node"),
             (
-                F.lit(base) + F.coalesce(F.col("s"), F.lit(0)) + F.col("share")
+                F.lit(BASE) + F.coalesce(F.col("s"), F.lit(0)) + F.col("share")
             ).cast("bigint").alias("r"),
         )
     )
@@ -258,9 +260,6 @@ def _finish(ranks: DataFrame, deg: DataFrame, dangling_in_output: bool) -> DataF
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
-    scale: int = SCALE,
-    damp_num: int = 85,
-    damp_den: int = 100,
     redistribute_dangling: bool = False,
 ) -> DataFrame:
     """(node, outdeg, pagerank_scaled) after ``iters`` exact-integer
@@ -271,17 +270,14 @@ def pagerank(
     mass is redistributed uniformly each iteration, and dangling
     nodes appear in the output with outdeg 0."""
     deg, edges_deg, nodes, n_nodes = _prepare(edges, redistribute_dangling)
-    base = (scale * (damp_den - damp_num)) // damp_den
     universe = nodes if nodes is not None else deg.select(
         F.col("src").alias("node")
     )
     ranks = universe.select(
-        "node", F.lit(scale).cast("bigint").alias("r")
+        "node", F.lit(SCALE).cast("bigint").alias("r")
     )
     for i in range(iters):
-        ranks = _step(
-            ranks, deg, edges_deg, nodes, n_nodes, base, damp_num, damp_den
-        )
+        ranks = _step(ranks, deg, edges_deg, nodes, n_nodes)
         if nodes is not None and i < iters - 1:
             # the redistribute step consumes ranks TWICE (contribution
             # join + dangling-mass aggregate) and Spark does not
@@ -301,9 +297,6 @@ def pagerank_until_stable(
     edges: DataFrame,
     max_iters: int = 20,
     epsilon: int = 0,
-    scale: int = SCALE,
-    damp_num: int = 85,
-    damp_den: int = 100,
     redistribute_dangling: bool = False,
 ) -> tuple[DataFrame, int, bool]:
     """Iterate to an exact fixed point: stop when the total absolute
@@ -334,18 +327,15 @@ def pagerank_until_stable(
     executor loss swaps in reliable ``checkpoint()`` against the
     checkpoint dir — same contract, durable blocks."""
     deg, edges_deg, nodes, n_nodes = _prepare(edges, redistribute_dangling)
-    base = (scale * (damp_den - damp_num)) // damp_den
     universe = nodes if nodes is not None else deg.select(
         F.col("src").alias("node")
     )
     ranks = universe.select(
-        "node", F.lit(scale).cast("bigint").alias("r")
+        "node", F.lit(SCALE).cast("bigint").alias("r")
     ).localCheckpoint()
     iters_run, converged = 0, False
     for _ in range(max_iters):
-        nxt = _step(
-            ranks, deg, edges_deg, nodes, n_nodes, base, damp_num, damp_den
-        ).localCheckpoint()
+        nxt = _step(ranks, deg, edges_deg, nodes, n_nodes).localCheckpoint()
         # the evaporate path can shrink the universe on the first
         # step (sources with no in-edges drop out) — treat a
         # missing side as a change of the full rank magnitude
@@ -379,9 +369,6 @@ def pagerank_fixed_point_contract(
     edges: DataFrame,
     max_iters: int = 60,
     epsilon_per_node: int = 200,
-    scale: int = SCALE,
-    damp_num: int = 85,
-    damp_den: int = 100,
     redistribute_dangling: bool = True,
 ) -> DataFrame:
     """Oracle-gateable frame for ``pagerank_until_stable``: (node,
@@ -403,7 +390,7 @@ def pagerank_fixed_point_contract(
     loop's per-iteration delta collects), so the tolerance tracks the
     graph across SFs and the recheck is sound to gate at the same
     value: the damped map contracts per-step total change by
-    ``damp_num/damp_den`` up to a few floor-rounding units per node,
+    ``DAMP_NUM/DAMP_DEN`` up to a few floor-rounding units per node,
     so a step that triggered the stop keeps the NEXT step under
     0.85·ε + O(n) ≤ ε whenever epsilon_per_node ≫ the per-node
     rounding jitter (measured: total delta settles at well under one
@@ -434,18 +421,12 @@ def pagerank_fixed_point_contract(
         edges,
         max_iters=max_iters,
         epsilon=epsilon,
-        scale=scale,
-        damp_num=damp_num,
-        damp_den=damp_den,
         redistribute_dangling=redistribute_dangling,
     )
     ranks = result.select("node", F.col("pagerank_scaled").alias("r"))
     # the until-stable run's own _prepare reused the slot-persisted
     # frames built above (rotating_persist keys on plan equality)
-    base = (scale * (damp_den - damp_num)) // damp_den
-    nxt = _step(
-        ranks, deg, edges_deg, nodes, n_nodes, base, damp_num, damp_den
-    )
+    nxt = _step(ranks, deg, edges_deg, nodes, n_nodes)
     # full join: on the evaporate path one more step can shrink the
     # universe (sources with no in-edges) — count that as a change of
     # the full rank magnitude, same convention as the operator's loop

@@ -4,13 +4,12 @@ The reference's dimension equi-joins (SURVEY.md §2.3) are plain
 joins in ``pipeline/facts.py``: AQE sizes them at runtime, with no
 forced broadcast. ``asof_join`` is the extension operator Spark lacks
 natively (the usual workarounds are bucketize or merge_asof); here
-it's the union-window formulation — no cross product, no UDF, scales
-as one shuffle on (key, time).
+it's the union-window formulation — no cross product, no UDF. Every
+caller joins one unkeyed time series, so the window is global; at
+scale the change to make is partitioning it by series key.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,7 +34,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on_time: str,
-    by: Sequence[str] | None = None,
     right_time: str | None = None,
     direction: str = "backward",
 ) -> DataFrame:
@@ -44,8 +42,8 @@ def asof_join(
     the next at-or-after).
 
     Implementation: tag both sides, union them, and forward-fill the
-    right side's payload along (by, time) with a last-ignore-nulls
-    window — one shuffle, no range explosion. This is the same trick
+    right side's payload along time with a last-ignore-nulls
+    window — no range explosion. This is the same trick
     the reference uses for FX forward-fill, generalized to a join.
 
     The payload fills as ONE STRUCT, not per column: independent
@@ -57,14 +55,13 @@ def asof_join(
     payload. Right payload names that collide with left columns
     raise (the output would carry ambiguous duplicates; rename
     before joining, as merge_asof's suffixes would). Right rows TIED
-    on (by, time) resolve deterministically by the payload's
+    on time resolve deterministically by the payload's
     orderable fields (map-typed fields join fine but are unorderable
     and sit out of the tie-break — see the window comment)."""
     from pyspark.sql import types as T
 
     rt = right_time or on_time
-    by = list(by or [])
-    payload = [c for c in right.columns if c != rt and c not in by]
+    payload = [c for c in right.columns if c != rt]
     collisions = sorted(set(payload) & set(left.columns))
     if collisions:
         raise ValueError(
@@ -76,14 +73,12 @@ def asof_join(
         [T.StructField(c, right.schema[c].dataType, True) for c in payload]
     )
     lhs = left.select(
-        *by,
         F.col(on_time).alias("__t"),
         F.lit(1).alias("__is_left"),
         F.lit(None).cast(r_type).alias("__r"),
         F.struct(*[c for c in left.columns]).alias("__row"),
     )
     rhs = right.filter(F.col(rt).isNotNull()).select(
-        *by,
         F.col(rt).alias("__t"),
         F.lit(0).alias("__is_left"),
         F.struct(*[F.col(c) for c in payload]).alias("__r"),
@@ -94,7 +89,7 @@ def asof_join(
     unioned = lhs.unionByName(rhs)
 
     # A payload-valued FINAL sort key makes the order TOTAL over
-    # right rows tied on (by, time) (r11 review): without it,
+    # right rows tied on time (r11 review): without it,
     # last()/first() returned whichever tied peer the shuffle
     # happened to order last — a nondeterministic payload across
     # runs. The key is a struct of the ORDERABLE payload fields only
@@ -106,7 +101,7 @@ def asof_join(
     # (last over ascending), forward the LEAST (first over
     # ascending) — value-ordered, run-stable (pinned:
     # tests/test_operators.py duplicate-right-timestamp test). Rows
-    # tied on (by, time) AND on every orderable payload field but
+    # tied on time AND on every orderable payload field but
     # differing in a map-typed field remain a nondeterministic pick
     # among value-tied peers (documented, not silent: with zero
     # orderable fields there is no value order to impose). Left rows
@@ -123,16 +118,14 @@ def asof_join(
     if direction == "backward":
         # right rows sort before left rows at equal time → "at or before"
         w = (
-            Window.partitionBy(*by)
-            .orderBy(
+            Window.orderBy(
                 F.col("__t").asc(), F.col("__is_left").asc(), *tie_keys
             )
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
     elif direction == "forward":
         w = (
-            Window.partitionBy(*by)
-            .orderBy(
+            Window.orderBy(
                 F.col("__t").asc(), F.col("__is_left").desc(), *tie_keys
             )
             .rowsBetween(Window.currentRow, Window.unboundedFollowing)
@@ -165,21 +158,17 @@ def range_join_bucketed(
     right_lo: str,
     right_hi: str,
     bucket_width: float,
-    by: Sequence[str] | None = None,
 ) -> DataFrame:
     """Range join (left.val BETWEEN right.lo AND right.hi) via bucket
     equi-join + residual filter, avoiding the O(n·m) theta join: each
     right interval is exploded to its overlapping buckets, then an
     equi-join on bucket id prunes to near-candidates. Shared
-    non-``by`` column names raise up front (r11 review, the
+    column names raise up front (r11 review, the
     asof_join guard reused): the inner join would otherwise emit
     duplicate-named columns — or make the residual ``left_val``
     reference ambiguous — with an AnalysisException pointing nowhere
     near the cause."""
-    by = list(by or [])
-    collisions = sorted(
-        (set(left.columns) & set(right.columns)) - set(by)
-    )
+    collisions = sorted(set(left.columns) & set(right.columns))
     if collisions:
         raise ValueError(
             f"range_join_bucketed: column(s) {collisions} exist on both "
@@ -195,7 +184,7 @@ def range_join_bucketed(
             )
         ),
     )
-    joined = lb.join(rb, by + ["__bucket"], "inner").filter(
+    joined = lb.join(rb, ["__bucket"], "inner").filter(
         (F.col(left_val) >= F.col(right_lo)) & (F.col(left_val) <= F.col(right_hi))
     )
     return joined.drop("__bucket")

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import text as T
+from duckdb_retail_pipeline_spark.functions.text import DOC_ID, TEXT_COL
 from duckdb_retail_pipeline_spark.memo import rotating_persist
 
 SCALE = 10**6
@@ -61,13 +62,11 @@ _BG_SLOT: list = []
 _STAGE_SLOT: list = []
 
 
-def doc_bigrams(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_bigrams(docs: DataFrame) -> DataFrame:
     """(id, w1, w2) adjacent-token pairs, one row per bigram
     OCCURRENCE (order within the doc does not matter downstream, so
     no position column rides the explode)."""
-    toks = T.tokens(text_col)
+    toks = T.tokens(TEXT_COL)
     n = F.size(toks)
     pairs = F.when(
         n >= 2,
@@ -77,31 +76,24 @@ def doc_bigrams(
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     return (
-        docs.select(F.col(id_col), F.explode(pairs).alias("bg"))
-        .select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        docs.select(F.col(DOC_ID), F.explode(pairs).alias("bg"))
+        .select(DOC_ID, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
 
 
-def doc_bigram_counts(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_bigram_counts(docs: DataFrame) -> DataFrame:
     """(id, w1, w2, cnt) — per-document bigram counts, the STAGING
     table of the scorer (module comment at the slot constants): one
     explode + one (id, w1, w2) aggregation, after which no consumer
     ever touches raw bigram occurrences again."""
     return (
-        doc_bigrams(docs, id_col=id_col, text_col=text_col)
-        .groupBy(id_col, "w1", "w2")
+        doc_bigrams(docs)
+        .groupBy(DOC_ID, "w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
 
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    reference: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame, reference: DataFrame | None = None) -> DataFrame:
     """Per-document bigram-LM quality score (module docstring).
 
     Returns (id, n_bigrams, lm_score_scaled): the floor-mean of the
@@ -118,7 +110,7 @@ def bigram_lm_scores(
     DuckDB differential test).
     """
     bgc = rotating_persist(
-        doc_bigram_counts(docs, id_col=id_col, text_col=text_col),
+        doc_bigram_counts(docs),
         _STAGE_SLOT,
     )
     if reference is None:
@@ -138,7 +130,7 @@ def bigram_lm_scores(
             _BG_SLOT,
         )
     else:
-        ref_bg = doc_bigrams(reference, id_col=id_col, text_col=text_col)
+        ref_bg = doc_bigrams(reference)
         c_ctx = rotating_persist(
             ref_bg.groupBy("w1").agg(
                 F.count(F.lit(1)).cast("bigint").alias("c_ctx")
@@ -155,7 +147,7 @@ def bigram_lm_scores(
         bgc.join(c_bg, ["w1", "w2"], "left")
         .join(c_ctx, "w1", "left")
         .select(
-            id_col,
+            DOC_ID,
             "cnt",
             # unseen-in-reference bigram → 0 (left-join NULL counts);
             # integer DIV keeps the sum exact and order-independent
@@ -170,7 +162,7 @@ def bigram_lm_scores(
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy(DOC_ID)
         .agg(
             F.sum("cnt").cast("bigint").alias("n_bigrams"),
             F.call_function(

@@ -30,9 +30,6 @@ def scd2_apply(
     dim: DataFrame,
     changes: DataFrame,
     key_cols: Sequence[str],
-    effective_col: str = "effective_from",
-    end_col: str = "effective_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Slowly-changing-dimension type 2: append changed rows as new
     versions, close out superseded versions.
@@ -61,19 +58,19 @@ def scd2_apply(
         *[c for c in combined.columns if c != "__src"]
     )
     w = Window.partitionBy(*key_cols).orderBy(
-        effective_col, "__src", payload_struct
+        "effective_from", "__src", payload_struct
     )
     return (
-        combined.withColumn(end_col, F.lead(effective_col).over(w))
-        .withColumn(current_col, F.col(end_col).isNull())
+        combined.withColumn("effective_to", F.lead("effective_from").over(w))
+        .withColumn("is_current", F.col("effective_to").isNull())
         .drop("__src")
     )
 
 
-def as_of(dim_history: DataFrame, as_of_date, effective_col="effective_from", end_col="effective_to") -> DataFrame:
+def as_of(dim_history: DataFrame, as_of_date) -> DataFrame:
     """Point-in-time view of an SCD2 history."""
     d = F.lit(str(as_of_date)).cast("date")
     return dim_history.filter(
-        (F.col(effective_col) <= d)
-        & (F.col(end_col).isNull() | (F.col(end_col) > d))
+        (F.col("effective_from") <= d)
+        & (F.col("effective_to").isNull() | (F.col("effective_to") > d))
     )

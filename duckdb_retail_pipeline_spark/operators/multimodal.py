@@ -20,25 +20,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("content", BinaryType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 FEATURE_SCHEMA = StructType(
     [
@@ -107,7 +89,7 @@ def decode_image(content: bytes, fake: bool = False) -> dict:
     }
 
 
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary content.
 
     ``mapInPandas`` receives per-partition batch iterators; each batch

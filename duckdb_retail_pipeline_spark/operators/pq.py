@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import vectors as V
+from duckdb_retail_pipeline_spark.functions.vectors import VEC_COL, VEC_ID
 
 
 def _sub_codes_expr(sub_col, codebook: list[list[float]]):
@@ -72,8 +73,6 @@ def train_pq(
     m: int = 4,
     k_codes: int = 16,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Per-subspace codebooks: deterministic seeds (subvectors of the
     first ``k_codes`` vectors by id), then ``iters`` Lloyd passes —
@@ -83,15 +82,15 @@ def train_pq(
     k_codes × dsub floats reach the driver). Codes that lose all
     members keep their previous centroid."""
     seeds = [
-        list(map(float, r[vec_col]))
-        for r in emb.orderBy(id_col).limit(k_codes).collect()
+        list(map(float, r[VEC_COL]))
+        for r in emb.orderBy(VEC_ID).limit(k_codes).collect()
     ]
     if len(seeds) < k_codes:
         raise ValueError(f"corpus smaller than k_codes={k_codes}")
     books: list[list[list[float]]] = []
     for start, d in _subspaces(dim, m):
         book = [s[start - 1 : start - 1 + d] for s in seeds]
-        sub = emb.select(F.slice(vec_col, start, d).alias("__sub"))
+        sub = emb.select(F.slice(VEC_COL, start, d).alias("__sub"))
         for _ in range(iters):
             assigned = sub.withColumn("__code", _sub_codes_expr(F.col("__sub"), book))
             stats = (
@@ -115,17 +114,15 @@ def encode_pq(
     emb: DataFrame,
     books: list[list[list[float]]],
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes array<int>): the PQ compression of every vector —
     the frame an index would persist instead of the float vectors."""
     m = len(books)
     codes = [
-        _sub_codes_expr(F.slice(vec_col, start, d), books[s])
+        _sub_codes_expr(F.slice(VEC_COL, start, d), books[s])
         for s, (start, d) in enumerate(_subspaces(dim, m))
     ]
-    return emb.select(F.col(id_col), F.array(*codes).alias("codes"))
+    return emb.select(F.col(VEC_ID), F.array(*codes).alias("codes"))
 
 
 def adc_topk(
@@ -133,7 +130,6 @@ def adc_topk(
     books: list[list[list[float]]],
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance top-k over the COMPRESSED corpus: the
     query stays exact, candidates are their codes; score =
@@ -171,9 +167,9 @@ def adc_topk(
         )
         score = term if score is None else score + term
     scored = codes.select(
-        F.col(id_col), F.round(score, 4).alias("adc_dot")
+        F.col(VEC_ID), F.round(score, 4).alias("adc_dot")
     )
-    return scored.orderBy(F.col("adc_dot").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("adc_dot").desc(), F.col(VEC_ID).asc()).limit(k)
 
 
 def ivf_pq_topk(
@@ -185,8 +181,6 @@ def ivf_pq_topk(
     m: int = 4,
     k_codes: int = 16,
     refine_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     index: dict | None = None,
 ) -> DataFrame:
     """The classic IVF-PQ pipeline in one call: coarse cells prune
@@ -228,13 +222,9 @@ def ivf_pq_topk(
 
     dim = len(query_vec)
     if index is None:
-        ivf = build_ivf_index(
-            emb, n_cells, id_col=id_col, vec_col=vec_col, persist=False
-        )
-        books = train_pq(
-            emb, dim=dim, m=m, k_codes=k_codes, id_col=id_col, vec_col=vec_col
-        )
-        codes = encode_pq(emb, books, dim=dim, id_col=id_col, vec_col=vec_col)
+        ivf = build_ivf_index(emb, n_cells, persist=False)
+        books = train_pq(emb, dim=dim, m=m, k_codes=k_codes)
+        codes = encode_pq(emb, books, dim=dim)
     else:
         ivf, books, codes = index["ivf"], index["books"], index["codes"]
 
@@ -244,19 +234,18 @@ def ivf_pq_topk(
     )[:nprobe]
     cand_ids = ivf["assigned"].filter(
         F.col("__cell").isin(*probe_cells)
-    ).select(id_col)
+    ).select(VEC_ID)
 
     shortlist = adc_topk(
-        codes.join(cand_ids, id_col, "left_semi"),
+        codes.join(cand_ids, VEC_ID, "left_semi"),
         books,
         query_vec,
         k=refine_factor * k,
-        id_col=id_col,
-    ).select(id_col)
+    ).select(VEC_ID)
 
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact = emb.join(F.broadcast(shortlist), id_col, "left_semi").select(
-        F.col(id_col),
-        F.round(V.cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
+    exact = emb.join(F.broadcast(shortlist), VEC_ID, "left_semi").select(
+        F.col(VEC_ID),
+        F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("cosine"),
     )
-    return exact.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return exact.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(k)

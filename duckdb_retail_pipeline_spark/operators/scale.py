@@ -157,9 +157,8 @@ def write_bucketed(
     table_name: str,
     bucket_col: str,
     num_buckets: int = 16,
-    sort_col: str | None = None,
 ) -> None:
-    """Persist as a bucketed (optionally sorted) managed table —
+    """Persist as a bucketed managed table —
     repeated joins/aggs on ``bucket_col`` then read pre-partitioned
     data and skip the exchange entirely (guide: 'Bucketing').
 
@@ -193,10 +192,9 @@ def write_bucketed(
         orphan.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
             orphan, True
         )
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
+    df.write.mode("overwrite").bucketBy(num_buckets, bucket_col).saveAsTable(
+        table_name
+    )
 
 
 def bucketed_join_ready(

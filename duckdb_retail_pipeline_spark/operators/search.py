@@ -24,14 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import text as T
+from duckdb_retail_pipeline_spark.functions.text import DOC_ID, TEXT_COL
 
 
-def positional_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cluster_by_token: bool = False,
-) -> DataFrame:
+def positional_index(docs: DataFrame, cluster_by_token: bool = False) -> DataFrame:
     """(token, doc_id, pos) — one row per token OCCURRENCE, pos
     1-based. The frame a deployment persists partitioned by token.
 
@@ -58,18 +54,16 @@ def positional_index(
     the r8 verdict #2)."""
     out = (
         docs.select(
-            F.col(id_col), F.posexplode(T.tokens(text_col)).alias("pos0", "token")
+            F.col(DOC_ID), F.posexplode(T.tokens(TEXT_COL)).alias("pos0", "token")
         )
-        .select("token", id_col, (F.col("pos0") + 1).cast("bigint").alias("pos"))
+        .select("token", DOC_ID, (F.col("pos0") + 1).cast("bigint").alias("pos"))
     )
     if cluster_by_token:
         out = out.repartition("token").sortWithinPartitions("token")
     return out
 
 
-def phrase_search(
-    index: DataFrame, phrase: list[str], id_col: str = "doc_id"
-) -> DataFrame:
+def phrase_search(index: DataFrame, phrase: list[str]) -> DataFrame:
     """Documents containing the exact adjacent phrase, with occurrence
     counts: an occurrence starting at position p has word i at
     p + i, so each word's postings align on the START position
@@ -78,13 +72,13 @@ def phrase_search(
     if not phrase:
         raise ValueError("phrase must contain at least one token")
     cur = index.filter(F.col("token") == phrase[0]).select(
-        id_col, F.col("pos").alias("start")
+        DOC_ID, F.col("pos").alias("start")
     )
     for i, word in enumerate(phrase[1:], start=1):
         nxt = index.filter(F.col("token") == word).select(
-            id_col, (F.col("pos") - i).alias("start")
+            DOC_ID, (F.col("pos") - i).alias("start")
         )
-        cur = cur.join(nxt, [id_col, "start"])
-    return cur.groupBy(id_col).agg(
+        cur = cur.join(nxt, [DOC_ID, "start"])
+    return cur.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_occurrences")
     )

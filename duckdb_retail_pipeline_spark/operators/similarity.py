@@ -24,41 +24,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import vectors as V
+from duckdb_retail_pipeline_spark.functions.vectors import VEC_COL, VEC_ID
 
 
-def query_anchor(
-    emb: DataFrame,
-    anchor_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[float]:
-    """The query vector anchored at ``anchor_id`` — the convention
+def query_anchor(emb: DataFrame) -> list[float]:
+    """The query vector anchored at ``vec_id`` 0 — the convention
     every registered ANN query uses (the oracle re-derives the same
     vector via ``WHERE vec_id = 0``). Raises a CLEAR error when the
     anchor row is absent (empty corpus, filtered-away id): the
     anchor is part of the query CONTRACT, and the bare
-    ``first()[vec_col]`` this replaces died with an opaque
+    ``first()[VEC_COL]`` this replaces died with an opaque
     ``TypeError: 'NoneType' object is not subscriptable`` one frame
     away from the actual cause (r13 zero-row-corpus probe)."""
-    row = emb.filter(F.col(id_col) == anchor_id).select(vec_col).first()
-    if row is None or row[vec_col] is None:
+    row = emb.filter(F.col(VEC_ID) == 0).select(VEC_COL).first()
+    if row is None or row[VEC_COL] is None:
         raise ValueError(
-            f"query anchor {id_col}={anchor_id} not found (or has a "
-            f"NULL {vec_col}) — the corpus is empty or the anchor id "
+            f"query anchor {VEC_ID}=0 not found (or has a "
+            f"NULL {VEC_COL}) — the corpus is empty or the anchor id "
             "is absent; ANN queries need an existing anchor vector"
         )
-    return [float(x) for x in row[vec_col]]
+    return [float(x) for x in row[VEC_COL]]
 
 
-def query_anchor_memo(
-    spark,
-    sf_dir: str,
-    emb: DataFrame,
-    anchor_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[float]:
-    """``query_anchor`` memoized per (session, dataset, anchor): the
+def query_anchor_memo(spark, sf_dir: str, emb: DataFrame) -> list[float]:
+    """``query_anchor`` memoized per (session, dataset): the
     anchor fetch is a full Spark job (~140 ms at sf0.1, measured
     r13) re-run by every ANN query invocation during PLAN BUILD for
     a value that is one dim-sized driver list derived from the same
@@ -77,8 +66,8 @@ def query_anchor_memo(
     return dataset_memo(
         spark,
         sf_dir,
-        f"query_anchor:{anchor_id}:{id_col}:{vec_col}:{emb.semanticHash()}",
-        lambda: query_anchor(emb, anchor_id, id_col, vec_col),
+        f"query_anchor:{emb.semanticHash()}",
+        lambda: query_anchor(emb),
     )
 
 
@@ -86,21 +75,19 @@ def brute_force_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to ``query_vec``. The literal
     array is constant-folded by Catalyst; ordering ties break on id
     so results are total-ordered and reproducible."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = emb.select(
-        F.col(id_col),
-        F.round(V.cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
+        F.col(VEC_ID),
+        F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(k)
 
 
-def _hyperplanes_from_data(emb: DataFrame, vec_col: str, id_col: str, bits: int) -> list[list[float]]:
+def _hyperplanes_from_data(emb: DataFrame, bits: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes: take the first
     ``bits`` vectors by id, center them by the dataset mean. Driver
     collects only bits × dim floats — O(KB). A corpus with fewer
@@ -109,7 +96,7 @@ def _hyperplanes_from_data(emb: DataFrame, vec_col: str, id_col: str, bits: int)
     r11 nprobe fix removed (and a 0-vector corpus previously died
     on the mean row's ``None / None`` far from the cause — r13
     zero-row-corpus probe)."""
-    rows = emb.orderBy(id_col).limit(bits).select(vec_col).collect()
+    rows = emb.orderBy(VEC_ID).limit(bits).select(VEC_COL).collect()
     if len(rows) < bits:
         raise ValueError(
             f"cannot derive {bits} LSH hyperplanes from a corpus of "
@@ -118,15 +105,15 @@ def _hyperplanes_from_data(emb: DataFrame, vec_col: str, id_col: str, bits: int)
         )
     mean = emb.select(
         F.aggregate(
-            F.transform(vec_col, lambda x: x.cast("double")),
+            F.transform(VEC_COL, lambda x: x.cast("double")),
             F.lit(0.0),
             lambda a, x: a + x,
         ).alias("s"),
-        F.size(vec_col).alias("n"),
+        F.size(VEC_COL).alias("n"),
     ).agg(F.avg("s").alias("avg_sum"), F.first("n").alias("dim")).collect()[0]
     dim = mean["dim"]
     grand_mean = mean["avg_sum"] / dim
-    return [[float(v) - grand_mean for v in r[vec_col]] for r in rows]
+    return [[float(v) - grand_mean for v in r[VEC_COL]] for r in rows]
 
 
 def _bucket_from_dots(dots, bits: int):
@@ -153,8 +140,6 @@ def lsh_topk(
     k: int = 10,
     bits: int = 4,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k: probe the query's LSH bucket (plus, with
     ``nprobe > 1``, the buckets reached by flipping the query's
@@ -171,17 +156,17 @@ def lsh_topk(
             f"nprobe={nprobe} unrealizable with bits={bits}: at most "
             f"bits+1={bits + 1} distinct single-bit-flip probes exist"
         )
-    planes = _hyperplanes_from_data(emb, vec_col, id_col, bits)
-    bucketed = emb.withColumn("__bucket", _bucket_expr(vec_col, planes))
+    planes = _hyperplanes_from_data(emb, bits)
+    bucketed = emb.withColumn("__bucket", _bucket_expr(VEC_COL, planes))
     probes = _query_probes(planes, query_vec, nprobe)
 
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = bucketed.filter(F.col("__bucket").isin(probes))
     scored = cand.select(
-        F.col(id_col),
-        F.round(V.cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
+        F.col(VEC_ID),
+        F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(k)
 
 
 def _query_probes(
@@ -202,8 +187,6 @@ def _query_probes(
 def lsh_index(
     emb: DataFrame,
     bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> dict:
     """Build the serveable LSH index ONCE: data-derived hyperplanes
     (frozen with the index — every later ingest and query must hash
@@ -211,9 +194,9 @@ def lsh_index(
     bucketed corpus frame. Returns ``{"planes": [...], "bucketed":
     DataFrame(id, vec, __bucket)}``. Persistence belongs to an owner
     (``dataset_memo``), same contract as ``build_ivf_index``."""
-    planes = _hyperplanes_from_data(emb, vec_col, id_col, bits)
-    bucketed = emb.select(id_col, vec_col).withColumn(
-        "__bucket", _bucket_expr(vec_col, planes)
+    planes = _hyperplanes_from_data(emb, bits)
+    bucketed = emb.select(VEC_ID, VEC_COL).withColumn(
+        "__bucket", _bucket_expr(VEC_COL, planes)
     )
     return {"planes": planes, "bucketed": bucketed}
 
@@ -221,8 +204,6 @@ def lsh_index(
 def lsh_index_upsert(
     index: dict,
     delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> dict:
     """Incremental ANN-index ingest — the maintenance operation a
     100 TB deployment performs instead of rebuilding: bucket ONLY the
@@ -236,11 +217,11 @@ def lsh_index_upsert(
     immediately; planes are never re-derived (re-deriving them from
     the grown corpus would re-bucket EVERYTHING — that is a rebuild,
     not an upsert, and real systems schedule it separately)."""
-    delta_b = delta.select(id_col, vec_col).withColumn(
-        "__bucket", _bucket_expr(vec_col, index["planes"])
+    delta_b = delta.select(VEC_ID, VEC_COL).withColumn(
+        "__bucket", _bucket_expr(VEC_COL, index["planes"])
     )
     kept = index["bucketed"].join(
-        delta.select(id_col), id_col, "left_anti"
+        delta.select(VEC_ID), VEC_ID, "left_anti"
     )
     return {
         "planes": index["planes"],
@@ -253,8 +234,6 @@ def lsh_index_query(
     query_vec: list[float],
     k: int = 10,
     nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Serve a top-k query from a built/upserted LSH index: probe the
     query's bucket + flips (driver-side O(nprobe) probe list), exact
@@ -274,10 +253,10 @@ def lsh_index_query(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = index["bucketed"].filter(F.col("__bucket").isin(probes))
     scored = cand.select(
-        F.col(id_col),
-        F.round(V.cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
+        F.col(VEC_ID),
+        F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(k)
 
 
 def ann_contract(
@@ -286,8 +265,6 @@ def ann_contract(
     ann: DataFrame,
     k: int = 10,
     min_recall_hits: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """One-row boolean contract over an ANN result, computed entirely
     in-plan against brute force — the a05 sketch-contract pattern:
@@ -317,13 +294,13 @@ def ann_contract(
     """
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored_all = emb.select(
-        F.col(id_col),
-        F.round(V.cosine_similarity(F.col(vec_col), q), 4).alias("exact_cosine"),
+        F.col(VEC_ID),
+        F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("exact_cosine"),
     )
     exact_ids = (
-        scored_all.orderBy(F.col("exact_cosine").desc(), F.col(id_col).asc())
+        scored_all.orderBy(F.col("exact_cosine").desc(), F.col(VEC_ID).asc())
         .limit(k)
-        .select(id_col, F.lit(1).alias("__in_exact"))
+        .select(VEC_ID, F.lit(1).alias("__in_exact"))
     )
     # one-row |exact top-k| frame (≤ k rows counted — limit already
     # applied), broadcast into the contract agg so both clamps read
@@ -333,8 +310,8 @@ def ann_contract(
         F.count(F.lit(1)).cast("int").alias("__exact_n")
     )
     j = (
-        ann.join(scored_all, id_col, "left")
-        .join(exact_ids, id_col, "left")
+        ann.join(scored_all, VEC_ID, "left")
+        .join(exact_ids, VEC_ID, "left")
         .crossJoin(F.broadcast(exact_n))
     )
     return j.agg(
@@ -357,36 +334,29 @@ def ann_contract(
     )
 
 
-def hierarchical_topk(
-    scored: DataFrame,
-    k: int,
-    n_shards: int = 64,
-    query_col: str = "query_id",
-    id_col: str = "vec_id",
-    score_col: str = "cosine",
-) -> DataFrame:
-    """Top-k per query over a (query_id, vec_id, score) frame via
+def hierarchical_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k per query over a (query_id, vec_id, cosine) frame via
     bounded-partition two-stage rank: local row_number within
     (query, crc32-shard of id) keeps at most k rows per shard, then a
-    global rank per query runs over ≤ n_shards × k survivors. Neither
+    global rank per query runs over ≤ 64 × k survivors. Neither
     window partition ever holds a corpus-sized slice — the failure
     mode of a naive rank-over-query partition at 100 TB. Provably
     identical to the flat rank: any global top-k row is top-k within
     its shard. Ties break on id ascending (total order).
 
-    Scale rule for ``n_shards``: a local partition holds
-    ~candidates-per-query / n_shards rows, so size n_shards =
-    expected candidates / target-partition-rows (e.g. ~1M). The
-    default 64 covers every registered caller: the ANN paths feed
-    bounded candidate sets (~bucket·nprobe per query) and the exact
-    x39 baseline is itself the documented O(|Q|·corpus) boundary
-    whose escape is x42. The result is n_shards-invariant, so
-    re-sharding never changes a hash."""
+    Scale rule for the shard count: a local partition holds
+    ~candidates-per-query / shards rows, so shards = expected
+    candidates / target-partition-rows (e.g. ~1M). 64 covers every
+    registered caller: the ANN paths feed bounded candidate sets
+    (~bucket·nprobe per query) and the exact x39 baseline is itself
+    the documented O(|Q|·corpus) boundary whose escape is x42. The
+    result is shard-count-invariant, so re-sharding never changes a
+    hash."""
     from pyspark.sql import Window
 
-    shard = F.crc32(F.col(id_col).cast("string")) % n_shards
-    w_local = Window.partitionBy(query_col, "__shard").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+    shard = F.crc32(F.col(VEC_ID).cast("string")) % 64
+    w_local = Window.partitionBy("query_id", "__shard").orderBy(
+        F.col("cosine").desc(), F.col(VEC_ID).asc()
     )
     partial = (
         scored.withColumn("__shard", shard)
@@ -394,8 +364,8 @@ def hierarchical_topk(
         .filter(F.col("__lr") <= k)
         .drop("__shard", "__lr")
     )
-    w_global = Window.partitionBy(query_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+    w_global = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col(VEC_ID).asc()
     )
     return (
         partial.withColumn("rnk", F.row_number().over(w_global).cast("bigint"))
@@ -452,8 +422,6 @@ def batch_ann_topk(
     k: int = 3,
     bits: int | None = 4,
     nprobe: int | None = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN-backed batch retrieval (the scale path for batch top-k
     similarity joins): every corpus vector is LSH-bucketed once
@@ -492,9 +460,9 @@ def batch_ann_topk(
             f"single-bit-flip probe structure yields at most bits+1="
             f"{bits + 1} distinct probes"
         )
-    planes = _hyperplanes_from_data(emb, vec_col, id_col, bits)
-    corpus = emb.withColumn("__b", _bucket_expr(vec_col, planes)).withColumn(
-        "__nb", V.norm(vec_col)
+    planes = _hyperplanes_from_data(emb, bits)
+    corpus = emb.withColumn("__b", _bucket_expr(VEC_COL, planes)).withColumn(
+        "__nb", V.norm(VEC_COL)
     )
 
     # per-query bucket + probe list: ONE plane_dots kernel call per
@@ -536,18 +504,18 @@ def batch_ann_topk(
 
     cand = corpus.join(
         F.broadcast(probed), F.col("__b") == F.col("__probe")
-    ).filter(F.col(id_col) != F.col("query_id"))
+    ).filter(F.col(VEC_ID) != F.col("query_id"))
     scored = cand.select(
         "query_id",
-        F.col(id_col),
+        F.col(VEC_ID),
         F.round(
             V.cosine_from_parts(
-                F.col(vec_col), F.col("qvec"), F.col("__na"), F.col("__nb")
+                F.col(VEC_COL), F.col("qvec"), F.col("__na"), F.col("__nb")
             ),
             4,
         ).alias("cosine"),
     )
-    return hierarchical_topk(scored, k, id_col=id_col)
+    return hierarchical_topk(scored, k)
 
 
 def _nearest_cell_expr(col, cents: list[list[float]]):
@@ -680,10 +648,7 @@ def resolve_ivf_cells(n_corpus: int) -> int:
 
 
 def refine_centroids(
-    emb: DataFrame,
-    cents: list[list[float]],
-    iters: int,
-    vec_col: str = "embedding",
+    emb: DataFrame, cents: list[list[float]], iters: int
 ) -> list[list[float]]:
     """Lloyd k-means refinement, one distributed pass per iteration:
     assign every vector to its nearest centroid (JVM expression),
@@ -694,10 +659,10 @@ def refine_centroids(
     (standard empty-cluster fallback)."""
     dim = len(cents[0])
     for _ in range(iters):
-        assigned = emb.withColumn("__cell", assign_cells(F.col(vec_col), cents))
+        assigned = emb.withColumn("__cell", assign_cells(F.col(VEC_COL), cents))
         stats = (
             assigned.select(
-                "__cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
+                "__cell", F.posexplode(F.col(VEC_COL)).alias("pos", "val")
             )
             .groupBy("__cell", "pos")
             .agg(F.avg("val").alias("m"))
@@ -717,8 +682,6 @@ def build_ivf_index(
     emb: DataFrame,
     n_cells: int | None = 8,
     kmeans_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     persist: bool = True,
 ) -> dict:
     """Build the IVF index ONCE: deterministic centroid seeds (first
@@ -749,8 +712,8 @@ def build_ivf_index(
     if n_cells is None:
         n_cells = resolve_ivf_cells(emb.count())
     cents = [
-        list(map(float, r[vec_col]))
-        for r in emb.orderBy(id_col).limit(n_cells).collect()
+        list(map(float, r[VEC_COL]))
+        for r in emb.orderBy(VEC_ID).limit(n_cells).collect()
     ]
     if not cents:
         # fail HERE, not three plan nodes later: with zero centroids
@@ -762,8 +725,8 @@ def build_ivf_index(
             "(0 vectors — no centroid seeds exist)"
         )
     if kmeans_iters:
-        cents = refine_centroids(emb, cents, vec_col=vec_col, iters=kmeans_iters)
-    assigned = emb.withColumn("__cell", assign_cells(F.col(vec_col), cents))
+        cents = refine_centroids(emb, cents, iters=kmeans_iters)
+    assigned = emb.withColumn("__cell", assign_cells(F.col(VEC_COL), cents))
     if persist:
         assigned = assigned.persist()
     return {"cents": cents, "assigned": assigned}
@@ -789,8 +752,6 @@ def ivf_topk(
     n_cells: int = 8,
     nprobe: int = 2,
     kmeans_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     index: dict | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: the query probes the ``nprobe`` nearest cells
@@ -801,10 +762,7 @@ def ivf_topk(
     if index is None:
         # unowned inline build: nothing would ever unpersist it, so
         # the assignment stays a plain frame (single consumer anyway)
-        index = build_ivf_index(
-            emb, n_cells, kmeans_iters, id_col=id_col, vec_col=vec_col,
-            persist=False,
-        )
+        index = build_ivf_index(emb, n_cells, kmeans_iters, persist=False)
     cents, assigned = index["cents"], index["assigned"]
     probe_cells = sorted(
         range(len(cents)), key=lambda i: -probe_cos(query_vec, cents[i])
@@ -813,22 +771,19 @@ def ivf_topk(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = assigned.filter(F.col("__cell").isin(*probe_cells))
     scored = cand.select(
-        F.col(id_col),
-        F.round(V.cosine_similarity(F.col(vec_col), q), 4).alias("cosine"),
+        F.col(VEC_ID),
+        F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(k)
 
 
 def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
     k: int = 60,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rnk",
-    dp: int = 12,
 ) -> DataFrame:
-    """Reciprocal-rank fusion of two ranked retrieval lists (Cormack
+    """Reciprocal-rank fusion of two ranked (query_id, doc_id, rnk)
+    retrieval lists (Cormack
     et al., SIGIR'09) — the standard hybrid-retrieval combiner for a
     lexical (BM25) and a dense (ANN) ranking:
 
@@ -836,7 +791,7 @@ def rrf_fuse(
 
     computed EXACTLY: with da = k + rank_a and db = k + rank_b, the
     sum is the rational (da + db)/(da·db), ranked by its integer
-    floor scaling ``(da + db)·10^dp DIV (da·db)`` — no float
+    floor scaling ``(da + db)·10^dp DIV (da·db)`` at dp = 12 — no float
     addition whose engine-specific rounding could flip a tie (the
     x54 no-ln convention applied to unit fractions). A document
     missing from one list contributes only its present term (the
@@ -863,18 +818,18 @@ def rrf_fuse(
     top-k lists, so rows per query are bounded by 2k, never corpus-
     sized; the join shuffles list-sized frames only.
     """
-    scale = 10**dp
+    scale = 10**12
     a = ranked_a.select(
-        query_col,
-        id_col,
-        (F.col(rank_col).cast("bigint") + F.lit(k)).alias("__da"),
+        "query_id",
+        "doc_id",
+        (F.col("rnk").cast("bigint") + F.lit(k)).alias("__da"),
     )
     b = ranked_b.select(
-        query_col,
-        id_col,
-        (F.col(rank_col).cast("bigint") + F.lit(k)).alias("__db"),
+        "query_id",
+        "doc_id",
+        (F.col("rnk").cast("bigint") + F.lit(k)).alias("__db"),
     )
-    j = a.join(b, [query_col, id_col], "full_outer")
+    j = a.join(b, ["query_id", "doc_id"], "full_outer")
     da, db = F.col("__da"), F.col("__db")
     score = (
         F.when(
@@ -884,12 +839,10 @@ def rrf_fuse(
         .when(da.isNotNull(), F.call_function("div", F.lit(scale), da))
         .otherwise(F.call_function("div", F.lit(scale), db))
     )
-    scored = j.select(
-        query_col, id_col, score.alias("rrf_scaled")
-    )
+    scored = j.select("query_id", "doc_id", score.alias("rrf_scaled"))
     from pyspark.sql import Window
 
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_scaled").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("rrf_scaled").desc(), F.col("doc_id").asc()
     )
     return scored.withColumn("fused_rank", F.row_number().over(w))

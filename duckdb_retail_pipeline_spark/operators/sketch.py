@@ -177,16 +177,16 @@ def frequent_tokens(
     return topk.crossJoin(F.broadcast(bound))
 
 
-def exact_topk_tokens(tokens: DataFrame, k: int, col: str = "token") -> DataFrame:
+def exact_topk_tokens(tokens: DataFrame, k: int) -> DataFrame:
     """The plain full-vocabulary groupBy top-k — the shape the MG
     path exists to avoid at scale, kept as the unconditional-exact
     fallback. Same schema as :func:`frequent_tokens`
     (heavy_bound_holds is TRUE: the result IS exact by
     construction)."""
     return (
-        tokens.groupBy(col)
+        tokens.groupBy("token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), F.col(col).asc())
+        .orderBy(F.col("n_occurrences").desc(), F.col("token").asc())
         .limit(k)
         .withColumn("heavy_bound_holds", F.lit(True))
     )
@@ -196,8 +196,6 @@ def frequent_tokens_exact(
     tokens: DataFrame,
     k: int = 20,
     capacity: int = 400,
-    col: str = "token",
-    total: DataFrame | None = None,
     max_doublings: int = 2,
 ) -> DataFrame:
     """:func:`frequent_tokens` with auto-escalation: when the
@@ -215,11 +213,11 @@ def frequent_tokens_exact(
     probe pass, the price of the unconditional-exactness contract."""
     cap = capacity
     for _ in range(max_doublings + 1):
-        res = frequent_tokens(tokens, k=k, capacity=cap, col=col, total=total)
+        res = frequent_tokens(tokens, k=k, capacity=cap)
         ok = res.agg(
             F.min(F.col("heavy_bound_holds").cast("int")).alias("ok")
         ).first()["ok"]
         if ok == 1:
             return res
         cap *= 2
-    return exact_topk_tokens(tokens, k, col=col)
+    return exact_topk_tokens(tokens, k)

@@ -14,7 +14,7 @@ exact aggregate.
 Exactness (the x54 integer-scaled-rational convention): a centered
 period-p MA over integer cents is (2·Σ_{t−(p/2−1)..t+(p/2−1)} x +
 x_{t−p/2} + x_{t+p/2}) / 2p, so the operator emits the exact
-NUMERATOR ``trend_x2p`` (bigint; ×24 at the default period=12) and
+NUMERATOR ``trend_x2p`` (bigint; ×24 at period 12) and
 the detrended series ``detr_x2p`` = 2p·x − trend_x2p — integer sums
 are fold-order-independent, so both columns are bit-identical in
 ANSI SQL at any partitioning. Float appears only in single-division
@@ -39,8 +39,9 @@ convention.
 Scale shape: one shuffle on the series key for the windows (at 100 TB
 the series frame is the output of an upstream aggregation, orders of
 magnitude smaller than the facts), one groupBy for the seasonal
-means. Period length is a parameter; 12 (monthly/annual) is the
-default and keeps the ×(2·period) scaling exact for any even period.
+means. The period is 12 (monthly/annual), the one series every caller
+decomposes; another period is the change to make for another cadence,
+and any even period keeps the ×(2·period) scaling exact.
 """
 
 from __future__ import annotations
@@ -48,86 +49,68 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: season length in periods of ``t``; even (the half-weight endpoint
+#: form of the centered MA)
+PERIOD = 12
 
-def decompose_additive(
-    series: DataFrame,
-    key: str = "key",
-    t: str = "t",
-    cents: str = "cents",
-    period: int = 12,
-) -> DataFrame:
+
+def decompose_additive(series: DataFrame) -> DataFrame:
     """Add exact-integer trend/detrended columns to a (key, t, cents)
-    series frame: ``trend_x2p`` = 2·period × the centered moving
-    average (bigint, NULL where the ±period/2 window is incomplete)
-    and ``detr_x2p`` = 2·period·cents − trend_x2p. ``t`` must be an
-    integer period index (e.g. months since epoch); ``period`` must
-    be even (the half-weight endpoint form of the centered MA)."""
-    if period % 2 != 0:
-        raise ValueError(f"period must be even, got {period}")
-    half = period // 2
-    w = Window.partitionBy(key).orderBy(t)
-    inner = F.sum(cents).over(w.rangeBetween(-(half - 1), half - 1))
-    lo = F.sum(cents).over(w.rangeBetween(-half, -half))
-    hi = F.sum(cents).over(w.rangeBetween(half, half))
-    n_rows = F.count(cents).over(w.rangeBetween(-half, half))
+    series frame: ``trend_x2p`` = 2·PERIOD × the centered moving
+    average (bigint, NULL where the ±PERIOD/2 window is incomplete)
+    and ``detr_x2p`` = 2·PERIOD·cents − trend_x2p. ``t`` must be an
+    integer period index (e.g. months since epoch)."""
+    half = PERIOD // 2
+    w = Window.partitionBy("key").orderBy("t")
+    inner = F.sum("cents").over(w.rangeBetween(-(half - 1), half - 1))
+    lo = F.sum("cents").over(w.rangeBetween(-half, -half))
+    hi = F.sum("cents").over(w.rangeBetween(half, half))
+    n_rows = F.count("cents").over(w.rangeBetween(-half, half))
     n_periods = F.size(
-        F.collect_set(F.col(t)).over(w.rangeBetween(-half, half))
+        F.collect_set(F.col("t")).over(w.rangeBetween(-half, half))
     )
     trend = F.when(
-        (n_rows == F.lit(period + 1)) & (n_periods == F.lit(period + 1)),
+        (n_rows == F.lit(PERIOD + 1)) & (n_periods == F.lit(PERIOD + 1)),
         (F.lit(2) * inner + lo + hi).cast("bigint"),
     )
-    scale = 2 * period
-    meta = {"period": period}
     return series.select(
-        F.col(key),
-        F.col(t),
-        F.col(cents),
-        trend.alias("trend_x2p", metadata=meta),
-        (F.lit(scale) * F.col(cents) - trend)
+        F.col("key"),
+        F.col("t"),
+        F.col("cents"),
+        trend.alias("trend_x2p"),
+        (F.lit(2 * PERIOD) * F.col("cents") - trend)
         .cast("bigint")
-        .alias("detr_x2p", metadata=meta),
+        .alias("detr_x2p"),
     )
 
 
-def seasonal_means(
-    decomposed: DataFrame,
-    key: str = "key",
-    t: str = "t",
-) -> DataFrame:
+def seasonal_means(decomposed: DataFrame) -> DataFrame:
     """Per-(key, period position) seasonal component over the
     detrended series: exact integer (sum, count) plus one-division
     presentation means. ``seasonal_avg`` is the (uncentered) additive
     seasonal component in the input value column's units
-    (sum / (count·2·period)).
+    (sum / (count·2·PERIOD)).
 
-    The period travels WITH the decomposed frame (column metadata
-    written by :func:`decompose_additive`) rather than as a second
-    free parameter — a caller decomposing at period=4 and averaging
-    at an independent default of 12 would get silently mis-grouped
-    positions and a 3×-wrong scale (r10 review). ``pos`` uses pmod,
-    so a negative time index (months relative to a mid-corpus
-    reference) lands in the same position as its positive calendar
-    twin — plain ``%`` follows the dividend sign in BOTH engines, so
-    the cross-engine differential could never catch that split."""
-    field = {f.name: f for f in decomposed.schema.fields}["detr_x2p"]
-    period = field.metadata["period"]
-    scale = 2 * period
+    ``pos`` uses pmod, so a negative time index (months relative to
+    a mid-corpus reference) lands in the same position as its
+    positive calendar twin — plain ``%`` follows the dividend sign in
+    BOTH engines, so the cross-engine differential could never catch
+    that split."""
     return (
         decomposed.filter(F.col("detr_x2p").isNotNull())
-        .groupBy(key, F.pmod(F.col(t), F.lit(period)).alias("pos"))
+        .groupBy("key", F.pmod(F.col("t"), F.lit(PERIOD)).alias("pos"))
         .agg(
             F.sum("detr_x2p").cast("bigint").alias("seasonal_sum_x2p"),
             F.count(F.lit(1)).cast("bigint").alias("n_obs"),
         )
         .select(
-            key,
+            "key",
             "pos",
             "seasonal_sum_x2p",
             "n_obs",
             (
                 F.col("seasonal_sum_x2p").cast("double")
-                / (F.col("n_obs") * F.lit(float(scale)))
+                / (F.col("n_obs") * F.lit(float(2 * PERIOD)))
             ).alias("seasonal_avg"),
         )
     )

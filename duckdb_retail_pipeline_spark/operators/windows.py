@@ -2,31 +2,25 @@
 
 The reference's entire window surface is two functions (SURVEY.md
 §2.5): LAST_VALUE-ignore-nulls forward fill and LAG gap detection.
-Both are global ORDER BY date windows there; here every operator
-takes optional partition columns because a single unpartitioned
-window is the one thing that cannot scale — at 100 TB you partition
-by series key (currency, user, …) and each partition's window runs
-independently.
+Both are global ORDER BY date windows there and here: every caller
+runs them over one ~1k-row daily series. A single unpartitioned
+window is the one thing that cannot scale, so at scale the change to
+make is partitioning by series key (currency, user, …), after which
+each partition's window runs independently.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _window(partition_by: Sequence[str] | None, order_by: str) -> WindowSpec:
-    w = Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    return w.orderBy(order_by)
 
 
 def forward_fill(
     df: DataFrame,
     value_col: str,
     order_col: str,
-    partition_by: Sequence[str] | None = None,
     out_col: str | None = None,
 ) -> DataFrame:
     """Carry the last non-NULL ``value_col`` forward along
@@ -34,27 +28,22 @@ def forward_fill(
     ``LAST_VALUE(x IGNORE NULLS) OVER (ORDER BY date ROWS BETWEEN
     UNBOUNDED PRECEDING AND CURRENT ROW)`` (src/models/facts.py:191-194).
 
-    With ``partition_by=None`` this is a single-partition window
-    (fine for a ~1k-row daily FX series; documented cost). For dense
-    multi-series data pass the series key.
+    This is a single-partition window (fine for a ~1k-row daily FX
+    series; documented cost).
     """
-    w = _window(partition_by, order_col).rowsBetween(
+    w = Window.orderBy(order_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return df.withColumn(out_col or value_col, F.last(value_col, ignorenulls=True).over(w))
 
 
-def gaps(
-    df: DataFrame,
-    date_col: str,
-    partition_by: Sequence[str] | None = None,
-) -> DataFrame:
+def gaps(df: DataFrame, date_col: str) -> DataFrame:
     """Rows where the previous date is more than 1 day back — the
     reference's calendar-continuity check (src/models/dimensions.py:129-138).
     Returns (date, prev_date, gap_days) for each gap."""
-    w = _window(partition_by, date_col)
+    w = Window.orderBy(date_col)
     return (
-        df.select(*(partition_by or []), date_col)
+        df.select(date_col)
         .withColumn("prev_date", F.lag(date_col).over(w))
         .withColumn("gap_days", F.datediff(F.col(date_col), F.col("prev_date")))
         .filter(F.col("gap_days") > 1)

@@ -79,20 +79,22 @@ _GLYPHS: dict[str, tuple[str, ...]] = {
 }
 
 
-def draw_text(
-    canvas: np.ndarray, x: int, y: int, text: str, color=(30, 30, 30), scale: int = 2
-) -> None:
+#: screen pixels per glyph pixel
+GLYPH_PX = 2
+
+
+def draw_text(canvas: np.ndarray, x: int, y: int, text: str) -> None:
     """Blit ``text`` (chars outside the font render as space) at
-    (x, y) top-left, ``scale``x pixel size."""
+    (x, y) top-left, ``GLYPH_PX``x pixel size."""
     cx = x
     for ch in text.upper():
         glyph = _GLYPHS.get(ch, _GLYPHS[" "])
         for gy, row in enumerate(glyph):
             for gx, bit in enumerate(row):
                 if bit == "1":
-                    y0, x0 = y + gy * scale, cx + gx * scale
-                    canvas[y0 : y0 + scale, x0 : x0 + scale] = color
-        cx += 6 * scale
+                    y0, x0 = y + gy * GLYPH_PX, cx + gx * GLYPH_PX
+                    canvas[y0 : y0 + GLYPH_PX, x0 : x0 + GLYPH_PX] = (30, 30, 30)
+        cx += 6 * GLYPH_PX
 
 
 # -- marks -----------------------------------------------------------------
@@ -110,7 +112,6 @@ def draw_bars(
     canvas: np.ndarray,
     panel: tuple[int, int, int, int],
     values: Sequence[float],
-    color=(61, 90, 241),
 ) -> None:
     """Bar chart filling ``panel`` = (y0, x0, y1, x1). Bars grow from
     the ZERO line, not the panel bottom — a signed series renders
@@ -134,14 +135,12 @@ def draw_bars(
         lo, hi = sorted((vpx, zero_px))
         hi = max(hi, lo + 1)  # a 0-height bar stays a visible tick
         bx = x0 + i * slot + (slot - bar_w) // 2
-        canvas[y1 - hi : y1 - lo, bx : bx + bar_w] = color
+        canvas[y1 - hi : y1 - lo, bx : bx + bar_w] = (61, 90, 241)
 
 def draw_polyline(
     canvas: np.ndarray,
     panel: tuple[int, int, int, int],
     values: Sequence[float],
-    color=(200, 80, 60),
-    thickness: int = 2,
 ) -> None:
     """Line chart across ``panel`` (x spread evenly, y min-max
     scaled); simple integer interpolation, no anti-aliasing."""
@@ -157,7 +156,7 @@ def draw_polyline(
         for s in range(steps + 1):
             px = ax + (bx - ax) * s // steps
             py = ay + (by - ay) * s // steps
-            canvas[py : py + thickness, px : px + thickness] = color
+            canvas[py : py + 2, px : px + 2] = (200, 80, 60)
 
 
 def panel_frame(canvas: np.ndarray, panel: tuple[int, int, int, int]) -> None:

@@ -249,16 +249,15 @@ def sql_money_sum(expr: str, dp: int = 2) -> str:
     return f"CAST(SUM(CAST(ROUND(({expr}) * {scale}, 0) AS BIGINT)) / {scale}.0 AS DOUBLE)"
 
 
-def money_avg(col: Column, dp: int = 2) -> Column:
-    """Exact-mean: integer-cent sum over non-null count, one division."""
-    scale = 10**dp
-    cents = F.round(col * scale, 0).cast("bigint")
-    return F.sum(cents) / F.nullif(F.count(col) * F.lit(float(scale)), F.lit(0.0))
+def money_avg(col: Column) -> Column:
+    """Exact-mean of a raw (2-dp) money column: integer-cent sum over
+    non-null count, one division."""
+    cents = F.round(col * 100, 0).cast("bigint")
+    return F.sum(cents) / F.nullif(F.count(col) * F.lit(100.0), F.lit(0.0))
 
 
-def sql_money_avg(expr: str, dp: int = 2) -> str:
-    scale = 10**dp
+def sql_money_avg(expr: str) -> str:
     return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * {scale}, 0) AS BIGINT))"
-        f" / NULLIF(COUNT({expr}) * {scale}.0, 0.0) AS DOUBLE)"
+        f"CAST(SUM(CAST(ROUND(({expr}) * 100, 0) AS BIGINT))"
+        f" / NULLIF(COUNT({expr}) * 100.0, 0.0) AS DOUBLE)"
     )

@@ -56,7 +56,6 @@ _X40_DEV_SLOT: list = []
 # ---------------------------------------------------------------------------
 SQL_TOKS = r"list_filter(string_split_regex({x}, '\s+'), t -> t != '')"
 SQL_HASH28 = "('0x' || substr(md5({s}), 1, 7))::BIGINT"
-SQL_HASH60 = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
 
 
 def sql_fingerprint(text: str) -> str:
@@ -290,9 +289,9 @@ def x05_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- x06
-def _sql_minhash_terms(hs: str, num_hashes: int = 16) -> list[str]:
+def _sql_minhash_terms(hs: str) -> list[str]:
     terms = []
-    for i in range(num_hashes):
+    for i in range(16):
         a, b = 2 * i + 1, 1000003 * (i + 1)
         terms.append(f"list_min(list_transform({hs}, h -> (h * {a} + {b}) % {MINHASH_P}))")
     return terms

@@ -56,13 +56,10 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
-    # local default 8 MB: the testdata ships one small parquet per
-    # table, and 128 MB splits would serialize 600k-row scans onto
-    # 1-2 of 32 cores. On a real cluster (many files, fat executors)
-    # set SPARK_GRAFT_MAX_PARTITION_BYTES=134217728.
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)
-    ),
+    # 8 MB: the testdata ships one small parquet per table, and
+    # 128 MB splits would serialize 600k-row scans onto 1-2 of 32
+    # cores.
+    "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
 }
 
 

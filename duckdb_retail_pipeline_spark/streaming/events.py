@@ -193,7 +193,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_stream(spark, sf_dir, "documents.parquet")
 
 
-def streaming_exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     """Streaming ingestion dedup: canonical fingerprint + stateful
     ``dropDuplicates`` — Spark keeps the set of seen keys as
     streaming state, so each fingerprint is emitted exactly once
@@ -207,7 +207,7 @@ def streaming_exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ``dropDuplicatesWithinWatermark`` to cap state."""
     from ..functions import text as T
 
-    return docs.select(T.fingerprint(text_col).alias("fp")).dropDuplicates(["fp"])
+    return docs.select(T.fingerprint(T.TEXT_COL).alias("fp")).dropDuplicates(["fp"])
 
 
 def stateful_user_running_totals(events: DataFrame) -> DataFrame:
@@ -316,7 +316,6 @@ def stream_upsert_daily_totals(
     spark: SparkSession,
     sf_dir: str,
     dest_path: str,
-    timeout_s: int = 120,
     max_files_per_trigger: int | None = None,
     glob: str = "events.parquet",
     checkpoint: str | None = None,
@@ -528,9 +527,9 @@ def stream_upsert_daily_totals(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(120):
         q.stop()
-        raise TimeoutError(f"streaming upsert {name!r} did not finish in {timeout_s}s")
+        raise TimeoutError(f"streaming upsert {name!r} did not finish in 120s")
     if fresh or pending:
         # the run is committed — swap staged partials into dest
         # (delete-then-rename per batch id), THEN retire prior-run

@@ -339,3 +339,24 @@ def test_first_table_read_applies_session_contract(spark, sf_dir, tmp_path):
     foreign.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     assert load_table(foreign, str(tmp_path), "region").count() > 0
     assert {k: foreign.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+
+
+def test_second_session_read_applies_session_contract(spark, sf_dir, tmp_path):
+    """The table memo keys on the session, not the shared applicationId:
+    after the fixture session has read a table, a second session of the
+    same SparkContext reading it gets its own first read, and with it
+    the session contract, instead of the first session's frame."""
+    import shutil
+
+    from duckdb_retail_pipeline_spark.catalog import load_table, table_path
+    from duckdb_retail_pipeline_spark.session import RUNTIME_CONFS
+
+    shutil.copy(table_path(sf_dir, "region"), table_path(str(tmp_path), "region"))
+    first = load_table(spark, str(tmp_path), "region")
+    assert first.count() > 0
+    second = spark.newSession()
+    second.conf.set("spark.sql.ansi.enabled", "false")
+    second.conf.set("spark.sql.session.timeZone", "America/New_York")
+    df = load_table(second, str(tmp_path), "region")
+    assert {k: second.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+    assert df.sparkSession is second
