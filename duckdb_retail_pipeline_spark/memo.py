@@ -13,6 +13,11 @@ Three entry points share three private pieces:
   while its signature holds and otherwise unpersisted and replaced, so a
   store is bounded by its keys, not by the number of regenerations.
 
+Eviction frees what the entry holds, at once: a cached frame's SQL-cache
+entry, and a checkpointed leaf's blocks (``_unpersist``). It frees
+nothing an entry only reads: a frame built over another entry's leaf
+leaves that leaf's blocks to the other entry's own eviction.
+
 ``dataset_memo`` keys on (session, dataset dir, tag) and signs the dir's
 parquet files; ``memoized_count`` keys on (session, canonical plan) and
 signs the plan's input files. The session is the SparkSession object
@@ -130,11 +135,19 @@ def _input_signature(df: DataFrame) -> frozenset | None:
 
 
 def _unpersist(value: Any) -> None:
+    """Free the storage an evicted entry holds. A frame whose plan IS a
+    ``LogicalRDD`` (a checkpointed leaf, as ``build_layer`` serves) holds
+    its blocks on that RDD, which ``DataFrame.unpersist()`` does not
+    touch; any other frame is dropped from the SQL cache."""
     frames = value.values() if isinstance(value, dict) else [value]
     for f in frames:
         if isinstance(f, DataFrame):
             try:
-                f.unpersist()
+                plan = f._jdf.queryExecution().logical()
+                if plan.getClass().getSimpleName() == "LogicalRDD":
+                    plan.rdd().unpersist(False)
+                else:
+                    f.unpersist()
             except Exception:  # noqa: BLE001 — best-effort cleanup
                 pass
 

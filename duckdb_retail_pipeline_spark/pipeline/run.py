@@ -3,20 +3,38 @@
 The layer graph is declared once, in ``_LAYERS``: each layer's plan
 builder over a lookup of its upstream layers. Two modes read it:
 
-- ``build_layer``: one layer as a lazy DataFrame, memoized per
-  (session, dataset, layer) — what the query registry uses; Catalyst
-  sees the layer's whole ancestor chain and optimizes across it.
+- ``build_layer``: one layer, memoized per (session, dataset, layer) —
+  what the query registry uses. A layer in ``_CACHED`` is served as an
+  eagerly materialized, lineage-truncated leaf (a local checkpoint at
+  the serialized ``MEMORY_AND_DISK`` level), so a query over it is
+  planned over one small ``LogicalRDD`` instead of re-describing the
+  whole upstream chain on every action. ``layer_plan`` is the layer's
+  plan before truncation (its own joins and exchanges over the memoized
+  upstream leaves).
 - ``run_pipeline``: materialized mode — each layer written to a
   parquet warehouse dir (the Spark analogue of the reference's
   DROP+CTAS layering), facts **partitioned by month** so downstream
   date-range queries prune partitions; this is the 100 TB layout.
   ``--rebuild`` maps to mode("overwrite") (reference src/run.py:41-42).
+
+Both modes cut lineage at every materialized layer: ``run_pipeline`` by
+reading the written parquet back, ``build_layer`` by checkpointing. No
+cross-layer rewrite is lost: Catalyst does not optimize across a cached
+or checkpointed boundary.
+
+The trade-off of a local checkpoint: its blocks cannot be recomputed
+from lineage. If an executor holding a layer's blocks is lost (on a
+cluster), actions over that layer fail loudly with Spark's missing
+checkpoint-block error, where a ``.cache()`` would have recomputed
+silently. The memo does not rebuild on that error; a new session (or a
+change to the dataset, which re-signs the entry) does.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,12 +85,13 @@ _LAYERS = {
 
 LAYER_ORDER = _STAGING_KEYS + tuple(_LAYERS)
 
-# Layers build_layer caches: staging feeds four consumers, dims feed
-# fct_sales + the agg layer, fct_sales feeds fx/eur/agg, eur facts feed
-# agg/view/validation, and the agg layer is the reference's explicitly
-# materialized pre-aggregation table (facts.py:347-412; uncached it was
-# the only layer whose every action replayed the full fact aggregation —
-# bench r13: pl09 warm ~0.97 s vs 0.05-0.12 s for the cached layers).
+# Layers build_layer materializes as checkpointed leaves: staging feeds
+# four consumers, dims feed fct_sales + the agg layer, fct_sales feeds
+# fx/eur/agg, eur facts feed agg/view/validation, and the agg layer is
+# the reference's explicitly materialized pre-aggregation table
+# (facts.py:347-412; unmaterialized it was the only layer whose every
+# action replayed the full fact aggregation — bench r13: pl09 warm
+# ~0.97 s vs 0.05-0.12 s for the cached layers).
 # daily_fx_rates and the view are dimension-cheap projections.
 _CACHED = frozenset(
     {"raw_retail_data", "dim_calendar", "dim_product", "dim_customer",
@@ -83,16 +102,42 @@ _CACHED = frozenset(
 _BY_MONTH = frozenset({"fct_sales", "fct_sales_eur"})
 
 
+def layer_plan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One layer's plan before lineage truncation: its builder over the
+    memoized upstream layers (``build_layer``), so the frame shows the
+    layer's own joins and exchanges, not its ancestors'. Not memoized;
+    plan tests and ``tools/capture_plans.py`` read it."""
+    if name in _STAGING_KEYS:
+        return staging.load_staging(spark, sf_dir)[name]
+    return _LAYERS[name](lambda up: build_layer(spark, sf_dir, up))
+
+
+def _leaf(name: str, df: DataFrame) -> DataFrame:
+    """``df`` as an eagerly materialized, lineage-truncated leaf when
+    ``name`` is in ``_CACHED``. PySpark's ``MEMORY_AND_DISK`` stores
+    serialized blocks, near the columnar cache's footprint; the default
+    level stores deserialized rows, several times larger."""
+    if name not in _CACHED:
+        return df
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
 def build_layer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One pipeline layer as a lazy DataFrame, memoized through
-    ``dataset_memo`` under the tag ``layer:<name>`` (staging's three
-    frames share the one ``layer:staging`` entry). A first call builds
-    only the layer's ancestor chain — a ``pl03`` caller pays for staging
-    and calendar plan construction, never for fct/eur/agg/validation
-    plans it does not execute. Repeat calls
-    return the SAME handle, so ``.cache()`` entries are shared; a fresh
-    ``spark.read.parquet`` does not canonicalize equal to a cached plan
-    (file-index identity), so rebuilding would register duplicates.
+    """One pipeline layer, memoized through ``dataset_memo`` under the
+    tag ``layer:<name>`` (staging's three frames share the one
+    ``layer:staging`` entry). A first call builds only the layer's
+    ancestor chain — a ``pl03`` caller pays for staging and calendar,
+    never for fct/eur/agg/validation it does not read. Repeat calls
+    return the SAME handle.
+
+    A ``_CACHED`` layer is materialized by its first call (an eager
+    local checkpoint of ``layer_plan``) and served as a leaf: its
+    logical plan is one ``LogicalRDD`` over the checkpoint blocks,
+    so downstream layers and queries are planned over small leaves and
+    an action no longer re-plans the whole upstream chain. The blocks
+    cannot be recomputed from lineage: losing an executor that holds
+    them fails the actions over that layer (see the module docstring).
+    ``memo`` frees them when a dataset change evicts the entry.
 
     Concurrent first calls build each layer once: ``dataset_memo``
     holds the key lock of ``layer:<name>`` while the builder resolves
@@ -104,16 +149,12 @@ def build_layer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         def load() -> dict[str, DataFrame]:
             raw = staging.load_staging(spark, sf_dir)
-            return {k: df.cache() if k in _CACHED else df for k, df in raw.items()}
+            return {k: _leaf(k, df) for k, df in raw.items()}
 
         return memo.dataset_memo(spark, sf_dir, "layer:staging", load)[name]
-    build = _LAYERS[name]
-
-    def plan() -> DataFrame:
-        df = build(lambda up: build_layer(spark, sf_dir, up))
-        return df.cache() if name in _CACHED else df
-
-    return memo.dataset_memo(spark, sf_dir, f"layer:{name}", plan)
+    return memo.dataset_memo(
+        spark, sf_dir, f"layer:{name}", lambda: _leaf(name, layer_plan(spark, sf_dir, name))
+    )
 
 
 def run_pipeline(

@@ -22,10 +22,10 @@ from pyspark.sql import functions as F
 from duckdb_retail_pipeline_spark.operators.windows import gaps
 
 
-def _count(name: str, df: DataFrame) -> DataFrame:
-    return df.agg(F.count(F.lit(1)).alias("violations")).select(
-        F.lit(name).alias("check_name"), "violations"
-    )
+def _rows(df: DataFrame) -> DataFrame:
+    """A one-row aggregate whose columns are named after checks, as one
+    ``(check_name, violations)`` row per column, in column order."""
+    return df.unpivot([], df.columns, "check_name", "violations")
 
 
 def validation_checks(
@@ -38,56 +38,61 @@ def validation_checks(
     agg_country_day: DataFrame,
 ) -> DataFrame:
     """UNION ALL of labeled violation counts — all must be zero on a
-    healthy build."""
-    checks = [
-        _count("calendar_gaps", gaps(dim_calendar, "date")),
-        _count(
-            "orphan_vs_calendar",
-            fct_sales.join(dim_calendar, "date", "left_anti"),
-        ),
-        _count(
-            "orphan_vs_product",
-            fct_sales.join(dim_product, "stock_code", "left_anti"),
-        ),
-        _count(
-            "orphan_vs_customer",
-            fct_sales.join(dim_customer, "customer_id", "left_anti"),
-        ),
-        _count(
-            "fx_uncovered_dates",
-            fct_sales.select("date").distinct().join(
-                daily_fx_rates, "date", "left_anti"
+    healthy build. Eight rows, in the order of the module docstring.
+
+    The four fact checks share one pass over ``fct_sales``: it is
+    left-joined once to each key set (calendar dates, product and
+    customer keys, FX dates) and each check is one ``count_if`` over the
+    unmatched rows; FX coverage counts the DISTINCT unmatched dates
+    (``date`` is never NULL: fct_sales inner-joins the calendar on it).
+    Every key set is unique by construction — one calendar and one FX
+    row per spine day, one dim row per grouped key — so no left join can
+    fan a fact row out. The two agg_country_day checks are one aggregate
+    too."""
+
+    def keys(df: DataFrame, col: str, flag: str) -> DataFrame:
+        return df.select(col, F.lit(True).alias(flag))
+
+    unmatched = lambda flag: F.col(flag).isNull()  # noqa: E731
+    facts = (
+        fct_sales.select("date", "stock_code", "customer_id")
+        .join(keys(dim_calendar, "date", "_cal"), "date", "left")
+        .join(keys(dim_product, "stock_code", "_prod"), "stock_code", "left")
+        .join(keys(dim_customer, "customer_id", "_cust"), "customer_id", "left")
+        .join(keys(daily_fx_rates, "date", "_fx"), "date", "left")
+        .agg(
+            F.count_if(unmatched("_cal")).alias("orphan_vs_calendar"),
+            F.count_if(unmatched("_prod")).alias("orphan_vs_product"),
+            F.count_if(unmatched("_cust")).alias("orphan_vs_customer"),
+            F.count_distinct(F.when(unmatched("_fx"), F.col("date"))).alias(
+                "fx_uncovered_dates"
             ),
+        )
+    )
+    null_eur = fct_sales_eur.agg(
+        F.count_if(
+            F.col("unit_price_eur").isNull() | F.col("gross_amount_eur").isNull()
+        ).alias("null_eur_conversion")
+    )
+    agg = agg_country_day.agg(
+        F.count_if((F.col("orders") < 0) | (F.col("items") < 0)).alias(
+            "negative_orders_or_items"
         ),
-        _count(
-            "null_eur_conversion",
-            fct_sales_eur.filter(
-                F.col("unit_price_eur").isNull()
-                | F.col("gross_amount_eur").isNull()
-            ),
-        ),
-        _count(
-            "negative_orders_or_items",
-            agg_country_day.filter((F.col("orders") < 0) | (F.col("items") < 0)),
-        ),
-        _count(
-            "fx_sanity_ratio",
-            # |net_gbp − net_eur×0.8654| / |net_gbp| must stay ≤10%
-            # (reference facts.py:544's constant); guard zero-revenue rows.
-            agg_country_day.filter(
-                (F.col("net_revenue_gbp") != 0)
-                & (
-                    F.abs(
-                        F.col("net_revenue_gbp")
-                        - F.col("net_revenue_eur") * F.lit(0.8654)
-                    )
-                    / F.abs(F.col("net_revenue_gbp"))
-                    > 0.1
-                )
-            ),
-        ),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
+        # |net_gbp − net_eur×0.8654| / |net_gbp| must stay ≤10%
+        # (reference facts.py:544's constant); guard zero-revenue rows.
+        F.count_if(
+            (F.col("net_revenue_gbp") != 0)
+            & (
+                F.abs(F.col("net_revenue_gbp") - F.col("net_revenue_eur") * F.lit(0.8654))
+                / F.abs(F.col("net_revenue_gbp"))
+                > 0.1
+            )
+        ).alias("fx_sanity_ratio"),
+    )
+    cal_gaps = gaps(dim_calendar, "date").agg(
+        F.count(F.lit(1)).alias("calendar_gaps")
+    )
+    out = _rows(cal_gaps)
+    for part in (facts, null_eur, agg):
+        out = out.unionByName(_rows(part))
     return out

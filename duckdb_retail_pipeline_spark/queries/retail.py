@@ -256,6 +256,7 @@ def _layer_query(layer: str):
         return build_layer(spark, sf_dir, layer)
 
     fn.__name__ = f"pl_{layer}"
+    fn.layer = layer  # tools/capture_plans.py captures the layer's layer_plan
     return fn
 
 

@@ -7,9 +7,17 @@ import tempfile
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from duckdb_retail_pipeline_spark import memo
 from duckdb_retail_pipeline_spark.pipeline import staging
-from duckdb_retail_pipeline_spark.pipeline.run import LAYER_ORDER, build_layer, run_pipeline
+from duckdb_retail_pipeline_spark.pipeline.run import (
+    _CACHED,
+    LAYER_ORDER,
+    build_layer,
+    run_pipeline,
+)
+from duckdb_retail_pipeline_spark.pipeline.validate import validation_checks
 
 
 def test_run_pipeline_materializes_and_validates(spark, sf_dir):
@@ -137,4 +145,81 @@ def test_concurrent_build_layer_builds_each_layer_once(spark, data_copy, monkeyp
         "layer:staging", "layer:dim_calendar", "layer:dim_product",
         "layer:dim_customer", "layer:fct_sales", "layer:daily_fx_rates",
         "layer:fct_sales_eur", "layer:agg_country_day",
+    }
+
+
+def _leaf_rdd_id(df) -> int:
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def _stored_rdd_ids(spark) -> set[int]:
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_cached_layers_are_checkpointed_leaves(spark, data_copy):
+    """Every materialized layer is served as ONE LogicalRDD leaf, so a
+    query over it is planned without its upstream chain."""
+    for name in sorted(_CACHED):
+        plan = build_layer(spark, data_copy, name)._jdf.queryExecution().analyzed()
+        leaves = plan.collectLeaves()
+        assert leaves.size() == 1, (name, plan.toString())
+        assert leaves.apply(0).getClass().getSimpleName() == "LogicalRDD", (name, plan.toString())
+
+
+def test_dataset_change_frees_evicted_leaf_blocks(spark, data_copy):
+    """DataFrame.unpersist() does not free checkpoint blocks; the memo's
+    eviction must, as soon as a dataset change replaces the entries."""
+    old = {name: _leaf_rdd_id(build_layer(spark, data_copy, name)) for name in _CACHED}
+    assert set(old.values()) <= _stored_rdd_ids(spark)
+
+    part = next(
+        os.path.join(data_copy, f) for f in sorted(os.listdir(data_copy))
+        if f.endswith(".parquet") and os.path.isfile(os.path.join(data_copy, f))
+    )
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+
+    build_layer(spark, data_copy, "agg_country_day")  # re-signs every cached layer
+    stored = _stored_rdd_ids(spark)
+    assert not set(old.values()) & stored, {n: i for n, i in old.items() if i in stored}
+    assert _leaf_rdd_id(build_layer(spark, data_copy, "agg_country_day")) in stored
+
+
+def test_validation_counts_injected_violations(spark, sf_dir):
+    """Each fused check still sees its own kind of bad row: two fact rows
+    whose date, product and customer are in no dimension (one uncovered
+    date between them), and one EUR row with a NULL amount."""
+    L = {name: build_layer(spark, sf_dir, name) for name in LAYER_ORDER[3:10]}
+    orphans = (
+        L["fct_sales"].limit(2)
+        .withColumn("date", F.to_date(F.lit("1900-01-01")))
+        .withColumn("stock_code", F.lit("NO-SUCH-SKU"))
+        .withColumn("customer_id", F.lit(-999.0))
+    )
+    null_eur = L["fct_sales_eur"].limit(1).withColumn(
+        "gross_amount_eur", F.lit(None).cast("double")
+    )
+    rows = validation_checks(
+        L["dim_calendar"],
+        L["dim_product"],
+        L["dim_customer"],
+        L["fct_sales"].unionByName(orphans),
+        L["daily_fx_rates"],
+        L["fct_sales_eur"].unionByName(null_eur),
+        L["agg_country_day"],
+    ).collect()
+    assert [r["check_name"] for r in rows] == [
+        "calendar_gaps", "orphan_vs_calendar", "orphan_vs_product",
+        "orphan_vs_customer", "fx_uncovered_dates", "null_eur_conversion",
+        "negative_orders_or_items", "fx_sanity_ratio",
+    ]
+    assert {r["check_name"]: r["violations"] for r in rows} == {
+        "calendar_gaps": 0,
+        "orphan_vs_calendar": 2,
+        "orphan_vs_product": 2,
+        "orphan_vs_customer": 2,
+        "fx_uncovered_dates": 1,
+        "null_eur_conversion": 1,
+        "negative_orders_or_items": 0,
+        "fx_sanity_ratio": 0,
     }

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.pipeline.run import layer_plan
 from duckdb_retail_pipeline_spark.plans import explain as X
 from duckdb_retail_pipeline_spark.queries import REGISTRY
 from duckdb_retail_pipeline_spark.queries.base import tbl
@@ -46,7 +47,7 @@ def test_scaling_tables_broadcast_via_threshold_not_hint(spark, sf_dir):
 def test_staging_star_broadcasts_via_threshold(spark, sf_dir):
     """pl01's customer/part joins are unhinted; threshold-driven
     broadcast must still fire at test SF."""
-    df = REGISTRY["pl01_staging_retail"].fn(spark, sf_dir)
+    df = layer_plan(spark, sf_dir, "raw_retail_data")
     assert X.broadcast_join_count(df) >= 2, X.formatted_plan(df)
     assert X.sort_merge_join_count(df) == 0, X.formatted_plan(df)
 
@@ -215,7 +216,7 @@ def test_agg_country_day_post_agg_calendar_join(spark, sf_dir):
     """pl09's shuffle must carry only (date, country) grouping keys;
     the calendar attributes join on the aggregated rows (broadcast),
     so no 8-key exchange appears in the plan."""
-    df = REGISTRY["pl09_agg_country_day"].fn(spark, sf_dir)
+    df = layer_plan(spark, sf_dir, "agg_country_day")
     plan = X.formatted_plan(df)
     shuffles = plan.split("hashpartitioning(")[1:]
     assert shuffles, plan
@@ -442,7 +443,7 @@ def test_fact_layer_dims_broadcast_via_threshold_not_hint(spark, sf_dir):
     # optimal plan and explicitly allowed; only the second run sees
     # materialized cache stats, so assert on the final adaptive plan
     # of a fresh invocation after warmup.
-    for name in ("pl06_fct_sales", "pl09_agg_country_day"):
-        REGISTRY[name].fn(spark, sf_dir).collect()  # materialize caches
-        plan = X.final_plan(REGISTRY[name].fn(spark, sf_dir))
+    for name in ("fct_sales", "agg_country_day"):
+        layer_plan(spark, sf_dir, name).collect()  # warm-up run
+        plan = X.final_plan(layer_plan(spark, sf_dir, name))
         assert plan.count("BroadcastHashJoin") >= 2, (name, plan)

@@ -68,11 +68,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     fct = build_layer(spark, sf_dir, "fct_sales_eur")
-    n_fct = fct.count()  # also materializes the cache (the A side)
+    n_fct = fct.count()  # the A side: build_layer materialized it already
     dim_customer = build_layer(spark, sf_dir, "dim_customer")
     dim_calendar = build_layer(spark, sf_dir, "dim_calendar")
 
-    # A: current shape — pre-agg over the session-cached fct frame
+    # A: current shape — pre-agg over the session-memoized fct leaf
     timed(
         "pl09_cached_fct",
         sf_dir,
