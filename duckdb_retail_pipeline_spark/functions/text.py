@@ -27,6 +27,11 @@ from pyspark.sql.types import ArrayType, LongType
 #: text operator serves
 DOC_ID = "doc_id"
 TEXT_COL = "text"
+#: winnowing's character k-gram length and sliding-window size: any
+#: shared substring of CHAR_GRAM + WINNOW_WINDOW - 1 = 8 characters
+#: shares a fingerprint
+CHAR_GRAM = 5
+WINNOW_WINDOW = 4
 
 # Fixed salts for the MinHash permutation family — (a*h + b) mod P on
 # a shared **28-bit** base hash (first 7 md5 hex chars). 28 bits keeps
@@ -78,20 +83,21 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     )
 
 
-def word_ngrams_all(col: Column | str, n: int = 2) -> Column:
-    """ALL word n-gram occurrences (non-distinct, in order) — the
-    repetition metrics need occurrence counts, not the set that
-    ``word_shingles`` returns for dedup."""
-    toks = tokens(col)
+def word_ngrams_all() -> Column:
+    """ALL word 2-gram occurrences of the text column (non-distinct, in
+    order) — the repetition metrics need occurrence counts, not the set
+    that ``word_shingles`` returns for dedup."""
+    toks = tokens(TEXT_COL)
     idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - F.lit(n))
+        F.size(toks) >= 2, F.sequence(F.lit(0), F.size(toks) - F.lit(2))
     ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)))
 
 
-def jaccard(a: Column | str, b: Column | str) -> Column:
-    """Exact Jaccard similarity of two array-typed sets."""
-    a, b = _c(a), _c(b)
+def jaccard() -> Column:
+    """Exact Jaccard similarity of the array-typed shingle sets
+    ``sh_a`` and ``sh_b`` of a candidate pair."""
+    a, b = F.col("sh_a"), F.col("sh_b")
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b) - F.size(F.array_intersect(a, b))).cast("double")
     return inter / F.nullif(union, F.lit(0.0))
@@ -225,11 +231,11 @@ def _build_simhash_kernel():
 _arrow_simhash = _build_simhash_kernel()
 
 
-def minhash_from_hashes_hof(base: Column | str, num_hashes: int = 16) -> Column:
-    """The HOF MinHash kernel (interpreted; kept for the bit-identity
-    tests — it is the readable spec of the cross-engine contract the
-    DuckDB oracle twins pin)."""
-    base = _c(base)
+def minhash_from_hashes_hof(num_hashes: int) -> Column:
+    """The HOF MinHash kernel over the 28-bit hash column ``hs``
+    (interpreted; kept for the bit-identity tests — it is the readable
+    spec of the cross-engine contract the DuckDB oracle twins pin)."""
+    base = F.col("hs")
     def perm(a: int, b: int):
         # NB: a plain closure, not default-arg binding — Spark counts
         # a lambda's parameters to bind HOF variables, so extra
@@ -267,10 +273,10 @@ def minhash_signature_from_hashes(base: Column | str, num_hashes: int = 16) -> C
     return _minhash_kernel(num_hashes)(_c(base))
 
 
-def simhash64_hof(toks: Column | str) -> Column:
-    """The HOF SimHash kernel (interpreted; kept for the bit-identity
-    tests)."""
-    t = _c(toks)
+def simhash64_hof() -> Column:
+    """The HOF SimHash kernel over the token column ``tk``
+    (interpreted; kept for the bit-identity tests)."""
+    t = F.col("tk")
     # For each of 60 bits: sum over tokens of (bit set ? +1 : -1);
     # bit b of token hash h = (h >> b) & 1. Expressed as one
     # aggregate per bit over the token array — JVM-side, no UDF.
@@ -334,14 +340,14 @@ def lang_marker_hits(col: Column | str, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*markers)))
 
 
-def predict_lang(col: Column | str) -> Column:
-    """Pick the language with the most marker hits; zero-hit
-    documents fall back to 'und' (undetermined), and a TIE between
-    languages resolves to the alphabetically-smallest winner — NOT
-    'und' (r11 review corrected this docstring: the x03 oracle pins
+def predict_lang() -> Column:
+    """Pick the language of the text column with the most marker hits;
+    zero-hit documents fall back to 'und' (undetermined), and a TIE
+    between languages resolves to the alphabetically-smallest winner —
+    NOT 'und' (r11 review corrected this docstring: the x03 oracle pins
     the alphabetical tie-break on both engines; the code always
     behaved this way)."""
-    c = _c(col)
+    c = F.col(TEXT_COL)
     hit_cols = {lang: lang_marker_hits(c, lang) for lang in LANG_MARKERS}
     best = F.greatest(*hit_cols.values())
     out = F.lit("und")
@@ -352,33 +358,36 @@ def predict_lang(col: Column | str) -> Column:
     return out
 
 
-def char_gram_hashes(col: Column | str, k: int = 5) -> Column:
-    """Ordered character-k-gram 28-bit hash sequence (winnowing
-    input). MUST be materialized as a real column value (behind an
-    exchange or cache) before ``winnow_from_hashes`` references it:
+def char_gram_hashes() -> Column:
+    """Ordered character-``CHAR_GRAM``-gram 28-bit hash sequence of the
+    text column (winnowing input). MUST be materialized as a real
+    column value (behind an exchange or cache) before
+    ``winnow_from_hashes`` references it:
     a lambda that references this expression re-evaluates the entire
     gram+md5 pipeline per element — Catalyst has no cross-lambda
     common-subexpression elimination (measured 400× slowdown)."""
-    c = _c(col)
+    c = F.col(TEXT_COL)
     grams = F.when(
-        F.length(c) >= k, F.sequence(F.lit(1), F.length(c) - F.lit(k - 1))
+        F.length(c) >= CHAR_GRAM,
+        F.sequence(F.lit(1), F.length(c) - F.lit(CHAR_GRAM - 1)),
     ).otherwise(F.array().cast("array<int>"))
     # the shared 28-bit md5 hash convention — one definition
     # (shingle_hashes28) serves word shingles and char grams alike
-    return shingle_hashes28(F.transform(grams, lambda i: c.substr(i, F.lit(k))))
+    return shingle_hashes28(F.transform(grams, lambda i: c.substr(i, F.lit(CHAR_GRAM))))
 
 
-def winnow_from_hashes(hs: Column | str, window: int = 4) -> Column:
-    """Winnowing (Schleimer et al., MOSS) fingerprints from a
-    materialized k-gram hash sequence: the distinct minima of each
-    ``window``-sized sliding window. Any match of length ≥
-    k+window-1 shares a fingerprint."""
-    h = _c(hs)
+def winnow_from_hashes() -> Column:
+    """Winnowing (Schleimer et al., MOSS) fingerprints from the
+    materialized k-gram hash sequence column ``hs``: the distinct
+    minima of each ``WINNOW_WINDOW``-sized sliding window. Any match of
+    length ≥ CHAR_GRAM+WINNOW_WINDOW-1 shares a fingerprint."""
+    h = F.col("hs")
     positions = F.when(
-        F.size(h) >= window, F.sequence(F.lit(1), F.size(h) - F.lit(window - 1))
+        F.size(h) >= WINNOW_WINDOW,
+        F.sequence(F.lit(1), F.size(h) - F.lit(WINNOW_WINDOW - 1)),
     ).otherwise(F.array().cast("array<int>"))
     return F.array_distinct(
-        F.transform(positions, lambda p: F.array_min(F.slice(h, p, window)))
+        F.transform(positions, lambda p: F.array_min(F.slice(h, p, WINNOW_WINDOW)))
     )
 
 
@@ -427,9 +436,8 @@ def chunk_starts(toks: Column | str, chunk_size: int, overlap: int) -> Column:
     )
 
 
-def chunk_text(toks: Column | str, start: Column, chunk_size: int) -> Column:
-    """The chunk at token offset ``start``: chunk_size tokens re-joined
-    with single spaces (the canonical whitespace form the fingerprint
-    and dedup operators already assume)."""
-    t = _c(toks)
-    return F.array_join(F.slice(t, start + 1, chunk_size), " ")
+def chunk_text(start: Column) -> Column:
+    """The chunk at token offset ``start`` of the token column ``toks``:
+    128 tokens re-joined with single spaces (the canonical whitespace
+    form the fingerprint and dedup operators already assume)."""
+    return F.array_join(F.slice(F.col("toks"), start + 1, 128), " ")

@@ -190,8 +190,9 @@ def dot_hof(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def norm_hof(a: Column | str) -> Column:
-    return F.sqrt(dot_hof(a, a))
+def norm_hof() -> Column:
+    """L2 norm of the embedding column through the HOF fold."""
+    return F.sqrt(dot_hof(VEC_COL, VEC_COL))
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

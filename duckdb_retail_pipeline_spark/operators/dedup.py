@@ -200,24 +200,28 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     return _pair_dedup(
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn("jaccard", F.round(T.jaccard("sh_a", "sh_b"), 4))
+        .withColumn("jaccard", F.round(T.jaccard(), 4))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard"),
         "jaccard",
     )
 
 
+# minhash_lsh_pairs' banding: a 16-permutation signature in 8 bands of 2
+_BANDS = 8
+_ROWS_PER_BAND = 2
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.7,
-    num_hashes: int = 16,
-    bands: int = 8,
     verify: str = "auto",
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with exact Jaccard.
 
-    rows-per-band = num_hashes/bands; a pair lands in a candidate
-    bucket iff one band of their signatures matches exactly. The
+    The 16-permutation signature is cut into ``_BANDS`` bands of
+    ``_ROWS_PER_BAND`` rows; a pair lands in a candidate bucket iff
+    one band of their signatures matches exactly. The
     banding join is an equi-join on (band_idx, band_signature) — the
     only shuffle that scales with corpus size. Exact Jaccard then
     filters false positives, so output = true near-dups ∩ LSH recall.
@@ -269,11 +273,8 @@ def minhash_lsh_pairs(
       ``round(double, 4)`` (conventions #10; differentially tested
       against pairs mode).
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide evenly into bands")
     if verify not in ("auto", "pairs", "group"):
         raise ValueError(f"unknown verify mode {verify!r}")
-    rows_per_band = num_hashes // bands
 
     # Stage the md5 shingle hashes as their own column so the 16
     # permutation minima reuse them (inline, each would re-md5), and
@@ -284,7 +285,9 @@ def minhash_lsh_pairs(
         _spread(docs, DOC_ID, heavy=True)
         .select(F.col(DOC_ID), T.word_shingles(TEXT_COL, 3).alias("sh"))
         .withColumn("hs", T.shingle_hashes28(F.col("sh")))
-        .withColumn("sig", T.minhash_signature_from_hashes(F.col("hs"), num_hashes))
+        .withColumn(
+            "sig", T.minhash_signature_from_hashes(F.col("hs"), _BANDS * _ROWS_PER_BAND)
+        )
         .drop("hs"),
         _MINHASH_BASE_SLOT,
     )
@@ -312,9 +315,9 @@ def minhash_lsh_pairs(
                 *[
                     F.struct(
                         F.lit(i).alias("band"),
-                        F.slice("sig", i * rows_per_band + 1, rows_per_band).alias("key"),
+                        F.slice("sig", i * _ROWS_PER_BAND + 1, _ROWS_PER_BAND).alias("key"),
                     )
-                    for i in range(bands)
+                    for i in range(_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -326,8 +329,8 @@ def minhash_lsh_pairs(
         # shuffle
         bkeys = F.array(
             *[
-                F.slice("sig", i * rows_per_band + 1, rows_per_band)
-                for i in range(bands)
+                F.slice("sig", i * _ROWS_PER_BAND + 1, _ROWS_PER_BAND)
+                for i in range(_BANDS)
             ]
         )
         with_sh = banded.join(
@@ -410,7 +413,7 @@ def minhash_lsh_pairs(
     verified = (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn("jaccard", F.round(T.jaccard("sh_a", "sh_b"), 4))
+        .withColumn("jaccard", F.round(T.jaccard(), 4))
         .filter(F.col("jaccard") >= threshold)
     )
     return _pair_dedup(verified.select("id_a", "id_b", "jaccard"), "jaccard")
@@ -867,12 +870,11 @@ def semantic_dedup(
     emb: DataFrame,
     threshold: float = 0.97,
     n_cells: int = 8,
-    kmeans_iters: int = 2,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
-    embedding space with k-means, then prune semantic near-dups
-    WITHIN each cluster — data-adaptive blocking, where the other
-    embedding path here (embedding_dup_pairs) blocks by random
+    embedding space around n_cells centroids, then prune semantic
+    near-dups WITHIN each cluster — data-adaptive blocking, where the
+    other embedding path here (embedding_dup_pairs) blocks by random
     hyperplane signs. The paper's regime is web-scale pretraining
     corpora where semantically-identical-but-textually-different
     documents (mirrors, templates, paraphrases) survive every
@@ -890,12 +892,13 @@ def semantic_dedup(
     component rule would also keep nothing but A — callers wanting
     transitive groups compose with connected_components instead.
 
-    Returns (vec_id, cell, cent_cos, keep). Scale shape: the k-means
-    assignment is the IVF build (one distributed pass per Lloyd
-    iteration; only centroid floats reach the driver — see
-    similarity.build_ivf_index), candidate pairs are blocked by the
-    cell equi-join with per-row hoisted norms (cosine_from_parts),
-    O(cell²) per cell with n_cells ≈ √corpus at scale
+    Returns (vec_id, cell, cent_cos, keep). The centroids are the
+    first n_cells vectors by id, unrefined (no Lloyd pass), so a fixed
+    SQL string re-derives the assignment argmax (the x99 oracle).
+    Scale shape: the assignment is the IVF build (only centroid floats
+    reach the driver — see similarity.build_ivf_index), candidate
+    pairs are blocked by the cell equi-join with per-row hoisted norms
+    (cosine_from_parts), O(cell²) per cell with n_cells ≈ √corpus at scale
     (resolve_ivf_cells) — the IVF bound, never all-pairs. Past
     CELL_EXPR_MAX cells the centroid-cosine stage switches from plan
     literals to a broadcast centroid table (r12 — the assign_cells
@@ -931,12 +934,7 @@ def semantic_dedup(
             ),
         )
 
-    idx = S.build_ivf_index(
-        emb,
-        n_cells=n_cells,
-        kmeans_iters=kmeans_iters,
-        persist=False,
-    )
+    idx = S.build_ivf_index(emb, n_cells=n_cells, persist=False)
     cents = idx["cents"]
     assigned = idx["assigned"].select(
         F.col(VEC_ID),

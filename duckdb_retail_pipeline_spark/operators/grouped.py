@@ -28,15 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def grouped_ols(
-    df: DataFrame,
-    group_col: str,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """Per-group closed-form least squares y = intercept + slope*x.
+def grouped_ols(df: DataFrame, group_col: str) -> DataFrame:
+    """Per-group closed-form least squares y = intercept + slope*x over
+    the columns ``x`` and ``y``.
 
-    ``x_col`` must be integer-valued; ``y_col`` integer-valued
+    ``x`` must be integer-valued; ``y`` integer-valued
     ("cents" — scale fixed-point before calling). Returns one row per
     group: (group, n, slope, intercept) with slope/intercept in
     y-units/100 per x-unit (the /100.0 un-scales cents).
@@ -66,8 +62,8 @@ def grouped_ols(
     )
 
     def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ok = pdf[[x_col, y_col]].notna().all(axis=1)
-        for col in (x_col, y_col):
+        ok = pdf[["x", "y"]].notna().all(axis=1)
+        for col in ("x", "y"):
             vals = pdf[col][ok]
             if len(vals) and vals.abs().max() > 2**53:
                 raise ValueError(
@@ -75,8 +71,8 @@ def grouped_ols(
                     "float64 path for nullable ints is lossy there; "
                     "pre-scale the column down"
                 )
-        xs = [int(v) for v in pdf[x_col][ok]]
-        ys = [int(v) for v in pdf[y_col][ok]]
+        xs = [int(v) for v in pdf["x"][ok]]
+        ys = [int(v) for v in pdf["y"][ok]]
         n = len(xs)
         sx = sum(xs)
         sy = sum(ys)
@@ -109,7 +105,7 @@ def grouped_ols(
     # the x24 oracle differential caught the divergence. The
     # in-worker notna mask stays as a safety net for callers that
     # bypass this path.
-    narrow = df.select(group_col, x_col, y_col).filter(
-        F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
+    narrow = df.select(group_col, "x", "y").filter(
+        F.col("x").isNotNull() & F.col("y").isNotNull()
     )
     return narrow.groupBy(group_col).applyInPandas(fit, schema=out_schema)

@@ -151,21 +151,14 @@ def asof_join(
     return out
 
 
-def range_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    left_val: str,
-    right_lo: str,
-    right_hi: str,
-    bucket_width: float,
-) -> DataFrame:
-    """Range join (left.val BETWEEN right.lo AND right.hi) via bucket
+def range_join_bucketed(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Range join (left.v BETWEEN right.lo AND right.hi) via bucket
     equi-join + residual filter, avoiding the O(n·m) theta join: each
-    right interval is exploded to its overlapping buckets, then an
-    equi-join on bucket id prunes to near-candidates. Shared
+    right interval is exploded to its overlapping width-4 buckets, then
+    an equi-join on bucket id prunes to near-candidates. Shared
     column names raise up front (r11 review, the
     asof_join guard reused): the inner join would otherwise emit
-    duplicate-named columns — or make the residual ``left_val``
+    duplicate-named columns — or make the residual ``v``
     reference ambiguous — with an AnalysisException pointing nowhere
     near the cause."""
     collisions = sorted(set(left.columns) & set(right.columns))
@@ -174,17 +167,17 @@ def range_join_bucketed(
             f"range_join_bucketed: column(s) {collisions} exist on both "
             "sides; rename one side before joining"
         )
-    lb = left.withColumn("__bucket", F.floor(F.col(left_val) / bucket_width))
+    lb = left.withColumn("__bucket", F.floor(F.col("v") / 4.0))
     rb = right.withColumn(
         "__bucket",
         F.explode(
             F.sequence(
-                F.floor(F.col(right_lo) / bucket_width).cast("long"),
-                F.floor(F.col(right_hi) / bucket_width).cast("long"),
+                F.floor(F.col("lo") / 4.0).cast("long"),
+                F.floor(F.col("hi") / 4.0).cast("long"),
             )
         ),
     )
     joined = lb.join(rb, ["__bucket"], "inner").filter(
-        (F.col(left_val) >= F.col(right_lo)) & (F.col(left_val) <= F.col(right_hi))
+        (F.col("v") >= F.col("lo")) & (F.col("v") <= F.col("hi"))
     )
     return joined.drop("__bucket")

@@ -154,9 +154,13 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def resize_image(content: bytes, width: int, height: int, fake: bool = False) -> bytes:
+# the resize target's width: cells per pooled row
+GRID = 8
+
+
+def resize_image(content: bytes, height: int, fake: bool = False) -> bytes:
     """Resize codec stub — the real path would be
-    ``PIL.Image.open(...).resize((width, height))``; imaging libs are
+    ``PIL.Image.open(...).resize((GRID, height))``; imaging libs are
     absent in this container, so only the deterministic fake
     (byte-grid pooling, see ``resize_byte_grid``) runs."""
     if not fake:
@@ -167,7 +171,7 @@ def resize_image(content: bytes, width: int, height: int, fake: bool = False) ->
     n = len(content)
     if n == 0:
         return b""
-    cells = width * height
+    cells = GRID * height
     sums = [0] * cells
     counts = [0] * cells
     for j, b in enumerate(content):
@@ -180,10 +184,10 @@ def resize_image(content: bytes, width: int, height: int, fake: bool = False) ->
     return bytes(s // c for s, c in zip(sums, counts) if c)
 
 
-def resize_byte_grid(media: DataFrame, grid: int = 8) -> DataFrame:
+def resize_byte_grid(media: DataFrame) -> DataFrame:
     """The "resize" stage of a media pipeline as Arrow-batched
-    mapInPandas plumbing: each blob's byte stream pools into ``grid``
-    equal-width cells (cell of byte j = (j·grid) // n — the exact
+    mapInPandas plumbing: each blob's byte stream pools into ``GRID``
+    equal-width cells (cell of byte j = (j·GRID) // n — the exact
     integer mapping a nearest-neighbor 1-D downsample uses), emitting
     per-cell byte counts, sums, and the integer-floor mean at 4 dp
     (the floor_ratio convention — cell means are count ratios and can
@@ -196,7 +200,7 @@ def resize_byte_grid(media: DataFrame, grid: int = 8) -> DataFrame:
         # sys.path — same constraint as extract_features)
         import numpy as np
 
-        g = grid
+        g = GRID
 
         for pdf in batches:
             out = []

@@ -11,8 +11,8 @@ operators alive at 100 TB:
                       itself is deterministic row-content hashing —
                       retry-safe where rand() is not)
   salted_group_sum  — two-phase aggregation for skewed group keys
-  write_bucketed /  — bucketBy table layout so repeated joins on the
-  bucketed_join_ready together bucket key co-locate without a shuffle
+  write_bucketed    — bucketBy table layout so repeated joins on the
+                      bucket key co-locate without a shuffle
 """
 
 from __future__ import annotations
@@ -23,36 +23,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# salted_join's fan-out: hot left keys spread over this many sub-keys,
+# and the right side is replicated this many times
+JOIN_SALT = 8
+
+
 def salted_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    salt: int = 8,
     how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the LEFT side's hot keys spread over ``salt``
-    sub-keys and the RIGHT side replicated ``salt``× — turns one
-    monster partition into ``salt`` normal ones at the cost of
-    duplicating the (small) right side.
+    """Equi-join with the LEFT side's hot keys spread over
+    ``JOIN_SALT`` sub-keys and the RIGHT side replicated
+    ``JOIN_SALT``× — turns one monster partition into ``JOIN_SALT``
+    normal ones at the cost of duplicating the (small) right side.
 
     Same contract as ``left.join(right, on, how)``; use when one key
     dominates the left side and the right side is too big to
-    broadcast but small enough to replicate ``salt``×.
+    broadcast but small enough to replicate ``JOIN_SALT``×.
 
     Memory bound (the contract `salted_group_sum` states for its
-    precision): the exploded right side is ``salt`` × |right| rows
-    spread across the shuffle, so each executor must hold at most
-    ~(salt × |right|) / num_partitions rows of the right side per
-    task — replication trades right-side shuffle volume for bounded
-    left-side partition size. Keep ``salt`` small (8–32); if
-    salt × |right| approaches the left side's size, a plain
-    AQE-skew-join is the better tool.
+    precision): the exploded right side is ``JOIN_SALT`` × |right|
+    rows spread across the shuffle, so each executor must hold at
+    most ~(JOIN_SALT × |right|) / num_partitions rows of the right
+    side per task — replication trades right-side shuffle volume for
+    bounded left-side partition size. If JOIN_SALT × |right|
+    approaches the left side's size, a plain AQE-skew-join is the
+    better tool.
 
     Only left-preserving joins are expressible under right-side
     replication: a right/full outer would emit one null-padded row
-    per UNMATCHED REPLICA (salt − 1 phantoms per matched right key,
-    salt copies per unmatched one), so those modes raise instead of
-    silently corrupting.
+    per UNMATCHED REPLICA (JOIN_SALT − 1 phantoms per matched right
+    key, JOIN_SALT copies per unmatched one), so those modes raise
+    instead of silently corrupting.
 
     The salt is ``xxhash64`` over the left row's columns — a
     DETERMINISTIC expression, deliberately: rand()-style salting is
@@ -71,10 +75,10 @@ def salted_join(
             "unmatched replica under right/full outer joins"
         )
     salted_l = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(*left.columns), F.lit(salt)).cast("int")
+        "__salt", F.pmod(F.xxhash64(*left.columns), F.lit(JOIN_SALT)).cast("int")
     )
     salted_r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(JOIN_SALT)]))
     )
     return salted_l.join(salted_r, [on, "__salt"], how).drop("__salt")
 
@@ -83,12 +87,11 @@ def salted_group_sum(
     df: DataFrame,
     group_cols: Sequence[str],
     sum_col: str,
-    salt: int = 16,
     out_col: str = "total",
 ) -> DataFrame:
     """Two-phase skew-proof aggregation: partial sums per
-    (key, salt) — bounded partition size regardless of key skew —
-    then final sums per key. Spark's partial aggregation already does
+    (key, salt), the salt one of 16 — bounded partition size
+    regardless of key skew — then final sums per key. Spark's partial aggregation already does
     this implicitly for algebraic aggregates; the explicit form
     covers pipelines where an exchange on the raw key is forced.
 
@@ -99,7 +102,7 @@ def salted_group_sum(
     ORDER, so any change to it would perturb a float total's last
     ulp, while integer partials are order-independent."""
     partial = (
-        df.withColumn("__salt", F.pmod(F.xxhash64(*df.columns), F.lit(salt)).cast("int"))
+        df.withColumn("__salt", F.pmod(F.xxhash64(*df.columns), F.lit(16)).cast("int"))
         .groupBy(*group_cols, "__salt")
         .agg(F.sum(sum_col).alias("__partial"))
     )
@@ -196,11 +199,3 @@ def write_bucketed(
         table_name
     )
 
-
-def bucketed_join_ready(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — the plan
-    should contain no shuffle exchange on either side (asserted in
-    tests/test_advanced.py)."""
-    return spark.table(left_table).join(spark.table(right_table), on, "inner")

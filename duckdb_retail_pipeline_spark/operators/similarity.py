@@ -137,26 +137,24 @@ def _bucket_expr(vec_col: str, planes: list[list[float]]):
 def lsh_topk(
     emb: DataFrame,
     query_vec: list[float],
-    k: int = 10,
-    bits: int = 4,
     nprobe: int = 1,
 ) -> DataFrame:
-    """ANN top-k: probe the query's LSH bucket (plus, with
-    ``nprobe > 1``, the buckets reached by flipping the query's
+    """ANN top-10 over a 4-bit LSH index: probe the query's bucket
+    (plus, with ``nprobe > 1``, the buckets reached by flipping the query's
     least-confident sign bits — multi-probe LSH, Lv et al. VLDB'07:
     a vector near a hyperplane is equally likely on either side, so
     flipping the smallest-|dot| bits finds the likeliest misses
     without growing the index), exact cosine within the probed set.
     Recall < 1 by construction; pair with ``brute_force_topk`` to
     measure (tests and the x12 driver contract do). Candidate cost
-    scales with nprobe/2^bits of the corpus — the probe list is a
+    scales with nprobe/16 of the corpus — the probe list is a
     driver-side O(nprobe) int list, never a scan."""
-    if nprobe > bits + 1:
+    if nprobe > 5:
         raise ValueError(
-            f"nprobe={nprobe} unrealizable with bits={bits}: at most "
-            f"bits+1={bits + 1} distinct single-bit-flip probes exist"
+            f"nprobe={nprobe} unrealizable with bits=4: at most "
+            "bits+1=5 distinct single-bit-flip probes exist"
         )
-    planes = _hyperplanes_from_data(emb, bits)
+    planes = _hyperplanes_from_data(emb, 4)
     bucketed = emb.withColumn("__bucket", _bucket_expr(VEC_COL, planes))
     probes = _query_probes(planes, query_vec, nprobe)
 
@@ -166,7 +164,7 @@ def lsh_topk(
         F.col(VEC_ID),
         F.round(V.cosine_similarity(F.col(VEC_COL), q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col(VEC_ID).asc()).limit(10)
 
 
 def _query_probes(
@@ -263,7 +261,6 @@ def ann_contract(
     emb: DataFrame,
     query_vec: list[float],
     ann: DataFrame,
-    k: int = 10,
     min_recall_hits: int = 1,
 ) -> DataFrame:
     """One-row boolean contract over an ANN result, computed entirely
@@ -273,23 +270,23 @@ def ann_contract(
     a bit and fails the value hash even though the approximate result
     itself is not SQL-reproducible.
 
-      recall_ge_bound — ≥ min(min_recall_hits, |exact top-k|) of the
-                        exact top-k ids appear in the ANN result. The
+      recall_ge_bound — ≥ min(min_recall_hits, |exact top-10|) of the
+                        exact top-10 ids appear in the ANN result. The
                         floor is clamped at the exact list's size
                         (r13 one-row probe, the a05 vacuous-truth
                         principle): a floor of 5 is unsatisfiable on
                         a 3-vector corpus where perfect recall is 3 —
                         the clamp keeps the contract MEANINGFUL at
                         every corpus size and is the identity on
-                        every registered corpus (|exact| = k there).
+                        every registered corpus (|exact| = 10 there).
       scores_exact    — every ANN cosine equals the exact cosine for
                         that id (the index must never change scores,
                         only the candidate set)
       self_found      — the ANN result contains a cosine≈1 match
                         (the query vector is drawn from the corpus,
                         so its own bucket/cell must return it)
-      returned_k      — the ANN result has exactly min(k, corpus)
-                        rows (= |exact top-k|, same clamp: a
+      returned_k      — the ANN result has exactly min(10, corpus)
+                        rows (= |exact top-10|, same clamp: a
                         2-vector corpus can never return 10)
     """
     q = F.array(*[F.lit(float(x)) for x in query_vec])
@@ -299,10 +296,10 @@ def ann_contract(
     )
     exact_ids = (
         scored_all.orderBy(F.col("exact_cosine").desc(), F.col(VEC_ID).asc())
-        .limit(k)
+        .limit(10)
         .select(VEC_ID, F.lit(1).alias("__in_exact"))
     )
-    # one-row |exact top-k| frame (≤ k rows counted — limit already
+    # one-row |exact top-10| frame (≤ 10 rows counted — limit already
     # applied), broadcast into the contract agg so both clamps read
     # it in-plan; O(1) data, no extra corpus pass (exact_ids is the
     # same subplan the recall join already scans)
@@ -334,15 +331,19 @@ def ann_contract(
     )
 
 
-def hierarchical_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Top-k per query over a (query_id, vec_id, cosine) frame via
-    bounded-partition two-stage rank: local row_number within
-    (query, crc32-shard of id) keeps at most k rows per shard, then a
-    global rank per query runs over ≤ 64 × k survivors. Neither
-    window partition ever holds a corpus-sized slice — the failure
-    mode of a naive rank-over-query partition at 100 TB. Provably
-    identical to the flat rank: any global top-k row is top-k within
-    its shard. Ties break on id ascending (total order).
+#: rows per query of the batch retrievals (x39, x42)
+BATCH_K = 3
+
+
+def hierarchical_topk(scored: DataFrame) -> DataFrame:
+    """Top-``BATCH_K`` per query over a (query_id, vec_id, cosine)
+    frame via bounded-partition two-stage rank: local row_number
+    within (query, crc32-shard of id) keeps at most BATCH_K rows per
+    shard, then a global rank per query runs over ≤ 64 × BATCH_K
+    survivors. Neither window partition ever holds a corpus-sized
+    slice — the failure mode of a naive rank-over-query partition at
+    100 TB. Provably identical to the flat rank: any global top-k row
+    is top-k within its shard. Ties break on id ascending (total order).
 
     Scale rule for the shard count: a local partition holds
     ~candidates-per-query / shards rows, so shards = expected
@@ -361,7 +362,7 @@ def hierarchical_topk(scored: DataFrame, k: int) -> DataFrame:
     partial = (
         scored.withColumn("__shard", shard)
         .withColumn("__lr", F.row_number().over(w_local))
-        .filter(F.col("__lr") <= k)
+        .filter(F.col("__lr") <= BATCH_K)
         .drop("__shard", "__lr")
     )
     w_global = Window.partitionBy("query_id").orderBy(
@@ -369,7 +370,7 @@ def hierarchical_topk(scored: DataFrame, k: int) -> DataFrame:
     )
     return (
         partial.withColumn("rnk", F.row_number().over(w_global).cast("bigint"))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= BATCH_K)
     )
 
 
@@ -419,12 +420,11 @@ def resolve_ann_resolution(n_corpus: int) -> tuple[int, int]:
 def batch_ann_topk(
     emb: DataFrame,
     qset: DataFrame,
-    k: int = 3,
     bits: int | None = 4,
     nprobe: int | None = 3,
 ) -> DataFrame:
     """ANN-backed batch retrieval (the scale path for batch top-k
-    similarity joins): every corpus vector is LSH-bucketed once
+    similarity joins, k = ``BATCH_K``): every corpus vector is LSH-bucketed once
     (sign bits against data-derived hyperplanes, as ``lsh_topk``);
     every QUERY row computes its own bucket plus its multi-probe
     flips (Lv et al. VLDB'07) entirely in-plan — per-plane |dot|
@@ -515,7 +515,7 @@ def batch_ann_topk(
             4,
         ).alias("cosine"),
     )
-    return hierarchical_topk(scored, k)
+    return hierarchical_topk(scored)
 
 
 def _nearest_cell_expr(col, cents: list[list[float]]):

@@ -99,7 +99,7 @@ def build_daily_fx_rates(raw_fx: DataFrame, fct_sales: DataFrame) -> DataFrame:
 
     spine = date_spine_over(fct_sales, "date")
     joined = spine.join(raw_fx, "date", "left")
-    filled = forward_fill(joined, "gbp_per_eur", "date")
+    filled = forward_fill(joined, "gbp_per_eur")
     return filled.filter(F.col("gbp_per_eur").isNotNull())
 
 

@@ -100,12 +100,12 @@ def draw_text(canvas: np.ndarray, x: int, y: int, text: str) -> None:
 # -- marks -----------------------------------------------------------------
 
 
-def _scaled(values: Sequence[float], lo_px: int, hi_px: int) -> list[int]:
+def _scaled(values: Sequence[float], hi_px: int) -> list[int]:
     vals = [float(v) for v in values]
     vmax = max(vals) if vals else 1.0
     vmin = min(0.0, min(vals)) if vals else 0.0
     span = (vmax - vmin) or 1.0
-    return [int(lo_px + (hi_px - lo_px) * (v - vmin) / span) for v in vals]
+    return [int(hi_px * (v - vmin) / span) for v in vals]
 
 
 def draw_bars(
@@ -149,7 +149,7 @@ def draw_polyline(
         return
     n = len(values)
     xs = [x0 + i * (x1 - x0) // (n - 1) for i in range(n)]
-    ys = [y1 - h for h in _scaled(values, 0, y1 - y0)]
+    ys = [y1 - h for h in _scaled(values, y1 - y0)]
     for i in range(n - 1):
         ax, ay, bx, by = xs[i], ys[i], xs[i + 1], ys[i + 1]
         steps = max(abs(bx - ax), abs(by - ay), 1)

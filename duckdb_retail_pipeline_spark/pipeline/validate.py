@@ -89,7 +89,7 @@ def validation_checks(
             )
         ).alias("fx_sanity_ratio"),
     )
-    cal_gaps = gaps(dim_calendar, "date").agg(
+    cal_gaps = gaps(dim_calendar).agg(
         F.count(F.lit(1)).alias("calendar_gaps")
     )
     out = _rows(cal_gaps)

@@ -46,15 +46,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    """True if a parquet PushedFilters entry mentions ``fragment``."""
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "PushedFilters" in line and fragment in line:
-            return True
-    return False
-
-
 def read_schema_columns(df: DataFrame) -> set[str]:
     """Columns actually read from parquet (ReadSchema) — the column-
     pruning check."""

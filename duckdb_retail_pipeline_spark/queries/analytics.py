@@ -41,10 +41,10 @@ from duckdb_retail_pipeline_spark.queries.base import (
 )
 from duckdb_retail_pipeline_spark.queries.extensions import (
     SQL_COSINE_PARTS,
+    SQL_FINGERPRINT,
     SQL_HASH28,
     SQL_TOKS,
     _sql_norm,
-    sql_fingerprint,
 )
 
 # ---------------------------------------------------------------- x43
@@ -502,7 +502,7 @@ def x48_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt = tbl(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("partkey"), "p_brand"
     )
-    joined = SC.salted_join(li, pt, on="partkey", salt=8)
+    joined = SC.salted_join(li, pt, on="partkey")
     return joined.groupBy("p_brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items"),
         money_sum(F.col("l_extendedprice")).alias("revenue"),
@@ -1030,7 +1030,7 @@ def x59_media_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_retail_pipeline_spark.operators import multimodal as M
 
     media = M.documents_as_media(tbl(spark, sf_dir, "documents"))
-    return M.resize_byte_grid(media, grid=8)
+    return M.resize_byte_grid(media)
 
 
 # ---------------------------------------------------------------- x60
@@ -1186,7 +1186,7 @@ def x62_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM documents WHERE doc_id % 10 = 0
         ), fp AS (
             SELECT doc_id, source,
-                   {sql_fingerprint('text')} AS fingerprint
+                   {SQL_FINGERPRINT} AS fingerprint
             FROM aug
         )
         SELECT fingerprint,
@@ -1377,7 +1377,7 @@ def x65_rag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.col("chunk_start").cast("bigint").alias("chunk_start"),
-            T.chunk_text("toks", F.col("chunk_start"), 128).alias("chunk"),
+            T.chunk_text(F.col("chunk_start")).alias("chunk"),
         )
     )
     emb = F.array(
@@ -3673,7 +3673,7 @@ def x98_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- x99
-# SemDeDup under the driver oracle: kmeans_iters=0 pins the centroids
+# SemDeDup under the driver oracle: semantic_dedup pins the centroids
 # to the first _X99_CELLS vectors by id (vec_ids are 0-based at every
 # SF), so a FIXED SQL string reproduces the assignment argmax; the
 # synthetic embeddings are near-orthogonal (no mass above cosine
@@ -3683,10 +3683,10 @@ _X99_CELLS = 4
 _X99_THRESHOLD = 0.3
 
 
-def _x99_cent_cos(col: str, cent: str) -> str:
+def _x99_cent_cos(cent: str) -> str:
     return (
-        f"({SQL_COSINE_PARTS.format(a=col, b=cent)}"
-        f" / NULLIF({_sql_norm(col)} * {_sql_norm(cent)}, 0.0))"
+        f"({SQL_COSINE_PARTS.format(a='e.embedding', b=cent)}"
+        f" / NULLIF({_sql_norm('e.embedding')} * {_sql_norm(cent)}, 0.0))"
     )
 
 
@@ -3700,7 +3700,7 @@ def _x99_cent_cos(col: str, cent: str) -> str:
         base AS (
             SELECT e.vec_id, e.embedding,
                    [{", ".join(
-                       _x99_cent_cos("e.embedding", f"c{k}.v")
+                       _x99_cent_cos(f"c{k}.v")
                        for k in range(_X99_CELLS)
                    )}] AS sims,
                    {_sql_norm("e.embedding")} AS nrm
@@ -3733,12 +3733,12 @@ def _x99_cent_cos(col: str, cent: str) -> str:
     doc="SemDeDup (Abbas et al. 2023, arXiv:2303.09540) under the "
     "driver oracle (operators/dedup.py semantic_dedup — the r11 "
     "pre-built registration, queued by the r10 verdict behind "
-    "x96–x98): k-means-cluster the embedding space, then drop every "
+    "x96–x98): cluster the embedding space, then drop every "
     "row some same-cell neighbor dominates — cosine ≥ threshold to "
     "it AND earlier in the (cent_cos, id) total order (the paper's "
     "keep-the-least-centroid-similar convention made exact by the "
-    "id tie-break over dround(4) centroid cosines). kmeans_iters=0 "
-    "pins centroids to the first 4 vectors by id so the oracle "
+    "id tie-break over dround(4) centroid cosines). The centroids "
+    "are the first 4 vectors by id, unrefined, so the oracle "
     "re-derives the argmax assignment, the centroid-cosine order, "
     "and the dominated anti-join from the same parquet — the "
     "differential test's SQL, promoted (the x96–x98 precedent). "
@@ -3758,5 +3758,4 @@ def x99_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         threshold=_X99_THRESHOLD,
         n_cells=_X99_CELLS,
-        kmeans_iters=0,
     )

@@ -533,7 +533,7 @@ def q15_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spine = DT.date_spine_over(orders, "o_orderdate")
     joined = spine.join(daily, "date", "left")
-    filled = W.forward_fill(joined, "daily_total", "date", out_col="filled_total")
+    filled = W.forward_fill(joined, "daily_total", out_col="filled_total")
     return filled.select("date", "filled_total")
 
 
@@ -559,7 +559,7 @@ def q15_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_lag_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tbl(spark, sf_dir, "orders")
     dates = orders.select(F.to_date("o_orderdate").alias("date")).distinct()
-    return W.gaps(dates, "date").select(
+    return W.gaps(dates).select(
         "date", "prev_date", F.col("gap_days").cast("bigint").alias("gap_days")
     )
 

@@ -58,20 +58,18 @@ SQL_TOKS = r"list_filter(string_split_regex({x}, '\s+'), t -> t != '')"
 SQL_HASH28 = "('0x' || substr(md5({s}), 1, 7))::BIGINT"
 
 
-def sql_fingerprint(text: str) -> str:
-    """DuckDB twin of functions/text.py ``fingerprint`` under the
-    r13 NULL-isolation convention: NULL text → NULL fingerprint,
-    zero-token text → md5('') — the COALESCE exists because DuckDB's
-    array_to_string([]) is NULL where Spark's concat_ws yields ''.
-    The ONE definition every fingerprint-consuming oracle embeds
-    (x01/x04/x28/x34/x63), so a convention change cannot drift
-    per-site."""
-    inner = (
-        "md5(COALESCE(array_to_string("
-        rf"list_filter(string_split_regex(lower({text}), '\s+'),"
-        " t -> t != ''), ' '), ''))"
-    )
-    return f"CASE WHEN {text} IS NOT NULL THEN {inner} END"
+#: DuckDB twin of functions/text.py ``fingerprint`` over the text
+#: column, under the r13 NULL-isolation convention: NULL text → NULL
+#: fingerprint, zero-token text → md5('') — the COALESCE exists because
+#: DuckDB's array_to_string([]) is NULL where Spark's concat_ws yields
+#: ''. The ONE definition every fingerprint-consuming oracle embeds
+#: (x01/x04/x28/x34/x63), so a convention change cannot drift per-site.
+SQL_FINGERPRINT = (
+    "CASE WHEN text IS NOT NULL THEN md5(COALESCE(array_to_string("
+    r"list_filter(string_split_regex(lower(text), '\s+'),"
+    " t -> t != ''), ' '), '')) END"
+)
+
 MINHASH_P = T.MINHASH_PRIME
 
 
@@ -110,7 +108,7 @@ def _aug_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x01_dedup_exact",
     oracle=f"""
-        SELECT {sql_fingerprint('text')} AS fp,
+        SELECT {SQL_FINGERPRINT} AS fp,
                CAST(MIN(doc_id) AS BIGINT) AS keep_id,
                CAST(COUNT(*) AS BIGINT) AS n_copies
         FROM documents
@@ -220,7 +218,7 @@ def x03_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        T.predict_lang("text").alias("predicted_lang"),
+        T.predict_lang().alias("predicted_lang"),
     )
 
 
@@ -228,7 +226,7 @@ def x03_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x04_fingerprint",
     oracle=f"""
-        SELECT doc_id, {sql_fingerprint('text')} AS fingerprint
+        SELECT doc_id, {SQL_FINGERPRINT} AS fingerprint
         FROM documents
     """,
     doc="Document fingerprinting: canonical md5 over normalized "
@@ -492,25 +490,26 @@ _X11_PLANES = V.rademacher_planes(32, 64)
 _X11_BANDS, _X11_BITS = 4, 8
 
 
-def _sql_signed_sum(col: str, plane: list[float]) -> str:
-    """SQL twin of one plane of vectors.plane_dots: the same
+def _sql_signed_sum(plane: list[float]) -> str:
+    """SQL twin of one plane of vectors.plane_dots over the embedding
+    column: the same
     left-to-right double fold over the same element order (list_sum
     of the per-element products), so the sign bit cannot diverge
     between engines —
     re-verified bit-for-bit on real data in tests/test_extensions.py."""
     signs = "[" + ", ".join("1.0" if s > 0 else "-1.0" for s in plane) + "]"
     return (
-        f"list_sum(list_transform(list_zip({col}, {signs}), "
+        f"list_sum(list_transform(list_zip(embedding, {signs}), "
         f"x -> CAST(x[1] AS DOUBLE) * x[2]))"
     )
 
 
-def _sql_band_key(col: str, band: int) -> str:
+def _sql_band_key(band: int) -> str:
     bits = []
     for j in range(_X11_BITS):
         plane = _X11_PLANES[band * _X11_BITS + j]
         bits.append(
-            f"(CASE WHEN {_sql_signed_sum(col, plane)} >= 0 "
+            f"(CASE WHEN {_sql_signed_sum(plane)} >= 0 "
             f"THEN {2 ** j} ELSE 0 END)"
         )
     return "(" + " + ".join(bits) + ")"
@@ -518,7 +517,7 @@ def _sql_band_key(col: str, band: int) -> str:
 
 def _x11_oracle() -> str:
     banded_arms = "\n            UNION ALL\n            ".join(
-        f"SELECT vec_id, {b} AS band, {_sql_band_key('embedding', b)} AS key FROM aug_e"
+        f"SELECT vec_id, {b} AS band, {_sql_band_key(b)} AS key FROM aug_e"
         for b in range(_X11_BANDS)
     )
     cosine = sql_dround(
@@ -610,9 +609,7 @@ def _ann_contract_frame(spark, sf_dir, ann_fn, min_recall_hits: int) -> DataFram
     qvec = S.query_anchor_memo(spark, sf_dir, emb)
     exact = S.brute_force_topk(emb, qvec, k=10)
     ann = ann_fn(emb, qvec)
-    contract = S.ann_contract(
-        emb, qvec, ann, k=10, min_recall_hits=min_recall_hits
-    )
+    contract = S.ann_contract(emb, qvec, ann, min_recall_hits=min_recall_hits)
     return exact.crossJoin(F.broadcast(contract))
 
 
@@ -635,7 +632,7 @@ def _ann_contract_frame(spark, sf_dir, ann_fn, min_recall_hits: int) -> DataFram
 )
 def x12_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_contract_frame(
-        spark, sf_dir, lambda emb, q: S.lsh_topk(emb, q, k=10, bits=4, nprobe=3),
+        spark, sf_dir, lambda emb, q: S.lsh_topk(emb, q, nprobe=3),
         min_recall_hits=3,
     )
 
@@ -802,7 +799,7 @@ def x91_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = dataset_memo(spark, sf_dir, "lsh_index_upserted_b3", build)
     ann = S.lsh_index_query(idx, qvec, k=10, nprobe=4)
     exact = S.brute_force_topk(emb, qvec, k=10)
-    contract = S.ann_contract(emb, qvec, ann, k=10, min_recall_hits=5)
+    contract = S.ann_contract(emb, qvec, ann, min_recall_hits=5)
     # upsert ≡ bulk-load-with-the-same-planes, checked in-plan: the
     # bucketed frames are row-identical by construction, so the two
     # query results must match exactly (both are tiny top-k frames)
@@ -894,7 +891,7 @@ def x14_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x15_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tbl(spark, sf_dir, "events")
-    sess = W.sessionize(ev, "ts", "user_id", gap_minutes=30, tiebreak=["event_id"])
+    sess = W.sessionize(ev)
     return sess.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -1083,12 +1080,12 @@ def x23_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench at the 100× decade — see memo.rotating_persist)
     hashed = rotating_persist(
         docs.repartition(n, "doc_id").select(
-            "doc_id", T.char_gram_hashes("text", k=5).alias("hs")
+            "doc_id", T.char_gram_hashes().alias("hs")
         ),
         _X23_HASHED_SLOT,
     )
     fps = hashed.select(
-        "doc_id", T.winnow_from_hashes("hs", window=4).alias("fps")
+        "doc_id", T.winnow_from_hashes().alias("fps")
     )
     return fps.select("doc_id", F.explode("fps").alias("fp_hash"))
 
@@ -1282,7 +1279,7 @@ def x24_grouped_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("y"),
         )
     )
-    fit = grouped_ols(base, "nation", "x", "y")
+    fit = grouped_ols(base, "nation")
     return fit.select(
         "nation",
         "n",
@@ -1420,7 +1417,7 @@ def x32_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         T.tokens("text").alias("toks"),
-        T.word_ngrams_all("text", 2).alias("grams"),
+        T.word_ngrams_all().alias("grams"),
     )
     wtop = (
         base.select("doc_id", F.explode("toks").alias("w"))
@@ -1560,7 +1557,7 @@ def x33_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survives dropDuplicates is arrival-order dependent, the set is
     # not)
     oracle=f"""
-        SELECT DISTINCT {sql_fingerprint('text')} AS fp
+        SELECT DISTINCT {SQL_FINGERPRINT} AS fp
         FROM documents
     """,
     doc="Streaming ingestion dedup: stateful dropDuplicates on the "
@@ -1605,8 +1602,8 @@ def x35_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
         F.lit(1).cast("bigint").alias("one"),
     )
-    totals = salted_group_sum(ev, ["event_type"], "cents", salt=16, out_col="cents_total")
-    counts = salted_group_sum(ev, ["event_type"], "one", salt=16, out_col="n_events")
+    totals = salted_group_sum(ev, ["event_type"], "cents", out_col="cents_total")
+    counts = salted_group_sum(ev, ["event_type"], "one", out_col="n_events")
     return (
         totals.join(counts, "event_type")
         .select(
@@ -1860,7 +1857,7 @@ def _x39_oracle() -> str:
 def x39_similarity_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tbl(spark, sf_dir, "embeddings")
     qset = _x39_qset(emb)
-    return S.hierarchical_topk(_exact_batch_scored(emb, qset), 3)
+    return S.hierarchical_topk(_exact_batch_scored(emb, qset))
 
 
 def _x39_qset(emb: DataFrame) -> DataFrame:
@@ -2020,9 +2017,7 @@ def x42_ann_batch_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _X42_BITS/_X42_NPROBE = 3/3 at every driver/test SF.
     def _build_ann() -> DataFrame:
         bits, nprobe = S.resolve_ann_resolution(emb.count())
-        return S.batch_ann_topk(
-            emb, qset, k=3, bits=bits, nprobe=nprobe
-        ).persist()
+        return S.batch_ann_topk(emb, qset, bits=bits, nprobe=nprobe).persist()
 
     ann = dataset_memo(spark, sf_dir, "x42_ann_frame", _build_ann)
 
@@ -2039,7 +2034,7 @@ def x42_ann_batch_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = rotating_persist(
         _exact_batch_scored(emb, sample_q), _X42_SCORED_SLOT
     )
-    exact = S.hierarchical_topk(scored, 3)
+    exact = S.hierarchical_topk(scored)
 
     ann_sample = ann.join(F.broadcast(sample_q.select("query_id")), "query_id")
     checked = (
@@ -2284,9 +2279,7 @@ def minhash_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_retail_pipeline_spark.memo import dataset_memo
 
     def build() -> DataFrame:
-        pairs = D.minhash_lsh_pairs(
-            _aug_corpus(spark, sf_dir), threshold=0.7, num_hashes=16, bands=8
-        ).persist()
+        pairs = D.minhash_lsh_pairs(_aug_corpus(spark, sf_dir), threshold=0.7).persist()
         # materialize while the signature table is hot, then release
         # that table: it only serves the BUILD, and it is the largest
         # resident in the dedup family (per-doc shingle arrays — GBs
@@ -2401,7 +2394,7 @@ def x27_text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staged.select(
         "doc_id",
         F.col("chunk_start").cast("bigint").alias("chunk_start"),
-        T.chunk_text("toks", F.col("chunk_start"), 128).alias("chunk"),
+        T.chunk_text(F.col("chunk_start")).alias("chunk"),
         F.size(F.slice("toks", F.col("chunk_start") + 1, 128))
         .cast("bigint")
         .alias("n_chunk_tokens"),
@@ -2427,7 +2420,7 @@ def _x28_oracle() -> str:
         ), keep AS (
             SELECT MIN(doc_id) AS doc_id
             FROM documents
-            GROUP BY {sql_fingerprint('text')}
+            GROUP BY {SQL_FINGERPRINT}
         ), scored AS (
             SELECT doc_id, toks,
                    len(toks) AS n_tokens,
@@ -2489,7 +2482,7 @@ def x28_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         floor_ratio(F.size(F.array_distinct(toks)), n_tok, 4).alias(
             "distinct_ratio"
         ),
-        T.predict_lang("text").alias("predicted_lang"),
+        T.predict_lang().alias("predicted_lang"),
     )
     return (
         scored.join(keep, "doc_id", "left_semi")

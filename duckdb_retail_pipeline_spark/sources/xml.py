@@ -2,7 +2,7 @@
 src/ingestion/fx_data.py:29-92).
 
 Namespace-aware stdlib ElementTree parse of the ECB generic-data
-format: Series[CURRENCY=<cur>] → Obs(TIME_PERIOD, OBS_VALUE) pairs,
+format: Series[CURRENCY=GBP] → Obs(TIME_PERIOD, OBS_VALUE) pairs,
 validating the currency attribute and skipping malformed
 observations — the same tolerant semantics as the reference.
 
@@ -33,8 +33,8 @@ FX_SCHEMA = StructType(
 )
 
 
-def parse_ecb_fx(source: str | bytes, currency: str = "GBP") -> list[tuple]:
-    """Extract (date, rate) pairs for ``currency`` from ECB SDMX XML.
+def parse_ecb_fx(source: str | bytes) -> list[tuple]:
+    """Extract (date, rate) pairs for GBP from ECB SDMX XML.
     Malformed observations are skipped, mirroring the reference's
     per-Obs try/except (fx_data.py:71-92)."""
     tree = ET.parse(BytesIO(source) if isinstance(source, bytes) else source)
@@ -43,7 +43,7 @@ def parse_ecb_fx(source: str | bytes, currency: str = "GBP") -> list[tuple]:
     for series in root.iter(f"{{{ECB_NS['generic']}}}Series"):
         cur_ok = False
         for value in series.iter(f"{{{ECB_NS['generic']}}}Value"):
-            if value.get("id") == "CURRENCY" and value.get("value") == currency:
+            if value.get("id") == "CURRENCY" and value.get("value") == "GBP":
                 cur_ok = True
         if not cur_ok:
             continue
@@ -63,8 +63,6 @@ def parse_ecb_fx(source: str | bytes, currency: str = "GBP") -> list[tuple]:
     return rows
 
 
-def read_ecb_fx(
-    spark: SparkSession, source: str | bytes, currency: str = "GBP"
-) -> DataFrame:
+def read_ecb_fx(spark: SparkSession, source: str | bytes) -> DataFrame:
     """raw_fx_rates(date, gbp_per_eur) from an ECB SDMX document."""
-    return spark.createDataFrame(parse_ecb_fx(source, currency), FX_SCHEMA)
+    return spark.createDataFrame(parse_ecb_fx(source), FX_SCHEMA)

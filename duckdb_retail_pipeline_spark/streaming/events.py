@@ -117,12 +117,12 @@ def sliding_event_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Built-in session windows per user: a session closes after
-    ``gap`` of inactivity."""
+def session_windows(events: DataFrame) -> DataFrame:
+    """Built-in session windows per user: a session closes after 30
+    minutes of inactivity."""
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),

@@ -88,7 +88,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     scale.write_bucketed(
         li.withColumnRenamed("l_orderkey", "key"), "t_lineitem_b", "key", 8
     )
-    joined = scale.bucketed_join_ready(spark, "t_orders_b", "t_lineitem_b", "key")
+    joined = spark.table("t_orders_b").join(spark.table("t_lineitem_b"), "key", "inner")
     # disable broadcast so the join strategy must rely on bucketing;
     # restore the SAVED value, not a hardcoded default (r10 ADVICE)
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -137,11 +137,11 @@ def test_grouped_ols_nonstring_group_and_null_pairs(spark):
         (8, 2, 50),
     ]
     df = spark.createDataFrame(rows, "uid long, x long, y long")
-    out = {r["uid"]: r for r in grouped_ols(df, "uid", "x", "y").collect()}
+    out = {r["uid"]: r for r in grouped_ols(df, "uid").collect()}
     assert out[7]["slope"] == 1.0  # cents slope 100/unit → /100.0
     assert out[7]["n"] == 3
     assert out[8]["slope"] == 0.0
-    assert grouped_ols(df, "uid", "x", "y").schema["uid"].dataType.simpleString() == "bigint"
+    assert grouped_ols(df, "uid").schema["uid"].dataType.simpleString() == "bigint"
 
 
 def test_write_bucketed_reclaims_orphaned_location(spark, sf_dir):

@@ -112,7 +112,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     pt = tbl(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("partkey"), "p_brand"
     )
-    salted = SC.salted_join(li, pt, on="partkey", salt=8).collect()
+    salted = SC.salted_join(li, pt, on="partkey").collect()
     plain = li.join(pt, "partkey").collect()
     assert sorted(map(tuple, salted)) == sorted(map(tuple, plain))
 

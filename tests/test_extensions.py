@@ -26,7 +26,7 @@ def test_lsh_results_subset_of_bruteforce_scores(spark, sf_dir):
         r["vec_id"]: r["cosine"]
         for r in S.brute_force_topk(emb, q, k=10000).collect()
     }
-    approx = S.lsh_topk(emb, q, k=10, bits=4).collect()
+    approx = S.lsh_topk(emb, q).collect()
     assert len(approx) > 0
     for r in approx:
         assert abs(exact[r["vec_id"]] - r["cosine"]) < 1e-9
@@ -48,7 +48,7 @@ def test_lsh_multiprobe_recall(spark, sf_dir):
     }
     hits = {}
     for nprobe in (1, 3):
-        rows = S.lsh_topk(emb, q, k=10, bits=4, nprobe=nprobe).collect()
+        rows = S.lsh_topk(emb, q, nprobe=nprobe).collect()
         for r in rows:
             assert abs(exact_all[r["vec_id"]] - r["cosine"]) < 1e-9
         hits[nprobe] = len(exact_top & {r["vec_id"] for r in rows})
@@ -89,7 +89,7 @@ def test_hierarchical_topk_equals_flat_rank(spark, sf_dir):
 
     emb = tbl(spark, sf_dir, "embeddings")
     scored = _exact_batch_scored(emb, _x39_qset(emb))
-    hier = S.hierarchical_topk(scored, 3).collect()
+    hier = S.hierarchical_topk(scored).collect()
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id").asc()
     )
@@ -120,11 +120,11 @@ def test_batch_ann_topk_contract(spark, sf_dir):
     scored = _exact_batch_scored(emb, qset)
     exact_all = {(r["query_id"], r["vec_id"]): r["cosine"] for r in scored.collect()}
     exact_top = {}
-    for r in S.hierarchical_topk(scored, 3).collect():
+    for r in S.hierarchical_topk(scored).collect():
         exact_top.setdefault(r["query_id"], set()).add(r["vec_id"])
 
     ann = S.batch_ann_topk(
-        emb, qset, k=3, bits=_X42_BITS, nprobe=_X42_NPROBE
+        emb, qset, bits=_X42_BITS, nprobe=_X42_NPROBE
     ).collect()
     by_q = {}
     for r in ann:
@@ -169,10 +169,10 @@ def test_batch_ann_topk_rejects_unrealizable_nprobe(spark, sf_dir):
 
     emb = tbl(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="unrealizable"):
-        S.batch_ann_topk(emb, _x39_qset(emb), k=3, bits=3, nprobe=5)
+        S.batch_ann_topk(emb, _x39_qset(emb), bits=3, nprobe=5)
     q = [0.0] * 64
     with pytest.raises(ValueError, match="unrealizable"):
-        S.lsh_topk(emb, q, k=10, bits=4, nprobe=6)
+        S.lsh_topk(emb, q, nprobe=6)
 
 
 def test_batch_ann_topk_auto_matches_pinned_at_test_sf(spark, sf_dir):
@@ -182,8 +182,8 @@ def test_batch_ann_topk_auto_matches_pinned_at_test_sf(spark, sf_dir):
 
     emb = tbl(spark, sf_dir, "embeddings")
     qset = _x39_qset(emb)
-    auto = S.batch_ann_topk(emb, qset, k=3, bits=None, nprobe=None).collect()
-    pinned = S.batch_ann_topk(emb, qset, k=3, bits=3, nprobe=3).collect()
+    auto = S.batch_ann_topk(emb, qset, bits=None, nprobe=None).collect()
+    pinned = S.batch_ann_topk(emb, qset, bits=3, nprobe=3).collect()
     assert sorted(map(tuple, auto)) == sorted(map(tuple, pinned))
 
 
@@ -213,7 +213,7 @@ def test_resize_real_path_is_stubbed():
     import pytest
 
     with pytest.raises(NotImplementedError):
-        M.resize_image(b"\x89PNG", 8, 8, fake=False)
+        M.resize_image(b"\x89PNG", 8, fake=False)
 
 
 def test_resize_byte_grid_matches_python_reference(spark, sf_dir):
@@ -221,13 +221,13 @@ def test_resize_byte_grid_matches_python_reference(spark, sf_dir):
     same bytes (cell mapping (j*grid)//n, integer-floor means)."""
     docs = tbl(spark, sf_dir, "documents").limit(10)
     media = M.documents_as_media(docs)
-    rows = M.resize_byte_grid(media, grid=8).collect()
+    rows = M.resize_byte_grid(media).collect()
     by_doc: dict[int, dict[int, tuple]] = {}
     for r in rows:
         by_doc.setdefault(r["media_id"], {})[r["cell_idx"]] = r
     for row in docs.collect():
         content = row["text"].encode("utf-8")
-        pooled = M.resize_image(content, 8, 1, fake=True)
+        pooled = M.resize_image(content, 1, fake=True)
         got = by_doc[row["doc_id"]]
         n = len(content)
         assert sum(g["n_cell_bytes"] for g in got.values()) == n
@@ -246,8 +246,8 @@ def test_resize_fake_short_blob_skips_empty_cells():
     the scalar fake must emit exactly those (the grid operator omits
     empty cells), not pad zeros."""
     # n=3, grid=8: cells (0*8)//3=0, (1*8)//3=2, (2*8)//3=5
-    assert M.resize_image(b"abc", 8, 1, fake=True) == bytes([97, 98, 99])
-    assert M.resize_image(b"", 8, 1, fake=True) == b""
+    assert M.resize_image(b"abc", 1, fake=True) == bytes([97, 98, 99])
+    assert M.resize_image(b"", 1, fake=True) == b""
 
 
 def test_grouped_ols_exact_line(spark, sf_dir):
@@ -259,7 +259,7 @@ def test_grouped_ols_exact_line(spark, sf_dir):
         ("b", x, 1000 - 100 * x) for x in range(1, 5)
     ]
     df = spark.createDataFrame(rows, "g string, x int, y long")
-    out = {r["g"]: r for r in grouped_ols(df, "g", "x", "y").collect()}
+    out = {r["g"]: r for r in grouped_ols(df, "g").collect()}
     assert out["a"]["n"] == 7
     assert abs(out["a"]["slope"] - 0.5) < 1e-12
     assert abs(out["a"]["intercept"] - 3.0) < 1e-12
@@ -275,7 +275,7 @@ def test_grouped_ols_degenerate_x(spark, sf_dir):
     df = spark.createDataFrame(
         [("a", 5, 100), ("a", 5, 200)], "g string, x int, y long"
     )
-    row = grouped_ols(df, "g", "x", "y").collect()[0]
+    row = grouped_ols(df, "g").collect()[0]
     assert row["n"] == 2 and row["slope"] is None and row["intercept"] is None
 
 
@@ -552,7 +552,7 @@ def test_hyperplane_band_keys_bitwise_match_oracle(spark, duck, sf_dir):
         for r in D.hyperplane_bands(emb, _X11_PLANES, bands=_X11_BANDS).collect()
     }
     arms = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band, {_sql_band_key('embedding', b)} AS key "
+        f"SELECT vec_id, {b} AS band, {_sql_band_key(b)} AS key "
         "FROM embeddings"
         for b in range(_X11_BANDS)
     )

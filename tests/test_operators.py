@@ -42,7 +42,7 @@ def test_range_join_bucketed(spark):
         [(0.0, 5.0, "low"), (4.0, 10.0, "mid"), (15.0, 30.0, "high")],
         "lo double, hi double, label string",
     )
-    out = J.range_join_bucketed(points, intervals, "v", "lo", "hi", bucket_width=4.0)
+    out = J.range_join_bucketed(points, intervals)
     got = sorted((r["id"], r["label"]) for r in out.collect())
     expected = sorted(
         (i, lab)
@@ -137,7 +137,7 @@ def test_session_boundary_exactly_gap_apart(spark):
     )
     assert sorted(r["n"] for r in native) == [1, 2]  # merge at, split past
 
-    sess = W.sessionize(ev, "ts", "user_id", gap_minutes=30, tiebreak=["event_id"])
+    sess = W.sessionize(ev)
     per_session = sorted(
         r["n"]
         for r in sess.groupBy("session_seq").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -165,7 +165,7 @@ def test_arrow_dot_kernel_bit_identical_to_hof(spark, sf_dir):
         V._arrow_dot(F.col("embedding"), p).alias("a_plane"),
         V.dot_hof(F.col("embedding"), p).alias("h_plane"),
         F.sqrt(V._arrow_self_dot(F.col("embedding"))).alias("a_norm"),
-        V.norm_hof("embedding").alias("h_norm"),
+        V.norm_hof().alias("h_norm"),
         V._arrow_dot(F.col("embedding"), F.col("qvec")).alias("a_pair"),
         V.dot_hof(F.col("embedding"), F.col("qvec")).alias("h_pair"),
     )
@@ -332,9 +332,9 @@ def test_text_kernels_bit_identical_to_hof(spark, sf_dir):
     bad = (
         d.select(
             T.minhash_signature_from_hashes("hs", 16).alias("a_sig"),
-            T.minhash_from_hashes_hof("hs", 16).alias("h_sig"),
+            T.minhash_from_hashes_hof(16).alias("h_sig"),
             T.simhash64("tk").alias("a_sim"),
-            T.simhash64_hof("tk").alias("h_sim"),
+            T.simhash64_hof().alias("h_sim"),
         )
         .filter(
             ~F.col("a_sig").eqNullSafe(F.col("h_sig"))
@@ -357,9 +357,9 @@ def test_text_kernels_bit_identical_to_hof(spark, sf_dir):
     rows = edge.select(
         "id",
         T.minhash_signature_from_hashes("hs", 4).alias("a_sig"),
-        T.minhash_from_hashes_hof("hs", 4).alias("h_sig"),
+        T.minhash_from_hashes_hof(4).alias("h_sig"),
         T.simhash64("tk").alias("a_sim"),
-        T.simhash64_hof("tk").alias("h_sim"),
+        T.simhash64_hof().alias("h_sim"),
     ).collect()
     for r in rows:
         assert r["a_sig"] == r["h_sig"], r
@@ -378,8 +378,8 @@ def test_minhash_verify_modes_identical(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    prs = D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify="pairs")
-    grp = D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify="group")
+    prs = D.minhash_lsh_pairs(docs, 0.7, verify="pairs")
+    grp = D.minhash_lsh_pairs(docs, 0.7, verify="group")
     j = prs.alias("x").join(grp.alias("y"), ["id_a", "id_b"], "full_outer")
     mism = j.filter(~F.expr("x.jaccard").eqNullSafe(F.expr("y.jaccard"))).count()
     assert mism == 0
@@ -387,7 +387,7 @@ def test_minhash_verify_modes_identical(spark, sf_dir):
 
     for mode in ("nope", "bucket"):
         with pytest.raises(ValueError):
-            D.minhash_lsh_pairs(docs, 0.7, 16, 8, verify=mode)
+            D.minhash_lsh_pairs(docs, 0.7, verify=mode)
 
 
 def test_embedding_dup_verify_modes_identical(spark):
@@ -465,7 +465,7 @@ def test_minhash_modes_identical_under_duplicated_id_with_differing_text(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     outs = {
-        mode: D.minhash_lsh_pairs(docs, 0.5, 16, 8, verify=mode)
+        mode: D.minhash_lsh_pairs(docs, 0.5, verify=mode)
         for mode in ("pairs", "group")
     }
     for name, df in outs.items():
@@ -2151,7 +2151,7 @@ def test_semantic_dedup_keep_rule_hand_crafted(spark):
     out = {
         r["vec_id"]: r["keep"]
         for r in D.semantic_dedup(
-            emb, threshold=0.97, n_cells=1, kmeans_iters=0
+            emb, threshold=0.97, n_cells=1
         ).collect()
     }
     assert out == {0: True, 1: False, 2: True, 3: False}
@@ -2159,7 +2159,7 @@ def test_semantic_dedup_keep_rule_hand_crafted(spark):
 
 def test_semantic_dedup_matches_duckdb_differential(spark, sf_dir, duck):
     """Cross-engine differential for SemDeDup (this SQL is the future
-    registration oracle): kmeans_iters=0 pins the centroids to the
+    registration oracle): semantic_dedup pins the centroids to the
     first n_cells vectors by id, so the oracle reproduces the
     assignment argmax, the dround(4) centroid-cosine order, and the
     dominated anti-join exactly. threshold=0.3 because the synthetic
@@ -2181,7 +2181,7 @@ def test_semantic_dedup_matches_duckdb_differential(spark, sf_dir, duck):
     got = sorted(
         (r["vec_id"], r["cell"], round(r["cent_cos"], 9), r["keep"])
         for r in D.semantic_dedup(
-            emb, threshold=th, n_cells=n_cells, kmeans_iters=0
+            emb, threshold=th, n_cells=n_cells
         ).collect()
     )
     assert any(not k for _, _, _, k in got)  # the drop path fired
@@ -2780,7 +2780,7 @@ def test_timeseries_semdedup_cap_on_empty_input(spark):
     one = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    rows = D.semantic_dedup(one, n_cells=1, kmeans_iters=0).collect()
+    rows = D.semantic_dedup(one, n_cells=1).collect()
     assert len(rows) == 1 and rows[0]["keep"] is True
 
 
@@ -3066,7 +3066,7 @@ def test_range_join_bucketed_rejects_column_collisions(spark):
         [(9, 0.0, 10.0)], "id long, lo double, hi double"
     )
     with pytest.raises(ValueError, match="both"):
-        J.range_join_bucketed(left, right, "v", "lo", "hi", 4.0)
+        J.range_join_bucketed(left, right)
 
 
 def test_grouped_ols_raises_past_float64_exactness(spark):
@@ -3080,7 +3080,7 @@ def test_grouped_ols_raises_past_float64_exactness(spark):
     rows = [(1, 1, 2**53 + 100), (1, 2, None)]  # the None forces float64
     df = spark.createDataFrame(rows, "g long, x long, y long")
     with pytest.raises(Exception, match="2\\^53"):
-        grouped_ols(df, "g", "x", "y").collect()
+        grouped_ols(df, "g").collect()
 
 
 def test_asof_join_map_payload_joins_and_orderable_ties_still_pin(spark):
@@ -3443,7 +3443,7 @@ def test_semantic_dedup_broadcast_centroid_path_matches_duckdb(
     got = sorted(
         (r["vec_id"], r["cell"], round(r["cent_cos"], 9), r["keep"])
         for r in D.semantic_dedup(
-            emb, threshold=th, n_cells=n_cells, kmeans_iters=0
+            emb, threshold=th, n_cells=n_cells
         ).collect()
     )
     assert any(not k for _, _, _, k in got)  # the drop path fired

@@ -48,7 +48,7 @@ ECB_FIXTURE = b"""<?xml version="1.0" encoding="UTF-8"?>
 
 
 def test_ecb_xml_parse_filters_currency_and_malformed(spark):
-    df = xml.read_ecb_fx(spark, ECB_FIXTURE, currency="GBP")
+    df = xml.read_ecb_fx(spark, ECB_FIXTURE)
     rows = sorted(df.collect(), key=lambda r: r["date"])
     # USD series excluded; two malformed obs skipped
     assert [(r["date"], r["gbp_per_eur"]) for r in rows] == [

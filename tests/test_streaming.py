@@ -18,7 +18,7 @@ def test_sliding_windows_complete_mode(spark, sf_dir):
 
 def test_streaming_session_windows(spark, sf_dir):
     stream = SE.read_events_stream(spark, sf_dir)
-    agg = SE.session_windows(stream, gap="30 minutes")
+    agg = SE.session_windows(stream)
     out = SE.run_stream_to_memory(agg, spark, output_mode="complete")
     rows = out.collect()
     assert len(rows) > 0
