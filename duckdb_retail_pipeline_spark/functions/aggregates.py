@@ -2,17 +2,30 @@
 
 ``mode`` tie-breaking differs between engines (SURVEY.md §4), so the
 engine pins a deterministic rule once: highest count wins, ties break
-on the smallest value. ``deterministic_mode`` implements it with a
-count + row_number window — identical results on Spark and any
-ANSI-SQL oracle, at any partition count.
+on the smallest value, NULL values are skipped. ``top_counted`` is that
+rule as one aggregate column over already-counted (value, count) rows:
+the minimum of ``(-count, value)`` structs. ``deterministic_mode``
+counts each (group, value) pair and applies it per group, and the
+dimension builders fold it into the aggregate that counts their pairs
+— identical results on Spark and any ANSI-SQL oracle, at any partition
+count, with no window and no join.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def top_counted(value: Column, cnt: Column) -> Column:
+    """Aggregate: the ``value`` with the highest ``cnt``, ties to the
+    smallest value, NULL values skipped (NULL when every value of the
+    group is NULL). Spark 3.4+ has ``F.mode`` but its tie-break is
+    arbitrary-pick, like DuckDB's ``MODE()`` — unusable for
+    differential testing."""
+    return F.min(F.when(value.isNotNull(), F.struct((-cnt).alias("n"), value.alias("v"))))["v"]
 
 
 def deterministic_mode(
@@ -21,29 +34,19 @@ def deterministic_mode(
     value_col: str,
     out_col: str | None = None,
 ) -> DataFrame:
-    """Per-group MODE with a pinned (count DESC, value ASC) tie-break.
+    """Per-group MODE with a pinned (count DESC, value ASC) tie-break,
+    over non-NULL values: a group whose values are all NULL has no row.
 
-    Spark 3.4+ has ``F.mode`` but its tie-break is arbitrary-pick,
-    like DuckDB's ``MODE()`` — unusable for differential testing.
-    Cost shape: TWO exchanges — the groupBy hashes on (group_cols +
-    value_col) and the window repartitions on group_cols alone
-    (hashpartitioning on the wider key does NOT satisfy the window's
-    requirement), but the second exchange moves only the already-
-    counted (group, value, cnt) rows, a cardinality ≤ distinct
-    pairs, not the input."""
-    out_col = out_col or value_col
-    counted = (
+    Cost shape: TWO exchanges — the count hashes on (group_cols +
+    value_col) and ``top_counted`` on group_cols alone — but the second
+    moves only the already-counted (group, value, cnt) rows, a
+    cardinality ≤ distinct pairs, not the input."""
+    return (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(*group_cols, value_col)
         .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col("__cnt").desc(), F.col(value_col).asc()
-    )
-    return (
-        counted.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*group_cols, F.col(value_col).alias(out_col))
+        .groupBy(*group_cols)
+        .agg(top_counted(F.col(value_col), F.col("__cnt")).alias(out_col or value_col))
     )
 
 

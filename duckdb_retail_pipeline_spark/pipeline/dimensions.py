@@ -5,8 +5,13 @@ Spark-first translations:
   a left-join holiday flag — replacing the reference's
   ALTER TABLE + UPDATE (dimensions.py:79-94) with a re-derivation,
   since DataFrames are immutable (SURVEY.md §1.3).
-- dim_product / dim_customer: groupBy + deterministic MODE (pinned
-  (count DESC, value ASC) tie-break — SURVEY.md §4).
+- dim_product / dim_customer: one two-level aggregate each. The
+  first level counts every (key, value) pair (dim_product also takes
+  the pair's first/last dates); the second groups by the key and takes
+  the deterministic MODE with ``top_counted`` (pinned (count DESC,
+  value ASC) tie-break, NULL values skipped — SURVEY.md §4) beside the
+  rolled-up dates. No window, no join back: every key keeps its row,
+  with a NULL value when all of its values are NULL.
 """
 
 from __future__ import annotations
@@ -15,7 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import datetime_fns as DT
-from duckdb_retail_pipeline_spark.functions.aggregates import deterministic_mode
+from duckdb_retail_pipeline_spark.functions.aggregates import top_counted
+
 
 def _valid_stock() -> F.Column:
     """P3 cleaning predicate (reference src/models/dimensions.py:166-168,
@@ -66,14 +72,20 @@ def build_dim_product(raw_retail: DataFrame) -> DataFrame:
     """dim_product(stock_code, description, first_seen, last_seen)
     (reference dimensions.py:157-171): P3-cleaned, MODE(description)
     with pinned tie-break, min/max first/last seen dates."""
-    clean = raw_retail.filter(_valid_stock())
-    seen = clean.groupBy("stock_code").agg(
-        F.min(F.to_date("invoice_ts")).alias("first_seen"),
-        F.max(F.to_date("invoice_ts")).alias("last_seen"),
+    day = F.to_date("invoice_ts")
+    pairs = (
+        raw_retail.filter(_valid_stock())
+        .groupBy("stock_code", "description")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(day).alias("first_seen"),
+            F.max(day).alias("last_seen"),
+        )
     )
-    mode_desc = deterministic_mode(clean, ["stock_code"], "description")
-    return seen.join(mode_desc, "stock_code", "left").select(
-        "stock_code", "description", "first_seen", "last_seen"
+    return pairs.groupBy("stock_code").agg(
+        top_counted(F.col("description"), F.col("n")).alias("description"),
+        F.min("first_seen").alias("first_seen"),
+        F.max("last_seen").alias("last_seen"),
     )
 
 
@@ -81,18 +93,10 @@ def build_dim_customer(raw_retail: DataFrame) -> DataFrame:
     """dim_customer(customer_id, country) (reference
     dimensions.py:203-214): -1 surrogate for NULL ids, 'UNKNOWN'
     country for the surrogate, else MODE(country)."""
-    keyed = raw_retail.withColumn(
-        "customer_id", F.coalesce(F.col("customer_id"), F.lit(-1.0))
-    )
-    mode_country = deterministic_mode(keyed, ["customer_id"], "country")
-    return (
-        keyed.select("customer_id")
-        .distinct()
-        .join(mode_country, "customer_id", "left")
-        .select(
-            "customer_id",
-            F.when(F.col("customer_id") == -1, F.lit("UNKNOWN"))
-            .otherwise(F.col("country"))
-            .alias("country"),
-        )
+    customer_id = F.coalesce(F.col("customer_id"), F.lit(-1.0)).alias("customer_id")
+    pairs = raw_retail.groupBy(customer_id, "country").agg(F.count(F.lit(1)).alias("n"))
+    return pairs.groupBy("customer_id").agg(
+        F.when(F.col("customer_id") == -1, F.lit("UNKNOWN"))
+        .otherwise(top_counted(F.col("country"), F.col("n")))
+        .alias("country")
     )

@@ -16,6 +16,8 @@ builder over a lookup of its upstream layers. Two modes read it:
   DROP+CTAS layering), facts **partitioned by month** so downstream
   date-range queries prune partitions; this is the 100 TB layout.
   ``--rebuild`` maps to mode("overwrite") (reference src/run.py:41-42).
+  A layer is read back only when a later builder asks for it, and with
+  the schema just written, so no read-back runs a schema-inference job.
 
 Both modes cut lineage at every materialized layer: ``run_pipeline`` by
 reading the written parquet back, ``build_layer`` by checkpointing. No
@@ -32,11 +34,13 @@ change to the dataset, which re-signs the entry) does.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from duckdb_retail_pipeline_spark import memo
 from duckdb_retail_pipeline_spark.pipeline import staging
@@ -105,10 +109,14 @@ _BY_MONTH = frozenset({"fct_sales", "fct_sales_eur"})
 def layer_plan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One layer's plan before lineage truncation: its builder over the
     memoized upstream layers (``build_layer``), so the frame shows the
-    layer's own joins and exchanges, not its ancestors'. Not memoized;
-    plan tests and ``tools/capture_plans.py`` read it."""
+    layer's own joins and exchanges, not its ancestors'. Not memoized,
+    except staging's: one ``load_staging`` call builds all three staging
+    plans, so they are memoized together, as plans only, under the tag
+    ``staging``. Plan tests and ``tools/capture_plans.py`` read it."""
     if name in _STAGING_KEYS:
-        return staging.load_staging(spark, sf_dir)[name]
+        return memo.dataset_memo(
+            spark, sf_dir, "staging", lambda: staging.load_staging(spark, sf_dir)
+        )[name]
     return _LAYERS[name](lambda up: build_layer(spark, sf_dir, up))
 
 
@@ -124,11 +132,12 @@ def _leaf(name: str, df: DataFrame) -> DataFrame:
 
 def build_layer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One pipeline layer, memoized through ``dataset_memo`` under the
-    tag ``layer:<name>`` (staging's three frames share the one
-    ``layer:staging`` entry). A first call builds only the layer's
-    ancestor chain — a ``pl03`` caller pays for staging and calendar,
-    never for fct/eur/agg/validation it does not read. Repeat calls
-    return the SAME handle.
+    tag ``layer:<name>`` (each staging frame under its own entry, so a
+    caller of ``raw_fx_rates`` alone never checkpoints
+    ``raw_retail_data``). A first call builds only the layer's ancestor
+    chain — a ``pl03`` caller pays for staging and calendar, never for
+    fct/eur/agg/validation it does not read. Repeat calls return the
+    SAME handle.
 
     A ``_CACHED`` layer is materialized by its first call (an eager
     local checkpoint of ``layer_plan``) and served as a leaf: its
@@ -143,15 +152,9 @@ def build_layer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     holds the key lock of ``layer:<name>`` while the builder resolves
     its upstream layers, each under its own key lock. Nested builds
     take key locks from descendant to ancestor along the acyclic
-    ``_LAYERS`` graph (and last the base-table locks of ``catalog``,
-    whose builds take none), so they cannot deadlock."""
-    if name in _STAGING_KEYS:
-
-        def load() -> dict[str, DataFrame]:
-            raw = staging.load_staging(spark, sf_dir)
-            return {k: _leaf(k, df) for k, df in raw.items()}
-
-        return memo.dataset_memo(spark, sf_dir, "layer:staging", load)[name]
+    ``_LAYERS`` graph (then the ``staging`` plans lock, and last the
+    base-table locks of ``catalog``, whose builds take none), so they
+    cannot deadlock."""
     return memo.dataset_memo(
         spark, sf_dir, f"layer:{name}", lambda: _leaf(name, layer_plan(spark, sf_dir, name))
     )
@@ -167,24 +170,34 @@ def run_pipeline(
     PREVIOUS layer's parquet (not its lazy plan) — same dataflow as
     the reference's sequential CTAS phases, and at scale the right
     call: each phase's shuffle output is persisted once and every
-    consumer scans columnar files with pushdown."""
+    consumer scans columnar files with pushdown.
+
+    A layer is read back on demand, when a later builder asks for it,
+    with the schema it was written with (``sales_month`` included for a
+    month-partitioned fact, then dropped): a given schema skips the
+    footer-reading job a schema-inferring read runs, and a layer no
+    builder asks for (``v_monthly_sales_summary``, ``validation``) is
+    never read. Each layer is read (its files listed) at most once."""
     mode = "overwrite" if rebuild else "errorifexists"
     paths: dict[str, str] = {}
-    written: dict[str, DataFrame] = {}
+    schemas: dict[str, StructType] = {}
 
     def write(name: str, df: DataFrame) -> None:
         path = os.path.join(warehouse_dir, name)
         if name in _BY_MONTH:
             df = df.withColumn("sales_month", F.date_format("date", "yyyy-MM"))
             df.write.mode(mode).partitionBy("sales_month").parquet(path)
-            written[name] = spark.read.parquet(path).drop("sales_month")
         else:
             df.write.mode(mode).parquet(path)
-            written[name] = spark.read.parquet(path)
-        paths[name] = path
+        paths[name], schemas[name] = path, df.schema
+
+    @functools.cache
+    def read(name: str) -> DataFrame:
+        df = spark.read.schema(schemas[name]).parquet(paths[name])
+        return df.drop("sales_month") if name in _BY_MONTH else df
 
     for name, df in staging.load_staging(spark, sf_dir).items():
         write(name, df)
     for name, build in _LAYERS.items():
-        write(name, build(written.__getitem__))
+        write(name, build(read))
     return paths

@@ -716,7 +716,10 @@ def q19_view_over_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Deterministic MODE with pinned (count DESC, value ASC) "
     "tie-break (SURVEY §2.4 A1/A2 + §4 — MODE() tie-breaking is "
     "arbitrary in both engines, so the engine pins it; reference "
-    "src/models/dimensions.py:157-171). MODE is over NON-NULL "
+    "src/models/dimensions.py:157-171): a count per (brand, type), "
+    "then per brand the minimum (-count, type) struct — two "
+    "aggregates, no window (the oracle keeps its ROW_NUMBER "
+    "ranking as the independent twin). MODE is over NON-NULL "
     "values (pandas .mode() drops NaN — the reference's behavior; "
     "deterministic_mode filters them): the oracle's IS NOT NULL "
     "mirrors that (r12 probe — without it a NULL-majority group "
@@ -724,7 +727,7 @@ def q19_view_over_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top non-NULL value, and an all-NULL group changed the row "
     "count; latent on the NULL-free driver corpus, pinned by the "
     "q20 probe test).",
-    tags=("agg", "window"),
+    tags=("agg",),
 )
 def q20_deterministic_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = tbl(spark, sf_dir, "part")

@@ -63,6 +63,59 @@ def test_deterministic_mode_tie_break(spark):
     assert out["k2"] == "z"  # NULLs excluded from mode
 
 
+def test_dimensions_pin_mode_ties_and_all_null_keys(spark):
+    """dim_product / dim_customer over a hand-built raw_retail frame:
+    MODE ties go to the smallest value and NULL values never win; a key
+    whose values are all NULL keeps its row with a NULL value; NULL
+    customer ids become the -1 surrogate with country 'UNKNOWN'; dirty
+    stock codes are dropped from dim_product but not dim_customer; the
+    seen dates span every row of the stock code, NULL descriptions
+    included."""
+    from duckdb_retail_pipeline_spark.pipeline.dimensions import (
+        build_dim_customer,
+        build_dim_product,
+    )
+
+    d = datetime.date
+    raw = spark.createDataFrame(
+        [
+            ("A", "zeta", d(2020, 1, 5), 1.0, "France"),
+            ("A", "zeta", d(2020, 1, 9), 1.0, "Spain"),
+            ("A", "alpha", d(2020, 1, 3), 1.0, "France"),
+            ("A", "alpha", d(2020, 1, 7), 1.0, "Spain"),
+            ("A", None, d(2020, 1, 1), 2.0, None),
+            ("A", None, d(2020, 1, 20), 2.0, None),
+            ("A", None, d(2020, 1, 11), 3.0, None),
+            ("B", None, d(2020, 2, 1), 3.0, None),
+            ("B", None, d(2020, 2, 2), 3.0, "Italy"),
+            ("C", "gamma", d(2020, 3, 1), None, "Germany"),
+            ("C", "beta", d(2020, 3, 2), None, "Spain"),
+            ("C", "gamma", d(2020, 3, 3), None, None),
+            ("", "dirt", d(2019, 1, 1), None, "Germany"),
+            ("nan", "dirt", d(2019, 1, 1), 4.0, "Portugal"),
+            (None, "dirt", d(2019, 1, 1), 4.0, "Portugal"),
+        ],
+        "stock_code string, description string, invoice_ts date, "
+        "customer_id double, country string",
+    )
+    product = build_dim_product(raw)
+    assert product.columns == ["stock_code", "description", "first_seen", "last_seen"]
+    assert sorted(map(tuple, product.collect())) == [
+        ("A", "alpha", d(2020, 1, 1), d(2020, 1, 20)),
+        ("B", None, d(2020, 2, 1), d(2020, 2, 2)),
+        ("C", "gamma", d(2020, 3, 1), d(2020, 3, 3)),
+    ]
+    customer = build_dim_customer(raw)
+    assert customer.columns == ["customer_id", "country"]
+    assert sorted(map(tuple, customer.collect())) == [
+        (-1.0, "UNKNOWN"),
+        (1.0, "France"),
+        (2.0, None),
+        (3.0, "Italy"),
+        (4.0, "Portugal"),
+    ]
+
+
 def test_date_spine_dense_and_bounded(spark):
     bounds = spark.createDataFrame(
         [(datetime.date(2020, 3, 2),), (datetime.date(2020, 2, 27),)], "d date"

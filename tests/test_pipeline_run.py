@@ -53,6 +53,30 @@ def test_run_pipeline_materializes_and_validates(spark, sf_dir):
         }
 
 
+def test_run_pipeline_reads_back_on_demand_with_written_schema(spark, sf_dir, monkeypatch):
+    """Every warehouse read-back carries the schema just written (a
+    schema-inferring read runs a footer-reading Spark job), each layer
+    is read at most once, and a layer no builder asks for is never
+    read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    orig = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        reads.append((paths, self._jreader.userSpecifiedSchema().isDefined()))
+        return orig(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    with tempfile.TemporaryDirectory() as wh:
+        run_pipeline(spark, sf_dir, wh)
+    back = [(p, given) for paths, given in reads for p in paths if p.startswith(wh)]
+    assert back and all(given for _, given in back), back
+    layers = [os.path.basename(p) for p, _ in back]
+    assert len(layers) == len(set(layers)), layers
+    assert set(layers) == set(LAYER_ORDER) - {"validation", "v_monthly_sales_summary"}
+
+
 def test_rebuild_false_refuses_overwrite(spark, sf_dir):
     with tempfile.TemporaryDirectory() as wh:
         run_pipeline(spark, sf_dir, wh, rebuild=True)
@@ -86,18 +110,22 @@ def test_layer_fill_is_dependency_pruned(spark, data_copy):
     """build_layer builds only the requested layer's ancestor chain —
     dim_calendar must not construct fct/eur/agg/validation plans (an
     eager whole-pipeline build billed ~1.5 s of downstream py4j plan
-    construction to a pl03-only caller) — and a repeat call returns the
-    SAME handle (shared .cache() entries)."""
+    construction to a pl03-only caller), a staging frame alone does not
+    checkpoint ``raw_retail_data`` — and a repeat call returns the SAME
+    handle."""
+    build_layer(spark, data_copy, "raw_fx_rates")
+    assert set(_layer_entries(data_copy)) == {"layer:raw_fx_rates"}
     cal = build_layer(spark, data_copy, "dim_calendar")
-    assert set(_layer_entries(data_copy)) == {"layer:staging", "layer:dim_calendar"}
+    assert set(_layer_entries(data_copy)) == {
+        "layer:raw_fx_rates", "layer:raw_retail_data", "layer:raw_uk_holidays",
+        "layer:dim_calendar",
+    }
     assert build_layer(spark, data_copy, "dim_calendar") is cal
     assert cal.count() > 0  # and it executes
     # every declared layer is reachable, each under its own entry
     for name in LAYER_ORDER:
         assert build_layer(spark, data_copy, name) is not None
-    assert set(_layer_entries(data_copy)) == {"layer:staging"} | {
-        f"layer:{name}" for name in LAYER_ORDER[3:]
-    }
+    assert set(_layer_entries(data_copy)) == {f"layer:{name}" for name in LAYER_ORDER}
 
 
 def test_concurrent_build_layer_builds_each_layer_once(spark, data_copy, monkeypatch):
@@ -142,7 +170,8 @@ def test_concurrent_build_layer_builds_each_layer_once(spark, data_copy, monkeyp
     assert len(results) == 8
     assert all(df is entries["layer:agg_country_day"] for df in results)
     assert set(entries) == {
-        "layer:staging", "layer:dim_calendar", "layer:dim_product",
+        "layer:raw_retail_data", "layer:raw_fx_rates", "layer:raw_uk_holidays",
+        "layer:dim_calendar", "layer:dim_product",
         "layer:dim_customer", "layer:fct_sales", "layer:daily_fx_rates",
         "layer:fct_sales_eur", "layer:agg_country_day",
     }

@@ -55,6 +55,16 @@ def test_staging_star_broadcasts_via_threshold(spark, sf_dir):
     assert X.sort_merge_join_count(df) == 0, X.formatted_plan(df)
 
 
+def test_dimensions_are_one_pass_aggregates(spark, sf_dir):
+    """dim_product / dim_customer fold their MODE into the aggregate
+    that counts (key, value) pairs: no row_number window, no join back
+    to a separate key set."""
+    for name in ("dim_product", "dim_customer"):
+        plan = X.formatted_plan(layer_plan(spark, sf_dir, name))
+        assert "Window" not in plan, (name, plan)
+        assert "Join" not in plan, (name, plan)
+
+
 def test_flagship_has_codegen(spark, sf_dir):
     df = REGISTRY["q02_monthly_revenue_by_nation"].fn(spark, sf_dir)
     assert X.codegen_span_count(df) >= 1
