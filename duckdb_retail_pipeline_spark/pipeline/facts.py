@@ -12,8 +12,7 @@
   keeps sub-cent precision while making every downstream aggregate
   bit-exact.
 
-At 100 TB: fct_sales partitions by date at write time (run.py);
-dims broadcast; the FX table is ~1k rows/decade → always broadcast;
+At 100 TB: dims broadcast; the FX table is ~1k rows/decade → always broadcast;
 the forward-fill window is per-currency (single series here).
 """
 

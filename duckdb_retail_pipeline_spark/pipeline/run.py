@@ -11,10 +11,11 @@ builder over a lookup of its upstream layers. Two modes read it:
   whole upstream chain on every action. ``layer_plan`` is the layer's
   plan before truncation (its own joins and exchanges over the memoized
   upstream leaves).
-- ``run_pipeline``: materialized mode — each layer written to a
+- ``run_pipeline``: materialized mode — each layer written to a flat
   parquet warehouse dir (the Spark analogue of the reference's
-  DROP+CTAS layering), facts **partitioned by month** so downstream
-  date-range queries prune partitions; this is the 100 TB layout.
+  DROP+CTAS layering). No layer is partitioned: every warehouse
+  reader reads whole layers, so a month partitioning would prune
+  nothing and only multiply writers, files and listings.
   ``--rebuild`` maps to mode("overwrite") (reference src/run.py:41-42).
   A layer is read back only when a later builder asks for it, and with
   the schema just written, so no read-back runs a schema-inference job.
@@ -39,7 +40,6 @@ import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from duckdb_retail_pipeline_spark import memo
@@ -101,9 +101,6 @@ _CACHED = frozenset(
     {"raw_retail_data", "dim_calendar", "dim_product", "dim_customer",
      "fct_sales", "fct_sales_eur", "agg_country_day"}
 )
-# Layers run_pipeline writes partitioned by month: month granularity
-# keeps file counts sane while letting date-range scans prune.
-_BY_MONTH = frozenset({"fct_sales", "fct_sales_eur"})
 
 
 def layer_plan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -173,8 +170,7 @@ def run_pipeline(
     consumer scans columnar files with pushdown.
 
     A layer is read back on demand, when a later builder asks for it,
-    with the schema it was written with (``sales_month`` included for a
-    month-partitioned fact, then dropped): a given schema skips the
+    with the schema it was written with: a given schema skips the
     footer-reading job a schema-inferring read runs, and a layer no
     builder asks for (``v_monthly_sales_summary``, ``validation``) is
     never read. Each layer is read (its files listed) at most once."""
@@ -184,17 +180,12 @@ def run_pipeline(
 
     def write(name: str, df: DataFrame) -> None:
         path = os.path.join(warehouse_dir, name)
-        if name in _BY_MONTH:
-            df = df.withColumn("sales_month", F.date_format("date", "yyyy-MM"))
-            df.write.mode(mode).partitionBy("sales_month").parquet(path)
-        else:
-            df.write.mode(mode).parquet(path)
+        df.write.mode(mode).parquet(path)
         paths[name], schemas[name] = path, df.schema
 
     @functools.cache
     def read(name: str) -> DataFrame:
-        df = spark.read.schema(schemas[name]).parquet(paths[name])
-        return df.drop("sales_month") if name in _BY_MONTH else df
+        return spark.read.schema(schemas[name]).parquet(paths[name])
 
     for name, df in staging.load_staging(spark, sf_dir).items():
         write(name, df)

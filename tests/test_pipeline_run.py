@@ -15,6 +15,7 @@ from duckdb_retail_pipeline_spark.pipeline.run import (
     _CACHED,
     LAYER_ORDER,
     build_layer,
+    layer_plan,
     run_pipeline,
 )
 from duckdb_retail_pipeline_spark.pipeline.validate import validation_checks
@@ -27,9 +28,17 @@ def test_run_pipeline_materializes_and_validates(spark, sf_dir):
         for name, path in paths.items():
             assert os.path.isdir(path), name
 
-        # facts are month-partitioned (the 100 TB layout)
+        # every layer is flat: no key=value partition directory, and the
+        # facts read back with exactly their builders' columns
+        for name, path in paths.items():
+            parts = [
+                d for d in os.listdir(path)
+                if "=" in d and os.path.isdir(os.path.join(path, d))
+            ]
+            assert not parts, (name, parts)
         for fact in ("fct_sales", "fct_sales_eur"):
-            assert any(d.startswith("sales_month=") for d in os.listdir(paths[fact]))
+            got = spark.read.parquet(paths[fact]).columns
+            assert got == layer_plan(spark, sf_dir, fact).columns, (fact, got)
 
         # every reference-ported validation check must be clean
         validation = spark.read.parquet(paths["validation"]).collect()
