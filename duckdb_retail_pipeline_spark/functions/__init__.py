@@ -4,7 +4,7 @@ Submodules:
     datetime_fns — DuckDB-parity date parts (dow, ISO week/year, day
                    and month names), date spines
     aggregates   — deterministic MODE, conditional count-distinct,
-                   NULL-safe ratio helpers
+                   the integer-cents kernel
     vectors      — embedding math (dot, norm, cosine) on array<float>
     text         — tokenization, n-gram shingles, language heuristic,
                    fingerprints, simhash/minhash

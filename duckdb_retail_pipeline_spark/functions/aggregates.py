@@ -9,6 +9,9 @@ counts each (group, value) pair and applies it per group, and the
 dimension builders fold it into the aggregate that counts their pairs
 — identical results on Spark and any ANSI-SQL oracle, at any partition
 count, with no window and no join.
+
+``cents`` is the one integer-cents kernel of the money convention
+(queries/base.py): the HALF_UP integer of ``x * scale`` as BIGINT.
 """
 
 from __future__ import annotations
@@ -48,6 +51,24 @@ def deterministic_mode(
         .groupBy(*group_cols)
         .agg(top_counted(F.col(value_col), F.col("__cnt")).alias(out_col or value_col))
     )
+
+
+def cents(x: Column, scale: int) -> Column:
+    """BIGINT HALF_UP integer of ``x * scale`` (NULL stays NULL),
+    bit-identical to ``F.round(x * scale, 0).cast("bigint")`` without
+    Spark's per-row ``BigDecimal.valueOf``: ``r = rint(|v|)``, plus 1
+    when ``|v| - r`` is exactly 0.5 (rint breaks ties to even), sign
+    restored. Why that is exact is in the money block of
+    queries/base.py. The value stays DOUBLE until one ANSI cast, so
+    NaN, ±Inf and out-of-range values still raise CAST_OVERFLOW.
+
+    The sign comes back by ``signum`` and the tie as a cast boolean,
+    not by CASE WHENs that repeat the subtree: Catalyst analyses and
+    generates code for the tree as written, in every money query."""
+    v = x * scale
+    a = F.abs(v)
+    r = F.rint(a)
+    return (F.signum(v) * (r + (a - r == 0.5).cast("double"))).cast("bigint")
 
 
 def count_distinct_if(cond: Column, value: Column) -> Column:

@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
+
+
 def build_agg_country_day(
     fct_sales_eur: DataFrame,
     dim_customer: DataFrame,
@@ -74,12 +77,8 @@ def build_agg_country_day(
     inv = base.groupBy("date", "country", "invoice_no").agg(
         F.count(F.lit(1)).cast("bigint").alias("_items"),
         F.sum("qty").cast("bigint").alias("_qty"),
-        F.sum(
-            F.round(F.col("gross_amount_gbp") * 100, 0).cast("bigint")
-        ).alias("_gbp_cents"),
-        F.sum(
-            F.round(F.col("gross_amount_eur") * 10000, 0).cast("bigint")
-        ).alias("_eur_cents"),
+        F.sum(cents(F.col("gross_amount_gbp"), 100)).alias("_gbp_cents"),
+        F.sum(cents(F.col("gross_amount_eur"), 10000)).alias("_eur_cents"),
     )
     agg = inv.groupBy("date", "country").agg(
         F.sum(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
 from duckdb_retail_pipeline_spark.operators.windows import forward_fill
 
 
@@ -112,7 +113,7 @@ def build_fct_sales_eur(fct_sales: DataFrame, daily_fx: DataFrame) -> DataFrame:
     needed downstream (SURVEY §2.3 recommends exactly this; the J4
     operator itself is covered by q08)."""
     eur = lambda col: (  # noqa: E731 — exact 4-dp pin, see module doc
-        F.round(col / F.col("gbp_per_eur") * 10000, 0).cast("bigint") / F.lit(10000.0)
+        cents(col / F.col("gbp_per_eur"), 10000) / F.lit(10000.0)
     )
     return fct_sales.join(F.broadcast(daily_fx), "date", "inner").select(
         "invoice_no",

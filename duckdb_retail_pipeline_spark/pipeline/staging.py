@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.catalog import load_table as tbl
 from duckdb_retail_pipeline_spark.functions import datetime_fns as DT
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
 
 
 def build_raw_retail_data(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,9 +77,7 @@ def build_raw_retail_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate").alias("invoice_ts"),
         F.when(okey % 107 == 0, F.lit(None).cast("double"))
         .otherwise(
-            F.round(F.col("l_extendedprice") / F.col("l_quantity") * 100, 0).cast(
-                "bigint"
-            )
+            cents(F.col("l_extendedprice") / F.col("l_quantity"), 100)
             / F.lit(100.0)
         )
         .alias("unit_price_gbp"),

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
+
 
 def build_monthly_sales_summary(agg_country_day: DataFrame) -> DataFrame:
     """v_monthly_sales_summary (reference
@@ -17,7 +19,15 @@ def build_monthly_sales_summary(agg_country_day: DataFrame) -> DataFrame:
     daily pre-aggregation, returns-only days excluded, NULLIF-guarded
     ratios. Ratio divisions happen once on exact inputs (cents-exact
     revenue, integer counts) so results are engine-stable without
-    ROUND."""
+    ROUND.
+
+    Precondition: ``agg_country_day`` is unique on (date, country),
+    as its builder groups by that key and inner-joins a one-row-per-
+    date calendar. Each (month, country) group then holds each date
+    at most once, so ``trading_days`` — the reference's
+    ``COUNT(DISTINCT date)`` — is a plain count, with no distinct
+    aggregate's extra exchange and aggregation levels. A frame with
+    repeated (date, country) rows would over-count it."""
     d = F.col("date")
     filtered = agg_country_day.filter(F.col("net_revenue_gbp") > 0)
     grouped = filtered.groupBy(
@@ -30,14 +40,14 @@ def build_monthly_sales_summary(agg_country_day: DataFrame) -> DataFrame:
         F.date_trunc("month", d).cast("date").alias("month_start_date"),
         "country",
     ).agg(
-        F.count_distinct("date").alias("trading_days"),
+        F.count("date").alias("trading_days"),
         F.sum("orders").cast("bigint").alias("total_orders"),
         F.sum("items").cast("bigint").alias("total_items"),
         F.sum("net_qty").cast("bigint").alias("total_quantity"),
-        (F.sum(F.round(F.col("net_revenue_gbp") * 100, 0).cast("bigint")) / F.lit(100.0)).alias(
+        (F.sum(cents(F.col("net_revenue_gbp"), 100)) / F.lit(100.0)).alias(
             "total_revenue_gbp"
         ),
-        (F.sum(F.round(F.col("net_revenue_eur") * 10000, 0).cast("bigint")) / F.lit(10000.0)).alias(
+        (F.sum(cents(F.col("net_revenue_eur"), 10000)) / F.lit(10000.0)).alias(
             "total_revenue_eur"
         ),
     )

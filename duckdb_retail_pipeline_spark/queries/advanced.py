@@ -15,6 +15,7 @@ _EXEC_TOKEN = object()
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
 from duckdb_retail_pipeline_spark.queries.base import (
     dround,
     money_sum,
@@ -173,13 +174,13 @@ def a04_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a05_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tbl(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"), 100)
     agg = li.agg(
         F.approx_count_distinct("l_orderkey").alias("approx_orders"),
         F.count_distinct("l_orderkey").cast("bigint").alias("exact_orders"),
         F.percentile_approx("l_extendedprice", 0.5).alias("approx_median_price"),
         F.expr("percentile(l_extendedprice, 0.5)").alias("exact_median_raw"),
-        (F.percentile(cents, F.lit(0.5)) / 100.0).alias("exact_median_cents"),
+        (F.percentile(price_cents, F.lit(0.5)) / 100.0).alias("exact_median_cents"),
     )
     return agg.select(
         F.col("exact_orders"),
@@ -342,7 +343,7 @@ def a09_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = tbl(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("date")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")).alias("cents"),
+        F.sum(cents(F.col("o_totalprice"), 100)).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     w = Window.orderBy("date").rowsBetween(-6, Window.currentRow)
@@ -653,7 +654,7 @@ def a15_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
     ).select(
         F.col("n_name").alias("nation"),
-        F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("bal_cents"),
+        cents(F.col("c_acctbal"), 100).alias("bal_cents"),
     )
     # ONE percentile buffer for all four fractions (array form): four
     # scalar percentile() calls build four identical per-group

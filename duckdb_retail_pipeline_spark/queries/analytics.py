@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import text as T
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
 from duckdb_retail_pipeline_spark.memo import rotating_persist
 from duckdb_retail_pipeline_spark.operators import lm as LM
 from duckdb_retail_pipeline_spark.operators import scale as SC
@@ -561,13 +562,13 @@ def _x49_profile_sql(col: str, min_i: str, max_i: str) -> str:
 )
 def x49_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = tbl(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    price_cents = cents(F.col("o_totalprice"), 100)
     days = F.datediff(F.to_date("o_orderdate"), F.lit(_X49_EPOCH))
     slen = F.length("o_orderstatus")
     specs = [
         ("o_orderkey", F.col("o_orderkey"), F.col("o_orderkey")),
         ("o_custkey", F.col("o_custkey"), F.col("o_custkey")),
-        ("o_totalprice", cents, F.col("o_totalprice")),
+        ("o_totalprice", price_cents, F.col("o_totalprice")),
         ("o_orderdate", days, F.col("o_orderdate")),
         ("o_orderstatus", slen, F.col("o_orderstatus")),
     ]
@@ -894,7 +895,7 @@ def x57_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tbl(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"),
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents(F.col("value"), 100).alias("cents"),
     )
     cutoff = F.lit(_X57_CUTOFF).cast("date")
 
@@ -979,7 +980,7 @@ def x58_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "click_id",
         "purchase_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("purchase_cents"),
+        cents(F.col("value"), 100).alias("purchase_cents"),
     )
     return SE.run_stream_to_memory(joined, spark, output_mode="append")
 
@@ -1152,7 +1153,7 @@ def x62_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.to_date("ts").alias("day"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents(F.col("value"), 100).alias("cents"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("cents").cast("bigint").alias("day_cents"))
@@ -1667,7 +1668,7 @@ def x67_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = tbl(spark, sf_dir, "orders").select(
         "o_custkey",
         F.to_date("o_orderdate").alias("day"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents(F.col("o_totalprice"), 100).alias("cents"),
     )
     mx = orders.agg(F.max("day").alias("max_day"))
     cust = (
@@ -1820,7 +1821,7 @@ def x69_deletion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tbl(spark, sf_dir, "events").select(
         "event_type",
         "user_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents(F.col("value"), 100).alias("cents"),
     )
     del_users = ev.filter(F.col("user_id") % 97 == 0).select("user_id").distinct()
     clean = ev.join(del_users, "user_id", "left_anti")
@@ -2115,7 +2116,7 @@ _X73_BINS = 20
 )
 def x73_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = tbl(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents")
+        cents(F.col("o_totalprice"), 100).alias("cents")
     )
     b = c.agg(
         F.min("cents").cast("bigint").alias("lo"),
@@ -2257,7 +2258,7 @@ def x75_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tbl(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("hour"),
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents(F.col("value"), 100).alias("cents"),
     )
     hourly = ev.groupBy("hour", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("pn"),
@@ -2532,7 +2533,7 @@ def x79_pareto_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nt, c["c_nationkey"] == nt["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+            F.sum(cents(F.col("o_totalprice"), 100))
             .cast("bigint")
             .alias("cents")
         )
@@ -2784,7 +2785,7 @@ def x83_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date(F.date_trunc("month", "o_orderdate")).alias("month"),
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+            F.sum(cents(F.col("o_totalprice"), 100))
             .cast("bigint")
             .alias("cents")
         )
@@ -2856,7 +2857,7 @@ def x84_cohort_ltv_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             F.to_date("ts").alias("day"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents(F.col("value"), 100).alias("cents"),
         )
     )
     first = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
@@ -2982,7 +2983,7 @@ def x85_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_id",
         "click_ts",
         "purchase_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("purchase_cents"),
+        cents(F.col("value"), 100).alias("purchase_cents"),
     )
     res = SE.run_stream_to_memory(joined, spark, output_mode="append")
 
@@ -3542,7 +3543,7 @@ def x96_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.month(F.to_date("o_orderdate"))
                 - 1
             ).cast("bigint").alias("t"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+            cents(F.col("o_totalprice"), 100).alias("cents"),
         )
         .groupBy("key", "t")
         .agg(F.sum("cents").cast("bigint").alias("cents"))

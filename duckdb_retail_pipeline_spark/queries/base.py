@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -207,6 +209,20 @@ def sql_dround(expr: str, scale: int = 2) -> str:
 # engines at any partition count. `dp` is the per-row decimal scale
 # of the expression (2 for raw money, 4 for price*(1-disc), 6 for
 # price*(1-disc)*(1+tax)).
+#
+# Every integer-cents value in the package comes from one kernel,
+# ``functions.aggregates.cents(x, scale)``; the oracle SQL keeps
+# ``CAST(ROUND(x * scale, 0) AS BIGINT)``. Spark evaluates that ROUND
+# through ``BigDecimal.valueOf``, a ``Double.toString`` and a decimal
+# parse per row. ``cents`` computes the same HALF_UP integer in double
+# arithmetic, ``rint(|v|)`` plus 1 on an exact .5 remainder with the
+# sign restored, and it is exact, not approximate: below 2^52 a tie
+# k+0.5 is itself a double, and the decimal that ``Double.toString``
+# gives parses back to v, so by the monotonicity of parsing it lies on
+# v's side of every tie, or is the tie's own digits when v is one; from
+# 2^52 up v is an integer and both forms return it. It stays DOUBLE
+# until one ANSI cast, so NaN, ±Inf and overflow still raise
+# CAST_OVERFLOW (pinned by tests/test_conventions.py).
 
 
 def floor_ratio(num: Column, den: Column, dp: int = 4) -> Column:
@@ -237,8 +253,7 @@ def sql_floor_ratio(num: str, den: str, dp: int = 4) -> str:
 
 def money_sum(col: Column, dp: int = 2) -> Column:
     scale = 10**dp
-    cents = F.round(col * scale, 0).cast("bigint")
-    return F.sum(cents) / F.lit(float(scale))
+    return F.sum(cents(col, scale)) / F.lit(float(scale))
 
 
 def sql_money_sum(expr: str, dp: int = 2) -> str:
@@ -252,8 +267,7 @@ def sql_money_sum(expr: str, dp: int = 2) -> str:
 def money_avg(col: Column) -> Column:
     """Exact-mean of a raw (2-dp) money column: integer-cent sum over
     non-null count, one division."""
-    cents = F.round(col * 100, 0).cast("bigint")
-    return F.sum(cents) / F.nullif(F.count(col) * F.lit(100.0), F.lit(0.0))
+    return F.sum(cents(col, 100)) / F.nullif(F.count(col) * F.lit(100.0), F.lit(0.0))
 
 
 def sql_money_avg(expr: str) -> str:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from duckdb_retail_pipeline_spark.functions import text as T
 from duckdb_retail_pipeline_spark.functions import vectors as V
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
 from duckdb_retail_pipeline_spark.operators import dedup as D
 from duckdb_retail_pipeline_spark.operators import multimodal as M
 from duckdb_retail_pipeline_spark.operators import similarity as S
@@ -842,7 +843,7 @@ def x14_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (
-                F.sum(F.round(F.col("value") * 100, 0).cast("bigint")) / F.lit(100.0)
+                F.sum(cents(F.col("value"), 100)) / F.lit(100.0)
             ).alias("total_value"),
         )
         .select(
@@ -1276,7 +1277,7 @@ def x24_grouped_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date"))
             .alias("x"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("y"),
+            cents(F.col("o_totalprice"), 100).alias("y"),
         )
     )
     fit = grouped_ols(base, "nation")
@@ -1599,7 +1600,7 @@ def x35_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = tbl(spark, sf_dir, "events").select(
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents(F.col("value"), 100).alias("cents"),
         F.lit(1).cast("bigint").alias("one"),
     )
     totals = salted_group_sum(ev, ["event_type"], "cents", out_col="cents_total")
@@ -2155,7 +2156,7 @@ def x40_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .select(
             F.col("n_name").alias("nation"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+            cents(F.col("o_totalprice"), 100).alias("cents"),
         )
     )
     med = base.groupBy("nation").agg(

@@ -21,6 +21,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.aggregates import cents
+
 
 def _read_stream(
     spark: SparkSession,
@@ -221,12 +223,13 @@ def stateful_user_running_totals(events: DataFrame) -> DataFrame:
     state update (not deterministic under shuffle), while integer
     sums are associative — so the emitted totals are bit-exact
     against a batch/DuckDB oracle at any partitioning. The per-value
-    cent rounding is shortest-repr HALF_UP (conventions #10, the
-    dedup kernels' rule) — numpy's ``.round()`` is banker's
-    half-even and would drift one cent from the batch twin's
-    ``F.round(value*100, 0)`` on any value whose cents land exactly
-    on .5 (2-dp inputs never do; the operator no longer relies on
-    that)."""
+    cent rounding is ``functions.aggregates.cents``'s rule, vectorised:
+    ``np.rint`` of ``|v|``, plus 1 on an exact .5 remainder, sign
+    restored — HALF_UP, equal to the batch twin's ``cents(value,
+    100)``. ``np.rint`` alone is banker's half-even and would drift
+    one cent on any value whose cents land exactly on .5 (2-dp inputs
+    never do; the operator does not rely on that). A non-finite or
+    out-of-range cent value raises, as the batch twin's cast does."""
     import pandas as pd  # noqa: PLC0415 — worker-side import
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -234,19 +237,23 @@ def stateful_user_running_totals(events: DataFrame) -> DataFrame:
     state_schema = "n bigint, cents bigint"
 
     def update(key, pdf_iter, state: GroupState):
-        from decimal import ROUND_HALF_UP, Decimal
+        import numpy as np
 
-        one = Decimal(1)
-        n, cents = state.get if state.exists else (0, 0)
+        n, cents_total = state.get if state.exists else (0, 0)
         for pdf in pdf_iter:
             n += len(pdf)
-            cents += sum(
-                int(Decimal(repr(float(v) * 100)).quantize(one, ROUND_HALF_UP))
-                for v in pdf["value"].dropna()
-            )
-        state.update((n, cents))
+            v = pdf["value"].dropna().to_numpy(dtype=np.float64) * 100
+            a = np.abs(v)
+            r = np.rint(a)
+            r += a - r == 0.5
+            # bounds every int64 below, so the sum cannot wrap; also
+            # False on NaN/inf
+            if not r.sum() < 2.0**62:
+                raise OverflowError("cent sum out of BIGINT range")
+            cents_total += int(np.copysign(r, v).astype(np.int64).sum())
+        state.update((n, cents_total))
         yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [cents / 100.0]}
+            {"user_id": [key[0]], "n_events": [n], "total_value": [cents_total / 100.0]}
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
@@ -509,7 +516,7 @@ def stream_upsert_daily_totals(
             batch_df.select(
                 F.to_date("ts").alias("day"),
                 "event_type",
-                F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+                cents(F.col("value"), 100).alias("cents"),
             )
             .groupBy("day", "event_type")
             .agg(

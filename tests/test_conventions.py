@@ -8,10 +8,14 @@ fractions, power-of-two denominators) where naive ROUND diverges.
 
 from __future__ import annotations
 
+import ast
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_retail_pipeline_spark.functions.aggregates import cents
 from duckdb_retail_pipeline_spark.queries.base import (
     dround,
     floor_ratio,
@@ -187,6 +191,139 @@ def test_money_sum_int64_boundary(spark, duck):
     df21 = spark.createDataFrame([(big,) for _ in range(21)], "v double")
     with pytest.raises(ArithmeticException):
         df21.agg(money_sum(F.col("v")).alias("s")).first()
+
+
+def _round0(v, scale):
+    """The form ``cents`` replaces: Spark's BigDecimal ROUND, then cast."""
+    return F.round(v * scale, 0).cast("bigint")
+
+
+def _adversarial_doubles() -> np.ndarray:
+    """Over 1M doubles where a scale-0 HALF_UP round can go wrong: every
+    k+0.5 tie (k up to 2^51) with its ±1-ulp neighbours, the integers and
+    half-integers around 2^52 and 2^53 with theirs, zeros, the largest
+    double below 0.5 and exact 2-dp money — each with its negation."""
+    rng = np.random.default_rng(20261019)
+    k = np.concatenate([
+        np.arange(0, 1000), rng.integers(0, 2**20, 100_000), rng.integers(0, 2**51, 100_000)
+    ]).astype(np.float64)
+    edge = np.concatenate([
+        2.0**52 + np.arange(-5000, 5000) * 0.5, 2.0**53 + np.arange(-5000, 5000, dtype=np.float64)
+    ])
+    near = [k + 0.5, edge]
+    parts = near + [np.nextafter(x, d) for x in near for d in (np.inf, -np.inf)]
+    parts.append(np.array([0.0, 0.49999999999999994, 0.5, 1.5, 2.5, 2.0**62]))
+    parts.append(np.round(rng.uniform(-1e6, 1e6, 200_000), 2))
+    v = np.concatenate(parts)
+    return np.concatenate([v, -v])
+
+
+def test_cents_equals_spark_round_on_adversarial_doubles(spark, tmp_path):
+    """``cents`` is bit-identical to ``round(x * s, 0).cast("bigint")``
+    row for row, at scale 1 on the raw adversarial values and at scale
+    100 on those whose cents fit a BIGINT."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vals = _adversarial_doubles()
+    assert len(vals) >= 1_000_000
+    pq.write_table(pa.table({"v": vals}), str(tmp_path / "v.parquet"))
+    df = spark.read.parquet(str(tmp_path / "v.parquet"))
+    v = F.col("v")
+    for scale in (1, 100):
+        fits = df.filter(F.abs(v) < 2.0**63 / scale)
+        bad = fits.filter(~cents(v, scale).eqNullSafe(_round0(v, scale)))
+        assert bad.count() == 0, (scale, bad.limit(5).collect())
+    assert df.filter(F.abs(v) < 2.0**63 / 100).count() > 900_000
+
+
+def test_cents_overflow_and_null_match_spark_round(spark):
+    """NaN, ±Inf and values past BIGINT raise the same CAST_OVERFLOW as
+    the ROUND form (the money convention fails loudly, never wraps), and
+    NULL stays NULL."""
+    from pyspark.errors.exceptions.captured import ArithmeticException
+
+    for x in (float("nan"), float("inf"), float("-inf"), 1e19, -1e19):
+        df = spark.createDataFrame([(x,)], "v double")
+        for form in (cents(F.col("v"), 1), _round0(F.col("v"), 1)):
+            with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
+                df.select(form).collect()
+    df = spark.createDataFrame([(None,)], "v double")
+    assert df.select(cents(F.col("v"), 100).alias("c")).first()["c"] is None
+
+
+def test_cents_equals_spark_round_property(spark):
+    """Generated money-shaped (integer cents / 100) and division-shaped
+    (a / b) inputs at the three scales the package uses, one Spark query
+    per example. Power-of-two divisors put a / b * scale exactly on
+    k+0.5 ties."""
+    from hypothesis import example, given, settings, strategies as st
+
+    money = st.integers(min_value=-10**11, max_value=10**11).map(lambda c: c / 100.0)
+    den = st.one_of(st.integers(min_value=1, max_value=10**4), st.sampled_from([2**i for i in range(1, 21)]))
+    ratio = st.tuples(st.integers(min_value=-10**7, max_value=10**7), den).map(lambda t: t[0] / t[1])
+
+    @settings(max_examples=20, deadline=None)
+    @given(st.lists(st.one_of(money, ratio), min_size=1, max_size=200))
+    @example([1 / 8, -3 / 8])  # 12.5 and -37.5 cents: ties both sides of even
+    def prop(values):
+        df = spark.createDataFrame([(i, x) for i, x in enumerate(values)], "i long, v double")
+        v = F.col("v")
+        cols = [c for s in (100, 10**4, 10**6) for c in (cents(v, s), _round0(v, s))]
+        for row in df.select("i", *cols).collect():
+            got = tuple(row)[1:]
+            assert got[0::2] == got[1::2], (values[row["i"]], got)
+
+    prop()
+
+
+def round0_census(sources=None):
+    """Sorted (file, line) of every ``round(<expr>, 0)`` call in the
+    package outside ``cents``, matched by bare callee name: a scale-0
+    round belongs in the one integer-cents kernel."""
+    from test_options import PACKAGE, _callee, _sources
+
+    hits = set()
+
+    def walk(path, node):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) and child.name == "cents":
+                continue
+            if isinstance(child, ast.Call) and _callee(child) == "round":
+                ndigits = child.args[1] if len(child.args) > 1 else next(
+                    (k.value for k in child.keywords if k.arg in ("scale", "ndigits", "decimals")), None
+                )
+                if isinstance(ndigits, ast.Constant) and ndigits.value == 0:
+                    hits.add((path, child.lineno))
+            walk(path, child)
+
+    for path, tree in _sources() if sources is None else sources:
+        if path.startswith(PACKAGE + os.sep):
+            walk(path, tree)
+    return sorted(hits)
+
+
+def test_no_scale0_round_outside_cents():
+    assert round0_census() == []
+
+
+def test_round0_census_matches_only_scale0_rounds():
+    from test_options import PACKAGE
+
+    src = """
+def cents(x, scale):
+    return F.round(x * scale, 0)
+
+def q(df):
+    a = F.round(F.col("v") * 100, 0).cast("bigint")
+    b = F.round(F.col("cos"), 4)
+    c = round(x)
+    d = np.round(y, decimals=0)
+    return df.select(a, b, c, d)
+"""
+    path = os.path.join(PACKAGE, "fake.py")
+    assert round0_census([(path, ast.parse(src))]) == [(path, 6), (path, 9)]
+    assert round0_census([("tests/fake.py", ast.parse(src))]) == []
 
 
 def test_dround_normalizes_negative_zero(spark, duck):

@@ -48,6 +48,8 @@ def test_run_pipeline_materializes_and_validates(spark, sf_dir):
 
         # golden-surface schema contract (FIXTURES.md §2)
         agg = spark.read.parquet(paths["agg_country_day"])
+        # the view's trading_days counts dates: it needs this key unique
+        assert agg.count() == agg.select("date", "country").distinct().count()
         assert set(agg.columns) == {
             "date", "country", "orders", "items", "net_qty",
             "net_revenue_gbp", "net_revenue_eur", "is_weekend",

@@ -238,6 +238,15 @@ def test_agg_country_day_post_agg_calendar_join(spark, sf_dir):
         assert "is_weekend" not in keys, keys
 
 
+def test_monthly_summary_has_no_distinct_aggregate(spark, sf_dir):
+    """pl10 counts trading days over agg_country_day's (date, country)
+    key, which makes each date unique per (month, country) group: no
+    distinct aggregate, so no Expand and no extra aggregation levels."""
+    plan = X.formatted_plan(layer_plan(spark, sf_dir, "v_monthly_sales_summary"))
+    assert "count(distinct" not in plan.lower(), plan
+    assert "Expand" not in plan, plan
+
+
 def test_phrase_search_is_equi_join_on_postings(spark, sf_dir):
     """x90's positional intersection must plan as a hash equi-join on
     (doc, start) — never a nested-loop/cartesian over postings. The
